@@ -118,6 +118,7 @@ def quantile_tail(xs):
 def run_jvm(cp, work, args):
     cmd = (["java"] + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
            + [f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:ReservedCodeCacheSize=1g",
+              "-XX:-UsePerfData",  # no hsperfdata file outside the run directory
               "-Dspark.sql.session.timeZone=UTC", "-Dspark.ui.enabled=false",
               f"-Djava.io.tmpdir={work}/tmp", "-cp", cp, "graftbench.Harness"] + args)
     env = dict(os.environ, SPARK_LOCAL_DIRS=f"{work}/tmp")

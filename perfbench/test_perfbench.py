@@ -55,7 +55,8 @@ class Membership(unittest.TestCase):
         cp = run.build()
         with tempfile.TemporaryDirectory(dir=os.path.join(ROOT, ".bench_work")) as tmp:
             out = os.path.join(tmp, "list.json")
-            r = subprocess.run(["java", "-cp", cp, "graftbench.Harness", "--workload", "list",
+            r = subprocess.run(["java", "-XX:-UsePerfData", "-cp", cp, "graftbench.Harness",
+                                "--workload", "list",
                                 "--data", tmp, "--out", out],
                                capture_output=True, text=True, timeout=120)
             self.assertEqual(r.returncode, 0, r.stderr[-3000:])
