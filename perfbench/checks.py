@@ -18,26 +18,22 @@ def _norm(v):
 
 
 def oracle(data, work, oracle_sql, dump_errors):
-    """Compare each dumped query output with its `SparkEntry.oracleSql`
+    """Compare each query's dumped outputs with its `SparkEntry.oracleSql`
     replayed in DuckDB over the same parquet, normalised as the repo's
     verify tool does: columns sorted by name, floats by repr, rows in
-    order, and no HUGEINT or DECIMAL oracle columns."""
+    order, and no HUGEINT or DECIMAL oracle columns. `dump_errors` maps
+    each dump (`before` and `after` the timed region, in
+    `<work>/dump-<label>/<query>/`) to the queries that threw there."""
     con = duckdb.connect()
     con.execute("SET threads=2")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{data}/{t}.parquet'")
     bad = {}
     for name, sql in sorted(oracle_sql.items()):
-        if name in dump_errors:
-            bad[name] = f"threw: {dump_errors[name]}"
-            continue
         if sql is None:
             bad[name] = "no oracle SQL"
             continue
-        files = glob.glob(f"{work}/dump/{name}/*.parquet")
         try:
-            got = con.execute(f"SELECT * FROM read_parquet({files!r})").fetchall()
-            gcols = [d[0] for d in con.description]
             leak = [r[:2] for r in con.execute(f"DESCRIBE ({sql})").fetchall()
                     if r[1] == "HUGEINT" or r[1].startswith("DECIMAL")]
             if leak:
@@ -45,21 +41,38 @@ def oracle(data, work, oracle_sql, dump_errors):
                 continue
             exp = con.execute(sql).fetchall()
             ecols = [d[0] for d in con.description]
-        except Exception as e:  # a broken dump or oracle is a failed op
-            bad[name] = f"compare error: {str(e)[:200]}"
+        except Exception as e:  # a broken oracle is a failed op
+            bad[name] = f"oracle error: {str(e)[:200]}"
             continue
-        if sorted(gcols) != sorted(ecols):
-            bad[name] = f"columns {sorted(gcols)} vs oracle {sorted(ecols)}"
-            continue
-        gi = [gcols.index(c) for c in sorted(gcols)]
-        ei = [ecols.index(c) for c in sorted(ecols)]
-        g = [tuple(_norm(r[i]) for i in gi) for r in got]
-        e = [tuple(_norm(r[i]) for i in ei) for r in exp]
-        if g != e:
-            kind = "rows" if len(g) != len(e) else (
-                "order" if sorted(g) == sorted(e) else "values")
-            bad[name] = f"oracle mismatch ({kind}): {len(g)} rows vs {len(e)}"
+        e = [tuple(_norm(r[i]) for i in sorted(range(len(ecols)), key=ecols.__getitem__))
+             for r in exp]
+        for label, errors in sorted(dump_errors.items()):
+            reason = (f"threw: {errors[name]}" if name in errors
+                      else _compare(con, glob.glob(f"{work}/dump-{label}/{name}/*.parquet"),
+                                    sorted(ecols), e))
+            if reason:
+                bad[name] = f"{label} the timed region: {reason}"
+                break
     return bad
+
+
+def _compare(con, files, ecols, e):
+    """Why the dumped `files` differ from the normalised oracle rows `e`
+    with sorted columns `ecols`; None when they agree."""
+    try:
+        got = con.execute(f"SELECT * FROM read_parquet({files!r})").fetchall()
+    except Exception as ex:  # a missing or broken dump is a failed op
+        return f"compare error: {str(ex)[:200]}"
+    gcols = [d[0] for d in con.description]
+    if sorted(gcols) != ecols:
+        return f"columns {sorted(gcols)} vs oracle {ecols}"
+    g = [tuple(_norm(r[i]) for i in sorted(range(len(gcols)), key=gcols.__getitem__))
+         for r in got]
+    if g != e:
+        kind = "rows" if len(g) != len(e) else (
+            "order" if sorted(g) == sorted(e) else "values")
+        return f"oracle mismatch ({kind}): {len(g)} rows vs {len(e)}"
+    return None
 
 
 def daily_state(state_dir, data, days):

@@ -12,10 +12,7 @@ It also writes the daily-batch inputs: `days/<n>/products.parquet`
 order-event increment) with the FIXTURES.md section A shapes: duplicate
 same-status events, created->completed / created->deleted chains and
 product ids that miss the snapshot.
-
-Usage: python3 perfbench/gen.py <out_dir> --seed N [--sf 0.01] [--days 3]
 """
-import argparse
 import datetime as dt
 import os
 
@@ -218,12 +215,3 @@ def generate(out, seed, sf, n_days):
     corpus(np.random.default_rng([seed, 2]), out, sf)
     daily(np.random.default_rng([seed, 3]), out, n_days)
 
-
-if __name__ == "__main__":
-    ap = argparse.ArgumentParser()
-    ap.add_argument("out")
-    ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--sf", type=float, default=0.01)
-    ap.add_argument("--days", type=int, default=3)
-    a = ap.parse_args()
-    generate(a.out, a.seed, a.sf, a.days)

@@ -26,7 +26,7 @@ final case class Op(name: String, pass: Int, seconds: Double, error: Option[Stri
   * turns this record into the end-to-end and per-layer metrics.
   *
   * Arguments: `--workload W --data DIR --passes N --trace 0|1 --out FILE
-  * --cores N [--queries a,b] [--wh-skip a,b] [--days N] [--plant throw|wrong]`.
+  * --cores N [--queries a,b] [--wh-skip a,b] [--days N] [--plant throw|wrong|stale]`.
   * The working directory is the run's private directory: relative scratch
   * paths the library writes (warehouse cache, salted pass files) land there.
   *
@@ -259,7 +259,8 @@ final class Harness(spark: SparkSession, data: String, passes: Int, trace: Boole
     * first (untimed, outside set-up); one untimed pass dumps every output
     * for the oracle and warms the JVM (the cleanup between dumps is
     * Verify's, without the collection); `passes` timed passes then run the
-    * list. */
+    * list, and a second untimed dump after them shows the outputs in the
+    * state the timed calls left. */
   def queries(names: Seq[String], whSkip: Seq[String]): Map[String, Any] = {
     System.setProperty("graft.wh.cache", new File("wh").getAbsolutePath)
     if (whSkip.nonEmpty) System.setProperty("graft.wh.skip", whSkip.mkString(","))
@@ -269,27 +270,34 @@ final class Harness(spark: SparkSession, data: String, passes: Int, trace: Boole
 
     val (_, touchSeconds) = touch()
 
+    var plantedCalls = 0
     val planted: Map[String, (SparkSession, String) => DataFrame] = plant match {
       case Some("throw") => Map("planted_throw" -> ((_, _) => throw new RuntimeException("planted")))
       case Some("wrong") => Map("planted_wrong" -> ((s, d) => SparkEntry.queries(names.head)(s, d).limit(0)))
+      case Some("stale") => Map("planted_stale" -> { (s, d) => // right only on its first call
+        plantedCalls += 1
+        val df = SparkEntry.queries(names.head)(s, d)
+        if (plantedCalls == 1) df else df.limit(0)
+      })
       case _ => Map.empty
     }
     val registry = SparkEntry.queries ++ planted
     val all = names ++ planted.keys.toSeq.sorted
 
-    val dumpErrors = all.flatMap { q =>
+    def dump(label: String): Map[String, String] = all.flatMap { q =>
       Graft.releaseLeases()
       spark.catalog.clearCache()
       try {
-        registry(q)(spark, data).coalesce(1).write.mode("overwrite").parquet(s"dump/$q")
+        registry(q)(spark, data).coalesce(1).write.mode("overwrite").parquet(s"dump-$label/$q")
         None
       } catch { case e: Throwable => Some(q -> message(e)) }
     }.toMap
+    val dumpedBefore = dump("before")
 
     System.setProperty("graft.oracle.whdir", new File(wh).getAbsolutePath)
     val oracle = SparkEntry.oracleSql
     val oracleOut = all.map { q =>
-      q -> oracle.get(if (q == "planted_wrong") names.head else q)
+      q -> oracle.get(if (planted.contains(q)) names.head else q)
     }.toMap
 
     startRegion()
@@ -322,9 +330,11 @@ final class Harness(spark: SparkSession, data: String, passes: Int, trace: Boole
       passWalls += wall
     }
     endRegion()
+    val dumpedAfter = dump("after")
     teardown()
     Map("wh_dir" -> new File(wh).getAbsolutePath, "warehouse.touch_s" -> touchSeconds,
-      "dump_errors" -> dumpErrors, "oracle_sql" -> oracleOut)
+      "dump_errors" -> Map("before" -> dumpedBefore, "after" -> dumpedAfter),
+      "oracle_sql" -> oracleOut)
   }
 
   /** daily-batch: each pass folds `ProcessOrders.runDay` over the seeded

@@ -5,7 +5,7 @@
 
 Workloads (membership and rationale in perfbench/workloads.json):
   wh-build     one fresh Warehouse.ensureMaterialized (36 artifacts)
-  queries      11 registry queries, from 11 of the 12 scale classes, over a landed warehouse
+  queries      8 registry queries, a class-stratified sample, over a landed warehouse
   daily-batch  ProcessOrders.runDay folded over seeded days
 
 Steps: build the repo and the harness (once per source state), generate the
@@ -105,12 +105,16 @@ def build():
         return fh.read().strip()
 
 
+TAIL_MIN_OPS = 21    # from here on, ten samples beyond the tail leave it at or above the median
+
+
 def quantile_tail(xs):
     """The highest percentile with at least ten samples beyond it:
-    (value, percentile, samples beyond). Below eleven samples, the max."""
+    (value, percentile, samples beyond). Below TAIL_MIN_OPS samples, the
+    max."""
     s = sorted(xs)
     n = len(s)
-    if n < 11:
+    if n < TAIL_MIN_OPS:
         return s[-1], 100, 0
     return s[n - 11], math.floor(100 * (n - 10) / n), 10
 
@@ -141,8 +145,9 @@ def main():
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--plant", choices=("throw", "wrong"),
-                    help="add a throwing or a wrong-output op (the benchmark's own tests)")
+    ap.add_argument("--plant", choices=("throw", "wrong", "stale"),
+                    help="add a throwing op, a wrong-output op or one wrong after its "
+                         "first call (the benchmark's own tests)")
     a = ap.parse_args()
 
     with open(os.path.join(HERE, "workloads.json")) as fh:

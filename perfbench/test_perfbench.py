@@ -7,7 +7,10 @@ They build the program if needed and start a few short benchmark runs
 (about four minutes in all)."""
 import filecmp
 import json
+import math
 import os
+import random
+import statistics
 import subprocess
 import sys
 import tempfile
@@ -22,6 +25,27 @@ import run  # noqa: E402
 
 with open(os.path.join(HERE, "workloads.json")) as fh:
     SPEC = json.load(fh)
+
+
+def stratified_sample(registry, seconds, k):
+    """The `queries` workload: k registry queries, allotted to the scale
+    classes in proportion to class size (largest remainder, ties to the
+    larger class), each class's share taken at the cost medians of equal
+    slices of its queries sorted by measured seconds."""
+    classes = {}
+    for q, c in registry.items():
+        classes.setdefault(c, []).append(q)
+    quota = {c: len(qs) * k / len(registry) for c, qs in classes.items()}
+    alloc = {c: math.floor(x) for c, x in quota.items()}
+    rest = sorted(classes, key=lambda c: (alloc[c] - quota[c], -len(classes[c]), c))
+    for c in rest[:k - sum(alloc.values())]:
+        alloc[c] += 1
+    picks = []
+    for c in sorted(classes, key=lambda c: (-len(classes[c]), c)):
+        qs = sorted(classes[c], key=lambda q: (seconds[q], q))
+        m = alloc[c]
+        picks += [qs[int((j + 0.5) * len(qs) / m)] for j in range(m)]
+    return picks
 
 
 def bench(*args):
@@ -65,14 +89,26 @@ class Membership(unittest.TestCase):
         self.assertEqual(listed["queries"], SPEC["registry"],
                          "the query registry changed: re-choose the workloads in a benchmark change")
         self.assertEqual(listed["artifacts"], SPEC["artifacts"])
-        timed = SPEC["workloads"]["queries"]["queries"]
-        self.assertEqual(len(set(timed)), len(timed))
-        self.assertTrue(set(timed) <= set(SPEC["registry"]))
-        untimed = set(SPEC["workloads"]["queries"]["untimed_classes"])
-        self.assertEqual(sorted(SPEC["registry"][q] for q in timed),
-                         sorted(set(SPEC["registry"].values()) - untimed),
-                         "one timed query per scale class")
         self.assertTrue(set(SPEC["workloads"]["queries"]["artifacts"]) <= set(SPEC["artifacts"]))
+
+    def test_queries_are_the_stratified_sample_of_the_measured_registry(self):
+        timed = SPEC["workloads"]["queries"]["queries"]
+        self.assertEqual(set(SPEC["registry_seconds"]), set(SPEC["registry"]))
+        self.assertEqual(timed, stratified_sample(SPEC["registry"], SPEC["registry_seconds"],
+                                                  len(timed)))
+
+
+class Tail(unittest.TestCase):
+    def test_tail_is_at_least_the_median_and_the_max_below_21_ops(self):
+        rnd = random.Random(1)
+        for n in range(1, 80):
+            xs = [rnd.lognormvariate(0, 1) for _ in range(n)]
+            tail, pct, beyond = run.quantile_tail(xs)
+            self.assertGreaterEqual(tail, statistics.median(xs))
+            if n < run.TAIL_MIN_OPS:
+                self.assertEqual((tail, pct, beyond), (max(xs), 100, 0))
+            else:
+                self.assertEqual(sum(x > tail for x in xs), beyond)
 
 
 class FailedRatio(unittest.TestCase):
@@ -91,6 +127,15 @@ class FailedRatio(unittest.TestCase):
         bad = [o for o in rec["ops"] if o["failed"]]
         self.assertEqual([o["name"] for o in bad], ["planted_wrong"])
         self.assertIn("oracle mismatch", bad[0]["failed"])
+
+    def test_planted_op_wrong_only_after_its_first_call_fails(self):
+        line, rec = bench("--workload", "queries", "--seed", "3", "--seconds", "1",
+                          "--trace", "0", "--plant", "stale")
+        self.assertFalse(line["correct"])
+        self.assertEqual(line["failed"], 1)
+        bad = [o for o in rec["ops"] if o["failed"]]
+        self.assertEqual([o["name"] for o in bad], ["planted_stale"])
+        self.assertIn("after the timed region: oracle mismatch", bad[0]["failed"])
 
 
 class WarehouseMarkers(unittest.TestCase):
