@@ -117,6 +117,23 @@ object Graft {
   implicit class LeaseOps[T](private val ds: Dataset[T]) extends AnyVal {
     def leased: Dataset[T] = lease(ds)
   }
+
+  /** The session graft's entry points and tests run on.
+    *
+    * Three of these settings are STATIC SQL confs, which take effect
+    * only when this call creates the JVM's first session:
+    *  - `spark.sql.extensions` registers graft's native functions (checked
+    *    below, because without it every operator fails);
+    *  - `spark.sql.codegen.cache.maxEntries` = 400: Spark's JVM-wide cache
+    *    of compiled generated classes. At Spark's default of 100, a loop
+    *    that re-runs a dashboard of registry queries (~30 classes each)
+    *    evicts every class before it is reused, so each call recompiles
+    *    all its stages and runs them before the JIT has warmed them. 400
+    *    holds a loop of ~13 such queries; each class costs ~25 KB of heap;
+    *  - `spark.sql.ui.retainedExecutions` = 50: the plan graphs Spark keeps
+    *    for finished queries are read only by the UI, which graft turns
+    *    off.
+    */
   def session(master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
               shufflePartitions: Int = 32,
               appName: String = "graft"): SparkSession = {
@@ -126,6 +143,8 @@ object Graft {
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config("spark.sql.codegen.cache.maxEntries", 400)
+      .config("spark.sql.ui.retainedExecutions", 50)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     // spark.sql.extensions is a STATIC conf: if getOrCreate returned an

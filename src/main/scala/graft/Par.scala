@@ -80,25 +80,6 @@ object Par {
               val r = l.relation.asInstanceOf[HadoopFsRelation]
               (b + math.max(1L, r.location.sizeInBytes),
                 f + math.max(1L, r.location.inputFiles.length.toLong))
-            case imr: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-              // r16 (r15 ADVICE): a MATERIALIZED cache reports its true
-              // byte size through stats; an unmaterialized one reports
-              // its child PLAN estimate, which for a cached join
-              // subtree can be an inflated product estimate — size that
-              // case from the cached plan's own file scans instead (the
-              // partition count of a cache is its build plan's, i.e.
-              // the scans' splits), falling back to the estimate only
-              // when the cached plan has no file leaves.
-              val fileScans = imr.cachedPlan.collect {
-                case fs: org.apache.spark.sql.execution.FileSourceScanExec =>
-                  fs.relation
-              }
-              if (!imr.cacheBuilder.isCachedColumnBuffersLoaded && fileScans.nonEmpty)
-                (b + fileScans.map(r => math.max(1L, r.location.sizeInBytes)).sum,
-                  f + fileScans.map(r =>
-                    math.max(1L, r.location.inputFiles.length.toLong)).sum)
-              else
-                (b + imr.stats.sizeInBytes.min(capped).toLong, f + 1L)
             case other =>
               (b + other.stats.sizeInBytes.min(capped).toLong, f + 1L)
           }

@@ -146,7 +146,7 @@ object SparkEntry {
     // Any pass count yields the identical pair set (SaltedJaccardSpec).
     "q32_ngram_jaccard" -> ((s, d) => TextDedup.ngramJaccardPairsSalted(
       graft.warehouse.Warehouse.docHashsets(s, d),
-      s"target/graft-tmp/q32-${d.replaceAll("[^A-Za-z0-9.]+", "_")}")),
+      saltedLandingDir("q32", d))),
     // q32's BOUNDED at-scale form (r14 verdict task 2): the identical
     // PPJoin candidate/verify chain run as `passes` disjoint
     // tok-hash slices, each its own action, so the live candidate
@@ -156,7 +156,7 @@ object SparkEntry {
     // as q32: the hash gate proves the decomposition drops nothing.
     "q166_jaccard_salted" -> ((s, d) => TextDedup.ngramJaccardPairsSalted(
       graft.warehouse.Warehouse.docHashsets(s, d),
-      s"target/graft-tmp/q166-${d.replaceAll("[^A-Za-z0-9.]+", "_")}")),
+      saltedLandingDir("q166", d))),
     // q40's BOUNDED at-scale form (the containment twin of q166): the
     // identical prefix/index candidate chain run as disjoint tok-hash
     // slices, each its own action — exact decontamination whose live
@@ -168,7 +168,7 @@ object SparkEntry {
       TextDedup.containmentPairsSalted(
         hs.where(col("doc_id") % 10 === 0),
         hs.where(col("doc_id") % 10 =!= 0),
-        s"target/graft-tmp/q167-${d.replaceAll("[^A-Za-z0-9.]+", "_")}")
+        saltedLandingDir("q167", d))
     }),
     // Near-dup cluster assignment: LSH pairs → connected components
     // (iterative min-label propagation) → one keeper per cluster. The
@@ -2447,6 +2447,11 @@ object SparkEntry {
 
   private def docs(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d).select(col("doc_id"), col("text"))
+
+  /** Where a salted multi-pass query (q32/q166/q167) lands its per-pass
+    * files: one dir per query and data dir, under the working directory. */
+  private def saltedLandingDir(query: String, sfDir: String): String =
+    s"target/graft-tmp/$query-${sfDir.replaceAll("[^A-Za-z0-9.]+", "_")}"
 
   /** The two recall denominators every retrieval eval reports
     * (q99/q104/q117): label-BLOCKED exact truth (measures recall within

@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   * snapshots to the first scaffold day, or roll daily snapshots up to
   * month-ends — so the scaffold never needs to extend back to the first
   * snapshot in history. Within a slot the winner is the row with the
-  * highest `tiebreaks` tuple (descending lexicographic); include the
-  * original snapshot date as the first tiebreak so "latest observation
-  * wins" survives the slot mapping. Entities with no snapshot on or
+  * highest `tiebreaks` tuple (descending lexicographic, NULL below every
+  * value); include the original snapshot date as the first tiebreak so
+  * "latest observation wins" survives the slot mapping. Entities with no snapshot on or
   * before D contribute nothing (SURVEY.md §7.4.1).
   *
   * Scale: each collapsed snapshot becomes a VALIDITY INTERVAL
@@ -50,11 +50,17 @@ object ForwardFill {
     // dominant stage of the stock metrics (r16) — callers with several
     // tiebreaks can pack them into one orderable value when the domain
     // allows (see Metrics.stockByCategory).
-    val tbKey = if (tiebreaks.size == 1) col(tiebreaks.head)
-                else struct(tiebreaks.map(col): _*)
+    // A NULL tiebreak ranks lowest, as it does inside the struct. max_by
+    // skips NULL keys, so a slot whose single tiebreaks are all NULL
+    // would lose its value; it takes any of its rows' values instead,
+    // as the struct form picks any of its tied rows.
+    val winner = if (tiebreaks.size == 1) {
+      val tb = col(tiebreaks.head)
+      when(count(tb) === 0, first(col("value"))).otherwise(max_by(col("value"), tb))
+    } else max_by(col("value"), struct(tiebreaks.map(col): _*))
     val daily = snapshots
       .groupBy(col("entity"), col("snap_date"))
-      .agg(max_by(col("value"), tbKey).as("value"))
+      .agg(winner.as("value"))
 
     // Each snapshot is valid on scaffold days in [snap_date, next_snap);
     // the last snapshot carries forward indefinitely (null next_snap).

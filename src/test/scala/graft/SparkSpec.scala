@@ -4,20 +4,18 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared ScalaTest base: one local SparkSession per suite, UTC, small
-  * shuffle parallelism (tests are tiny; 4 partitions keeps plans readable).
+/** Shared ScalaTest base: the production [[Graft.session]] config on
+  * local[4] with small shuffle parallelism (tests are tiny; 4 partitions
+  * keeps plans readable), plus a test-only warehouse dir.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.warehouse.dir",
+  lazy val spark: SparkSession = {
+    // a static conf: the first session's SparkConf reads it from the
+    // spark.* system properties
+    sys.props.getOrElseUpdate("spark.sql.warehouse.dir",
       s"${System.getProperty("java.io.tmpdir")}/graft-test-warehouse")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+    Graft.session(master = "local[4]", shufflePartitions = 4, appName = getClass.getSimpleName)
+  }
 
   override def afterAll(): Unit = {
     // Session is shared across suites in one JVM (sbt forks once); don't stop.

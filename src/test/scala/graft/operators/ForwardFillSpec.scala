@@ -80,4 +80,25 @@ class ForwardFillSpec extends SparkSpec {
     val out = ForwardFill.fill(snaps, days)
     assert(out.head().getDouble(2) == 2.0)
   }
+
+  test("a NULL tiebreak ranks lowest but keeps its slot, on the single and the struct path") {
+    val snaps = Seq[(String, String, Double, Option[Int])](
+      ("p1", "2019-01-01", 1.0, None),    // alone in its slot: kept
+      ("p2", "2019-01-01", 2.0, None),    // loses to the non-null tiebreak
+      ("p2", "2019-01-01", 3.0, Some(1)),
+      ("p3", "2019-01-02", 4.0, Some(1)))
+      .toDF("entity", "snap_date", "value", "tiebreak")
+      .withColumn("snap_date", col("snap_date").cast("date"))
+      .withColumn("tb2", lit(0))
+    val days = Seq("2019-01-01", "2019-01-02").toDF("datum")
+      .withColumn("datum", col("datum").cast("date"))
+    val expected = Seq(
+      Seq("p1", "2019-01-01", "1.0"), Seq("p1", "2019-01-02", "1.0"),
+      Seq("p2", "2019-01-01", "3.0"), Seq("p2", "2019-01-02", "3.0"),
+      Seq("p3", "2019-01-02", "4.0"))
+    for (tbs <- Seq(Seq("tiebreak"), Seq("tiebreak", "tb2")))
+      assertSameRows(ForwardFill.fill(snaps, days, tbs)
+        .select(col("entity"), col("datum").cast("string"), col("value").cast("string")),
+        expected)
+  }
 }

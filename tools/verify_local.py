@@ -70,7 +70,7 @@ if "--skip-spark" not in sys.argv:
     r = subprocess.run(["bash", "-c", cmd], capture_output=True, text=True, env=env)
     if r.returncode != 0:
         print(r.stdout[-3000:]); print(r.stderr[-5000:]); sys.exit(1)
-    for line in r.stderr.splitlines():
+    for line in r.stderr.splitlines() + r.stdout.splitlines():
         if "[verify]" in line: print(line)
 
 con = duckdb.connect()
