@@ -21,32 +21,23 @@ object Bench {
     * below it a single sample (absolute jitter is sub-budget noise). */
   val MedianFloorSec = 1.0
 
+  /** One query's bench outcome: cold, first post-cold and steady-median
+    * seconds, and its error if a run threw. */
+  final case class Result(name: String, cold: Double, steady: Double, median: Double,
+                          error: Option[String])
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
     val warmDir = sys.env.get("SPARK_GRAFT_WARM_DIR")
       .orElse(Some("/root/testdata/sf0.001").filter(d => Files.isDirectory(Paths.get(d))))
-    val spark = Graft.session(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession()
 
-    // Between-query teardown, OUTSIDE the timed region: operators persist
-    // shared intermediates; drop them so measurements are independent and
-    // memory stays flat. The explicit GC lets the ContextCleaner reap dead
-    // broadcast/shuffle state — with a large heap it otherwise accumulates
-    // across dozens of queries and degrades late queries unpredictably.
-    // Charging these pauses to the query being measured would skew every
-    // reported time by up to seconds (round-2 advice).
-    def cleanup(): Unit = {
-      Graft.releaseLeases(); spark.catalog.clearCache()
-      System.gc()
-    }
-
+    // Between-query teardown (Measure.teardown), OUTSIDE the timed region:
+    // charging its cache drop and GC pauses to the query being measured
+    // would skew every reported time by up to seconds (round-2 advice).
     def run(dir: String, name: String): Option[String] =
-      try {
-        SparkEntry.queries(name)(spark, dir).write.mode("overwrite").format("noop").save()
-        None
-      }
+      try { Measure.noop(SparkEntry.queries(name)(spark, dir)); None }
       catch { case e: Throwable => Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)) }
 
     // TWO warmup passes: heavy-codegen queries (q32-family) reach JIT
@@ -54,7 +45,7 @@ object Bench {
     // first timed run paying 2–6× (measured 10–31 s vs 5 s for the same
     // binary); the second pass costs ~30 s of untimed wall once.
     warmDir.foreach(w => (1 to 2).foreach(_ =>
-      SparkEntry.queries.keys.foreach { n => cleanup(); run(w, n) }))
+      SparkEntry.queries.keys.foreach { n => Measure.teardown(spark); run(w, n) }))
 
     // Host-drift calibration sentinel (r16, per the r15 verdict): a
     // FIXED synthetic workload — 150M xxhash64+sum in ONE task, so the
@@ -68,12 +59,9 @@ object Bench {
     // bit_xor, not sum: summing 150M full-range 64-bit hashes overflows
     // a BIGINT under ANSI mode (measured: the first sentinel crashed the
     // bench); xor folds the same per-row work with no overflow.
-    val tSen = System.nanoTime()
-    spark.range(0L, 150000000L, 1L, 1)
-      .select(xxhash64(col("id")).as("h"))
-      .agg(expr("bit_xor(h)"))
-      .write.mode("overwrite").format("noop").save()
-    val senSec = (System.nanoTime() - tSen) / 1e9
+    def sentinel(rows: Long, parts: Int): Double = Measure.seconds(Measure.noop(
+      spark.range(0L, rows, 1L, parts).select(xxhash64(col("id")).as("h")).agg(expr("bit_xor(h)"))))
+    val senSec = sentinel(150000000L, 1)
     // PARALLEL twin (one partition per core): this round's mid-bench
     // read ~1.5× on untouched queries while the single-task sentinel
     // stayed flat — the host throttles multi-core work independently of
@@ -81,21 +69,15 @@ object Bench {
     // runs at the SAME SPARK_GRAFT_CPUS only (per-core work is fixed at
     // 20M hashes).
     val par = spark.sparkContext.defaultParallelism
-    val tSenP = System.nanoTime()
-    spark.range(0L, 20000000L * par, 1L, par)
-      .select(xxhash64(col("id")).as("h"))
-      .agg(expr("bit_xor(h)"))
-      .write.mode("overwrite").format("noop").save()
-    val senParSec = (System.nanoTime() - tSenP) / 1e9
+    val senParSec = sentinel(20000000L * par, par)
 
     // The warehouse layer materializes dims/facts once per corpus and the
     // analytic queries read the parquet (mirrors the reference DAG: tables
     // are built nightly, queries just read them). Build it before the
     // timed loop and report the build cost as its own metric.
-    val tWh = System.nanoTime()
-    val whErr = try { graft.warehouse.Warehouse.ensureMaterialized(spark, sfDir); None }
-                catch { case e: Throwable => Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)) }
-    val whSec = (System.nanoTime() - tWh) / 1e9
+    val (whErr, whSec) = Measure.timed(
+      try { graft.warehouse.Warehouse.ensureMaterialized(spark, sfDir); None }
+      catch { case e: Throwable => Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)) })
 
     // Timed runs per query, same sf, cache cleared between: the FIRST
     // sample (cold) carries per-construction planning/codegen jitter
@@ -105,69 +87,70 @@ object Bench {
     // headline total stays the cold sum for round-over-round
     // comparability. Queries whose first post-cold run exceeds
     // [[MedianFloorSec]] get TWO more post-cold runs and report the
-    // MEDIAN of the three (BenchRepeat's discipline — one sample is
-    // not evidence at ±15% host variance; the r12 driver number read
-    // +19% on an unchanged registry from exactly this); the sub-second
-    // tail keeps single samples so total wall stays inside the driver
-    // budget (the tail's absolute jitter is noise in the total).
+    // MEDIAN of the three (one sample is not evidence at ±15% host
+    // variance; the r12 driver number read +19% on an unchanged
+    // registry from exactly this); the sub-second tail keeps single
+    // samples so total wall stays inside the driver budget (the tail's
+    // absolute jitter is noise in the total).
     val results = SparkEntry.queries.keys.toSeq.sorted.map { name =>
-      cleanup()
-      val t0 = System.nanoTime()
-      val err = run(sfDir, name)
-      val cold = (System.nanoTime() - t0) / 1e9
-      def timed(): Double = {
-        cleanup()
-        val t = System.nanoTime()
-        run(sfDir, name)
-        (System.nanoTime() - t) / 1e9
+      var err: Option[String] = None
+      def sample(): Double = {
+        Measure.teardown(spark)
+        Measure.seconds { err = err.orElse(run(sfDir, name)) }
       }
-      cleanup()
-      val t1 = System.nanoTime()
-      val err2 = run(sfDir, name)
-      val steady = (System.nanoTime() - t1) / 1e9
+      val cold = sample()
+      val steady = sample()
       val samples =
-        if (err.orElse(err2).isDefined || steady < MedianFloorSec) Seq(steady)
-        else steady +: Seq.fill(2)(timed())
-      val median = samples.sorted.apply(samples.size / 2)
-      (name, cold, steady, median, err.orElse(err2))
+        if (err.isDefined || steady < MedianFloorSec) Seq(steady)
+        else steady +: Seq.fill(2)(sample())
+      Result(name, cold, steady, Measure.median(samples), err)
     }
     def q(s: String): String = Json.quote(s)
-    val qs = results.map { case (k, v, _, _, _) => s"${q(k)}:$v" }.mkString("{", ",", "}")
-    val qsSteady = results.map { case (k, _, v, _, _) => s"${q(k)}:$v" }.mkString("{", ",", "}")
-    val qsMedian = results.map { case (k, _, _, v, _) => s"${q(k)}:$v" }.mkString("{", ",", "}")
-    val errs = (results.collect { case (k, _, _, _, Some(e)) => s"${q(k)}:${q(e)}" } ++
-      whErr.map(e => s"${q("warehouse_build")}:${q(e)}")).mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val totalSteady = results.map(_._3).sum
-    val totalMedian = results.map(_._4).sum
+    def times(f: Result => Double): String =
+      results.map(r => s"${q(r.name)}:${f(r)}").mkString("{", ",", "}")
+    val errs = errors(results, whErr).map { case (k, e) => s"${q(k)}:${q(e)}" }.mkString("{", ",", "}")
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_steady":$qsSteady,"queries_steady_median":$qsMedian,"total_steady_sec":$totalSteady,"total_steady_median_sec":$totalMedian,"errors":$errs,"warehouse_build_sec":$whSec,"sentinel_sec":$senSec,"sentinel_par_sec":$senParSec,"sf":${q(sfDir)}}"""
+      s"""{"metric":"total","value":${results.map(_.cold).sum},"unit":"sec","queries":${times(_.cold)},"queries_steady":${times(_.steady)},"queries_steady_median":${times(_.median)},"total_steady_sec":${results.map(_.steady).sum},"total_steady_median_sec":${results.map(_.median).sum},"errors":$errs,"warehouse_build_sec":$whSec,"sentinel_sec":$senSec,"sentinel_par_sec":$senParSec,"sf":${q(sfDir)}}"""
     Files.writeString(Paths.get(benchOut), fullJson + "\n")
-    // The stdout line MUST stay short: the driver captures only the last
-    // ~2000 chars of output, and the round-5 line (72-query cold+steady
-    // maps, ~5 KB) overflowed it — BENCH_r05.json recorded parsed:null.
-    // Per-query maps live in BENCH.json only; stdout carries the summary
-    // the perf gate parses. Error messages are truncated and capped so a
-    // pathological round cannot blow the line either.
-    val nErrors = results.count(_._5.isDefined) + whErr.size
-    val errsShort = (results.collect { case (k, _, _, _, Some(e)) => (k, e) } ++
-        whErr.map(("warehouse_build", _)))
-      .take(8).map { case (k, e) => s"${q(k)}:${q(e.take(40))}" }
-      .mkString("{", ",", "}")
-    // r16: restore per-query driver visibility (the r15 PERF gate had
-    // per_query:{} because only this truncated line survives) — the
-    // TOP-20 steady-medians ride the summary line, 3-decimal, ~800
-    // bytes; the full map stays in BENCH.json. Everything still ONE
-    // JSON line, sized inside the driver's ~2000-char tail capture
-    // even alongside the capped errors map.
-    val top = results.sortBy(-_._4).take(20)
-      // Locale.ROOT: a comma decimal separator would break the JSON
-      .map { case (k, _, _, m, _) =>
-        s"${q(k)}:" + "%.3f".formatLocal(java.util.Locale.ROOT, m) }
-      .mkString("{", ",", "}")
-    val summary =
-      s"""{"metric":"total","value":$total,"unit":"sec","total_steady_sec":$totalSteady,"total_steady_median_sec":$totalMedian,"n_queries":${results.size},"n_errors":$nErrors,"errors":$errsShort,"warehouse_build_sec":$whSec,"sentinel_sec":$senSec,"sentinel_par_sec":$senParSec,"top_steady_median":$top,"sf":${q(sfDir)},"detail":"per-query times in BENCH.json"}"""
-    println(summary)
+    println(summary(results, whErr, whSec, senSec, senParSec, sfDir))
     spark.stop()
+  }
+
+  /** The stdout summary line's budget: the driver keeps only the last
+    * ~2,000 chars of output. The round-5 line (72-query cold+steady
+    * maps, ~5 KB) overflowed it and BENCH_r05.json recorded parsed:null,
+    * so per-query maps live in BENCH.json only. */
+  val SummaryMaxChars = 1900
+
+  /** Caps, in chars after JSON quoting, on the summary line's names and
+    * on its other text (error messages, the sf path). NameChars fits every
+    * registry name whole. With at most [[SummaryErrors]] errors and
+    * [[SummaryTop]] top entries, times below 10^6 s and 6 fixed doubles of
+    * at most 22 chars, the line is at most ~1,890 chars whatever it holds. */
+  val NameChars = 34
+  val TextChars = 32
+  val SummaryErrors = 8
+  val SummaryTop = 20
+
+  private def errors(results: Seq[Result], whErr: Option[String]): Seq[(String, String)] =
+    results.collect { case Result(k, _, _, _, Some(e)) => (k, e) } ++ whErr.map(("warehouse_build", _))
+
+  /** The one-line stdout summary the perf gate parses. Each name, message
+    * and the sf path is cut after quoting, between two escapes, so a
+    * message of control chars cannot grow the line. r16 restored
+    * per-query driver visibility: the [[SummaryTop]] slowest
+    * steady-medians ride the line, 3-decimal; the full map stays in
+    * BENCH.json. */
+  def summary(results: Seq[Result], whErr: Option[String], whSec: Double,
+              senSec: Double, senParSec: Double, sfDir: String): String = {
+    val errs = errors(results, whErr)
+    val errsShort = errs.take(SummaryErrors)
+      .map { case (k, e) => Json.quote(k, NameChars) + ":" + Json.quote(e, TextChars) }
+      .mkString("{", ",", "}")
+    val top = results.sortBy(-_.median).take(SummaryTop)
+      // Locale.ROOT: a comma decimal separator would break the JSON
+      .map(r => Json.quote(r.name, NameChars) + ":" + "%.3f".formatLocal(java.util.Locale.ROOT, r.median))
+      .mkString("{", ",", "}")
+    s"""{"metric":"total","value":${results.map(_.cold).sum},"unit":"sec","total_steady_sec":${results.map(_.steady).sum},"total_steady_median_sec":${results.map(_.median).sum},"n_queries":${results.size},"n_errors":${errs.size},"errors":$errsShort,"warehouse_build_sec":$whSec,"sentinel_sec":$senSec,"sentinel_par_sec":$senParSec,"top_steady_median":$top,"sf":${Json.quote(sfDir, TextChars)},"detail":"per-query times in BENCH.json"}"""
   }
 }

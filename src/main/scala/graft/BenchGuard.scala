@@ -1,13 +1,15 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Per-query bench regression gate — run before closing a round.
   *
   * The r5→r6 drift (q44 2.6→15.6 s cold, plus six smaller regressions)
   * shipped because nothing in-round compared per-query times against a
   * recorded budget: the aggregate bench total moved ~20 s across 101
   * queries and read as noise. This gate re-runs the historically most
-  * expensive queries BenchRepeat-style (N runs, one JVM, teardown
-  * between runs) and fails loudly when a steady median exceeds
+  * expensive queries through [[Measure]]'s loop (N runs, one JVM,
+  * teardown between runs) and fails loudly when a steady median exceeds
   * [[Headroom]] × its recorded budget.
   *
   * Budgets are the steady medians recorded in BASELINE.md §Measured
@@ -18,12 +20,12 @@ package graft
   * history.
   *
   * Usage: `runMain graft.BenchGuard [sfDir] [runs]` (defaults sf0.1,
-  * 3 runs). Exit 1 on any budget trip — wire into the round-close
+  * 4 runs). Exit 1 on any budget trip — wire into the round-close
   * checklist next to the full verify.
   */
 object BenchGuard {
   /** Recorded steady-median budgets (seconds) — r10 re-measure
-    * (BenchRepeat ×5 post-cold medians, warehouse v9). The retrieval
+    * (×5 post-cold medians, warehouse v9). The retrieval
     * evals are pinned at their ARTIFACT-backed costs (q104 5.5→1.5,
     * q117 5.0→2.2, q102 3.2→0.8, q114 2.5→1.2, q118 3.2→1.1): a trip
     * there means something re-introduced a per-query index/truth
@@ -76,7 +78,7 @@ object BenchGuard {
     // r11 (cont.): both release analytics read the materialized
     // release_survivors artifact — the scrub's gram shuffle moved to
     // warehouse build. A trip here means a release query re-grew a
-    // corpus scrub (q140 BenchRepeat median 7.1, q147 ~4.9)
+    // corpus scrub (q140 repeat-run median 7.1, q147 ~4.9)
     "q140_release_card" -> 7.5,
     "q147_release_diff" -> 5.5,
     "q152_model_calibration" -> 2.9,
@@ -117,8 +119,7 @@ object BenchGuard {
 
   /** Time the q140 stages in isolation (see [[ReleaseStageBudgets]]).
     * Returns (label, steadyMedian) rows. */
-  private def releaseStageTimes(spark: org.apache.spark.sql.SparkSession,
-                                sfDir: String, runs: Int): Seq[(String, Double)] = {
+  private def releaseStageTimes(spark: SparkSession, sfDir: String, runs: Int): Seq[(String, Double)] = {
     import org.apache.spark.sql.functions._
     val wh = graft.warehouse.Warehouse
     val rel = graft.pipeline.Release
@@ -128,20 +129,16 @@ object BenchGuard {
       .withColumn("mix_ppm", lit(50000L))
     // pre: build + materialize the predecessor OUTSIDE the clock;
     // timed: one stage's own action over the warmed predecessor
-    def timed(label: String, pre: () => org.apache.spark.sql.DataFrame,
-              stage: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-        : (String, Double) = {
+    def timed(label: String, pre: () => DataFrame, stage: DataFrame => DataFrame): (String, Double) = {
       val times = (1 to runs).map { _ =>
-        Graft.releaseLeases(); spark.catalog.clearCache(); System.gc()
+        Measure.teardown(spark)
         val p = pre().persist()
         p.count()
-        val t0 = System.nanoTime()
-        stage(p).write.mode("overwrite").format("noop").save()
-        val dt = (System.nanoTime() - t0) / 1e9
+        val dt = Measure.seconds(Measure.noop(stage(p)))
         p.unpersist(blocking = false)
         dt
       }
-      (label, times.drop(1).sorted.apply((runs - 1) / 2))
+      (label, Measure.steadyMedian(times))
     }
     def surv = rel.survivors(docs, wh.gramOccurrences(spark, sfDir),
       wh.nearDupClusters(spark, sfDir), wh.docQuality(spark, sfDir))
@@ -161,36 +158,22 @@ object BenchGuard {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val runs = if (args.length > 1) args(1).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Graft.session(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession()
     graft.warehouse.Warehouse.ensureMaterialized(spark, sfDir)
 
-    val failures = Budgets.flatMap { case (name, budget) =>
-      val times = (1 to runs).map { _ =>
-        Graft.releaseLeases(); spark.catalog.clearCache(); System.gc()
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, sfDir).write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      // median of runs AFTER the first (the first pays this query's
-      // plan/codegen construction — BenchRepeat's "cold" row)
-      val steady = times.drop(1).sorted.apply((runs - 1) / 2)
+    def check(label: String, budget: Double, steady: Double): Option[(String, Double)] = {
       val limit = budget * Headroom
       val verdict = if (steady > limit) "FAIL" else "ok"
-      println(f"[guard] $verdict $name steady=$steady%.2f s budget=$budget%.2f (limit $limit%.2f)")
-      if (steady > limit) Some(name -> steady) else None
+      println(f"[guard] $verdict $label steady=$steady%.2f s budget=$budget%.2f (limit $limit%.2f)")
+      Option.when(steady > limit)(label -> steady)
     }
-    val stageFailures = releaseStageTimes(spark, sfDir, runs).flatMap {
-      case (label, steady) =>
-        val budget = ReleaseStageBudgets.toMap.apply(label)
-        val limit = budget * Headroom
-        val verdict = if (steady > limit) "FAIL" else "ok"
-        println(f"[guard] $verdict $label steady=$steady%.2f s budget=$budget%.2f (limit $limit%.2f)")
-        if (steady > limit) Some(label -> steady) else None
+    val allFailures = Budgets.flatMap { case (name, budget) =>
+      check(name, budget, Measure.steadyMedian(
+        Measure.samples(spark, runs)(Measure.noop(SparkEntry.queries(name)(spark, sfDir)))))
+    } ++ releaseStageTimes(spark, sfDir, runs).flatMap { case (label, steady) =>
+      check(label, ReleaseStageBudgets.toMap.apply(label), steady)
     }
     spark.stop()
-    val allFailures = failures ++ stageFailures
     if (allFailures.nonEmpty) {
       println(s"[guard] ${allFailures.size} budget trip(s): " +
         allFailures.map { case (n, s) => f"$n=$s%.2f s" }.mkString(", "))

@@ -35,9 +35,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *  - [[withCached]] is the scoped form for a caller composing several
   *    operators over shared inputs: persist, run, release in `finally`.
   *
-  * All graft entry points — Bench, BenchGuard, Verify — release between
-  * queries. At MEMORY_AND_DISK default storage the worst case of NOT
-  * releasing is eviction, never OOM-by-cache.
+  * All graft entry points — Bench, BenchGuard, Verify, Measure — release
+  * between queries. At MEMORY_AND_DISK default storage the worst case of
+  * NOT releasing is eviction, never OOM-by-cache.
   *
   * The contract is enforced registry-wide, not per-operator:
   * PersistBalanceSpec's REGISTRY SWEEP runs every `SparkEntry.queries`
@@ -166,6 +166,16 @@ object Graft {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
+    spark
+  }
+
+  /** The [[session]] graft's command-line entry points run on: `local[N]`
+    * with N shuffle partitions, where N is `SPARK_GRAFT_CPUS` or, when that
+    * is unset, the host's core count. Spark logs at WARN. */
+  def localSession(): SparkSession = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt)
+    val spark = session(master = s"local[$cpus]", shufflePartitions = cpus)
+    spark.sparkContext.setLogLevel("WARN")
     spark
   }
 }

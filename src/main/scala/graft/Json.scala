@@ -7,7 +7,17 @@ package graft
   * control char makes the driver's json.load fail, silently zeroing a
   * round's results. */
 object Json {
-  def quote(s: String): String = "\"" + s.flatMap {
+  def quote(s: String): String = "\"" + s.flatMap(escape) + "\""
+
+  /** [[quote]] cut to at most `max` chars, quotes included. The cut falls
+    * between two escapes, so the result is always a valid JSON string. */
+  def quote(s: String, max: Int): String = {
+    val b = new StringBuilder("\"")
+    s.iterator.map(escape).takeWhile(e => b.length + e.length < max).foreach(b ++= _)
+    b.append('"').result()
+  }
+
+  private def escape(c: Char): String = c match {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -15,5 +25,5 @@ object Json {
     case '\t' => "\\t"
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
-  } + "\""
+  }
 }

@@ -2,6 +2,7 @@ package graft
 
 import graft.Graft.LeaseOps
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -146,7 +147,7 @@ object SparkEntry {
     // Any pass count yields the identical pair set (SaltedJaccardSpec).
     "q32_ngram_jaccard" -> ((s, d) => TextDedup.ngramJaccardPairsSalted(
       graft.warehouse.Warehouse.docHashsets(s, d),
-      saltedLandingDir("q32", d))),
+      saltedLandingDir(s, "q32", d))),
     // q32's BOUNDED at-scale form (r14 verdict task 2): the identical
     // PPJoin candidate/verify chain run as `passes` disjoint
     // tok-hash slices, each its own action, so the live candidate
@@ -156,7 +157,7 @@ object SparkEntry {
     // as q32: the hash gate proves the decomposition drops nothing.
     "q166_jaccard_salted" -> ((s, d) => TextDedup.ngramJaccardPairsSalted(
       graft.warehouse.Warehouse.docHashsets(s, d),
-      saltedLandingDir("q166", d))),
+      saltedLandingDir(s, "q166", d))),
     // q40's BOUNDED at-scale form (the containment twin of q166): the
     // identical prefix/index candidate chain run as disjoint tok-hash
     // slices, each its own action — exact decontamination whose live
@@ -168,7 +169,7 @@ object SparkEntry {
       TextDedup.containmentPairsSalted(
         hs.where(col("doc_id") % 10 === 0),
         hs.where(col("doc_id") % 10 =!= 0),
-        saltedLandingDir("q167", d))
+        saltedLandingDir(s, "q167", d))
     }),
     // Near-dup cluster assignment: LSH pairs → connected components
     // (iterative min-label propagation) → one keeper per cluster. The
@@ -2449,9 +2450,17 @@ object SparkEntry {
     Tables.documents(s, d).select(col("doc_id"), col("text"))
 
   /** Where a salted multi-pass query (q32/q166/q167) lands its per-pass
-    * files: one dir per query and data dir, under the working directory. */
-  private def saltedLandingDir(query: String, sfDir: String): String =
-    s"target/graft-tmp/$query-${sfDir.replaceAll("[^A-Za-z0-9.]+", "_")}"
+    * files: one dir per query and data dir, inside a per-application dir
+    * under the warehouse cache root, so two runs over one corpus never
+    * share pass files. The application dir is deleted at JVM exit. */
+  private[graft] def saltedLandingDir(spark: SparkSession, query: String, sfDir: String): String = {
+    val root = new Path(graft.warehouse.Warehouse.cacheRoot)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val run = fs.makeQualified(new Path(root, s"run-${spark.sparkContext.applicationId}"))
+    fs.mkdirs(run)
+    fs.deleteOnExit(run)
+    s"$run/$query-${sfDir.replaceAll("[^A-Za-z0-9.]+", "_")}"
+  }
 
   /** The two recall denominators every retrieval eval reports
     * (q99/q104/q117): label-BLOCKED exact truth (measures recall within

@@ -16,9 +16,7 @@ object Verify {
     // (scale spot-checks on big local corpora; the driver passes 2 args
     // and gets the full registry as before)
     val only = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Graft.session(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession()
     val queries = SparkEntry.queries.toSeq.filter { case (name, _) => only.forall(_.contains(name)) }
     val errors = dump(spark, sfDir, outDir, queries)
     // Expose the materialized warehouse (codebooks, merge rules) to the

@@ -845,7 +845,7 @@ object Warehouse {
     memo.toMap
   }
 
-  private def cacheRoot: String =
+  private[graft] def cacheRoot: String =
     sys.props.get("graft.wh.cache")
       .orElse(sys.env.get("SPARK_GRAFT_WH_CACHE"))
       .getOrElse("target/graft-warehouse")

@@ -1,6 +1,8 @@
-package graft
+package graft.gates
 
 import org.apache.spark.sql.functions._
+
+import graft.{Graft, Measure}
 import graft.vector.Similarity
 
 /** Stress the LIFTED IVF cell cap (r14 verdict task 4): a synthetic
@@ -18,9 +20,10 @@ import graft.vector.Similarity
   *  4. an executed end-to-end two-level assignment of a small batch
   *     under the cap-sized codebook (correct cell count, sane wall).
   *
-  * Usage: `CellCapStress [ncells] [dim] [nvecs]` (defaults 65536, 64,
-  * 20000). Deterministic synthetic data (hash-derived), no corpus
-  * needed. Results pinned in BASELINE.md §"65536-cell cap". */
+  * Usage: `sbt "Test/runMain graft.gates.CellCapStress [ncells] [dim] [nvecs]"`
+  * (defaults 65536, 64, 20000). Deterministic synthetic data
+  * (hash-derived), no corpus needed. Results pinned in BASELINE.md
+  * §"65536-cell cap". */
 object CellCapStress {
   private def h(i: Long): Long = {
     var x = i * 0x9E3779B97F4A7C15L
@@ -35,9 +38,7 @@ object CellCapStress {
     val ncells = if (args.length > 0) args(0).toInt else 65536
     val dim = if (args.length > 1) args(1).toInt else 64
     val nvecs = if (args.length > 2) args(2).toInt else 20000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Graft.session(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession()
     import spark.implicits._
 
     def heapUsed(): Long = {
@@ -55,17 +56,13 @@ object CellCapStress {
 
     // 1. collectCodebook: wall + retained heap
     val h0 = heapUsed()
-    val t1 = System.nanoTime()
-    val cents = Similarity.collectCodebook(codebook)
-    val collectSec = (System.nanoTime() - t1) / 1e9
+    val (cents, collectSec) = Measure.timed(Similarity.collectCodebook(codebook))
     val h1 = heapUsed()
     println(f"[capstress] collectCodebook: $ncells cells in $collectSec%.2f s, " +
       f"retained ~${(h1 - h0) / 1024 / 1024} MB driver heap")
 
     // 2. driver-side super derivation (supersFor's artifact-less path)
-    val t2 = System.nanoTime()
-    val (supers, cellToSuper) = Similarity.trainSuperCells(cents.toSeq)
-    val trainSec = (System.nanoTime() - t2) / 1e9
+    val ((supers, cellToSuper), trainSec) = Measure.timed(Similarity.trainSuperCells(cents.toSeq))
     println(f"[capstress] trainSuperCells: ${supers.length} supers over $ncells " +
       f"cells in $trainSec%.2f s (single-threaded driver)")
     require(supers.length == math.round(math.sqrt(ncells.toDouble)).toInt,
@@ -78,18 +75,17 @@ object CellCapStress {
       .as[Long].map { i =>
         (i, vec(-i - 1, dim).map(_.toFloat).toArray, (i % 10).toInt)
       }.toDF("vec_id", "embedding", "label")
-    val t3 = System.nanoTime()
-    val assigned = Similarity.cellAssignmentsTwoLevel(batch, codebook, sc, mp)
-    val planStr = assigned.queryExecution.executedPlan.toString
-    val planSec = (System.nanoTime() - t3) / 1e9
+    val ((assigned, planStr), planSec) = Measure.timed {
+      val assigned = Similarity.cellAssignmentsTwoLevel(batch, codebook, sc, mp)
+      (assigned, assigned.queryExecution.executedPlan.toString)
+    }
     println(f"[capstress] two-level plan built in $planSec%.2f s, " +
       f"plan string ${planStr.length / 1024} KB " +
       f"(flat plan would embed all $ncells centroids as literals)")
-    val t4 = System.nanoTime()
-    val n = assigned.count()
-    val distinctCells = assigned.select("cell").distinct().count()
+    val ((n, distinctCells), execSec) =
+      Measure.timed((assigned.count(), assigned.select("cell").distinct().count()))
     println(f"[capstress] executed: $n assignments over $distinctCells distinct " +
-      f"cells in ${(System.nanoTime() - t4) / 1e9}%.2f s ($nvecs vecs x " +
+      f"cells in $execSec%.2f s ($nvecs vecs x " +
       f"~${supers.length + Similarity.SuperProbe * ncells / supers.length} dots/vec " +
       f"vs $ncells flat)")
     require(n == nvecs, "every vector must get exactly one rn=1 cell")

@@ -1,7 +1,8 @@
-package graft
+package graft.gates
 
 import org.apache.spark.sql.functions._
 
+import graft.{Graft, Measure, Tables}
 import graft.sources.Ingest
 import graft.streaming.StreamErasure
 
@@ -12,13 +13,12 @@ import graft.streaming.StreamErasure
   * skipped while cumulative shrink < [[StreamErasure.BloomRebuildShrinkPct]])
   * and in eager mode (shrinkPct = 0, the pre-r12 per-batch rebuild) —
   * so "per-batch cost decoupled from index size" is a measured number
-  * at each corpus scale, not scaladoc. Usage: `ErasureProbe [sfDir]`. */
+  * at each corpus scale, not scaladoc. Usage:
+  * `sbt "Test/runMain graft.gates.ErasureProbe [sfDir]"` (default target/sf1). */
 object ErasureProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/repo/target/sf1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Graft.session(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = if (args.length > 0) args(0) else "target/sf1"
+    val spark = Graft.localSession()
     val docs = graft.Par.fanOut(Tables.documents(spark, sfDir))
       .select(col("doc_id"), col("text"))
     println(s"[erasure] corpus $sfDir: ${docs.count()} docs")
@@ -45,13 +45,10 @@ object ErasureProbe {
       val times = (0 until 10).map { b =>
         import spark.implicits._
         val victims = (0 until 10).map(i => b * 1000L + i * 10L + 1L).toDF("key")
-        val t0 = System.nanoTime()
-        StreamErasure.mergeBatch(spark, victims, b.toLong, root,
-          bloomRebuildShrinkPct = pct)
-        (System.nanoTime() - t0) / 1e9
+        Measure.seconds(StreamErasure.mergeBatch(spark, victims, b.toLong, root,
+          bloomRebuildShrinkPct = pct))
       }
-      val sorted = times.sorted
-      println(f"[erasure] $label: median ${sorted(times.size / 2)}%.2f s " +
+      println(f"[erasure] $label: median ${Measure.median(times)}%.2f s " +
         f"total ${times.sum}%.1f s (10 batches x 10 victims)")
     }
     run(s"deferred(pct=${StreamErasure.BloomRebuildShrinkPct})",

@@ -1,7 +1,9 @@
-package graft
+package graft.gates
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.{Graft, Measure, Tables}
 
 /** Cross-scale WALL-CLOCK stress for the linear text family — the
   * measured companion to the per-SF oracle gates: the same operators
@@ -28,34 +30,25 @@ import org.apache.spark.sql.functions._
   * deliberately out of scope at sf10, exactly as they would be
   * sampled in production.
   *
-  * Usage: `runMain graft.ScaleStress [sfDir] [runs]`
-  * (default /root/repo/target/sf10, 3). Prints one line per op with
-  * cold + post-cold median. */
+  * Usage: `sbt "Test/runMain graft.gates.ScaleStress [sfDir] [runs]"`
+  * (default target/sf10, 3). Prints one line per op with cold +
+  * post-cold median. */
 object ScaleStress {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/repo/target/sf10"
+    val sfDir = if (args.length > 0) args(0) else "target/sf10"
     val runs = if (args.length > 1) args(1).toInt else 3
     val vectorOnly = args.length > 2 && args(2) == "vector-only"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Graft.session(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession()
     val tmp = java.nio.file.Files.createTempDirectory("scale_stress").toString
 
     def land(name: String)(df: => DataFrame): DataFrame = {
-      val t0 = System.nanoTime()
-      graft.sources.Ingest.overwriteSwap(spark, df, s"$tmp/$name")
-      println(f"[scale] state:$name ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      val sec = Measure.seconds(graft.sources.Ingest.overwriteSwap(spark, df, s"$tmp/$name"))
+      println(f"[scale] state:$name $sec%.2f s")
       spark.read.parquet(s"$tmp/$name")
     }
     def time(label: String)(df: => DataFrame): Unit = {
-      val times = (1 to runs).map { _ =>
-        Graft.releaseLeases(); spark.catalog.clearCache(); System.gc()
-        val t0 = System.nanoTime()
-        df.write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val steady = times.drop(1).sorted.apply((runs - 1) / 2)
-      println(f"[scale] $label: cold ${times.head}%.2f s steady-median $steady%.2f s")
+      val times = Measure.samples(spark, runs)(Measure.noop(df))
+      println(f"[scale] $label: cold ${times.head}%.2f s steady-median ${Measure.steadyMedian(times)}%.2f s")
     }
 
     // fanOut mirrors every registered query's read path: these corpora

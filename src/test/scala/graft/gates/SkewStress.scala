@@ -1,6 +1,8 @@
-package graft
+package graft.gates
 
 import org.apache.spark.sql.functions._
+
+import graft.{Graft, Measure}
 
 /** Planted-skew WALL-CLOCK stress for the scrub's dup-marking join —
   * the measured companion to SkewPlantSpec's deterministic placement
@@ -16,7 +18,7 @@ import org.apache.spark.sql.functions._
   * either variant — SkewJoin's audit salts only the audited keys), so
   * the delta between the two numbers IS the skew cost.
   *
-  * Usage: `runMain graft.SkewStress [nPlant] [nBackground] [runs]`
+  * Usage: `sbt "Test/runMain graft.gates.SkewStress [nPlant] [nBackground] [runs]"`
   * (defaults 2,000,000 / 100,000 / 4). Prints one line per variant
   * with the post-cold median — the BASELINE.md §planted-skew row. */
 object SkewStress {
@@ -24,9 +26,7 @@ object SkewStress {
     val nPlant = if (args.length > 0) args(0).toLong else 2000000L
     val nBg = if (args.length > 1) args(1).toLong else 100000L
     val runs = if (args.length > 2) args(2).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Graft.session(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession()
 
     val boiler = "terms of service apply to all content herein forever and ever"
     val docs = spark.range(nPlant)
@@ -49,15 +49,14 @@ object SkewStress {
         .select(col("doc_id"), col("pos"))
     }
 
+    // no Measure.teardown between runs: its clearCache would drop the
+    // persisted `grams` every variant reads
     def time(label: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
       val times = (1 to runs).map { _ =>
         Graft.releaseLeases(); System.gc()
-        val t0 = System.nanoTime()
-        df.write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
+        Measure.seconds(Measure.noop(df))
       }
-      val steady = times.drop(1).sorted.apply((runs - 1) / 2)
-      println(f"[skew-stress] $label: cold ${times.head}%.2f s steady-median $steady%.2f s" +
+      println(f"[skew-stress] $label: cold ${times.head}%.2f s steady-median ${Measure.steadyMedian(times)}%.2f s" +
         f" (plant=$nPlant bg=$nBg grams=$nGrams)")
     }
 

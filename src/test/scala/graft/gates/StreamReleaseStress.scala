@@ -1,6 +1,8 @@
-package graft
+package graft.gates
 
 import org.apache.spark.sql.functions._
+
+import graft.{Graft, Measure, Tables}
 
 /** sf10 gate for [[graft.streaming.StreamRelease]]'s GROUP APPEND LAW
   * (r14 verdict task 6): the maintained exact-duplicate group state
@@ -15,16 +17,14 @@ import org.apache.spark.sql.functions._
   * histogram so the run records that large groups were present — an
   * equality over singleton groups would be vacuously easy.
   *
-  * Usage: `StreamReleaseStress [sfDir] [nBatches]` (defaults
-  * target/sf10, 5). Prints one summary line per check; exits nonzero
+  * Usage: `sbt "Test/runMain graft.gates.StreamReleaseStress [sfDir] [nBatches]"`
+  * (defaults target/sf10, 5). Prints one summary line per check; exits nonzero
   * on any violation. */
 object StreamReleaseStress {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "target/sf10"
     val nBatches = if (args.length > 1) args(1).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Graft.session(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession()
 
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("text"))
@@ -35,14 +35,13 @@ object StreamReleaseStress {
     val state = java.nio.file.Files.createTempDirectory("srel-stress").toString
     println(s"[stress] state=$state corpus=$sfDir batches=$nBatches")
 
-    val t0 = System.nanoTime()
-    (0 until nBatches).foreach { b =>
-      val tb = System.nanoTime()
+    val ingestSec = Measure.seconds((0 until nBatches).foreach { b =>
       val batch = docs.where(col("doc_id") >= b * width && col("doc_id") < (b + 1) * width)
-      graft.streaming.StreamRelease.mergeBatch(spark, batch, b.toLong, state, mixture)
-      println(f"[stress] batch $b merged in ${(System.nanoTime() - tb) / 1e9}%.1f s")
-    }
-    println(f"[stress] total ingest ${(System.nanoTime() - t0) / 1e9}%.1f s")
+      val sec = Measure.seconds(
+        graft.streaming.StreamRelease.mergeBatch(spark, batch, b.toLong, state, mixture))
+      println(f"[stress] batch $b merged in $sec%.1f s")
+    })
+    println(f"[stress] total ingest $ingestSec%.1f s")
 
     // ---- the group append law ----
     val maintained = spark.read.parquet(s"$state/reps")

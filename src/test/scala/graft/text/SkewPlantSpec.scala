@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions._
   *     control necessarily puts ALL occurrences of a hot gram in one
   *     group (the straggler/OOM that kills the join at 100 TB).
   * Wall-clock numbers for the same comparison at stress scale come
-  * from [[graft.SkewStress]] (BASELINE.md §planted-skew). */
+  * from [[graft.gates.SkewStress]], run with
+  * `sbt "Test/runMain graft.gates.SkewStress"` (BASELINE.md §planted-skew). */
 class SkewPlantSpec extends SparkSpec {
   import spark.implicits._
 

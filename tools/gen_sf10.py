@@ -2,7 +2,8 @@
 """Generate a deterministic sf10-scale corpus (100x the bench sf0.1:
 500,000 docs / 200,000 x 64 vecs, plus events replicated at 100x — the
 r15 addition that lets the sessionize/attribution family gate here)
-under target/sf10. This feeds graft.ScaleStress (the linear text/vector
+under target/sf10. This feeds graft.gates.ScaleStress, run with
+`sbt "Test/runMain graft.gates.ScaleStress target/sf10"` (the linear text/vector
 family measured across sf0.1 -> sf1 -> sf10) and the sf10 oracle gates;
 the quadratic eval-truth artifacts (knn_exact etc.) are deliberately not
 built at this scale, so no star schema and no full warehouse.
