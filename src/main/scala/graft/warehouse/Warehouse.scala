@@ -145,8 +145,7 @@ object Warehouse {
   /** IVF codebook for the corpus embeddings: deterministic sampled
     * spherical k-means ([[graft.vector.Similarity.trainIvfCentroids]]),
     * trained ONCE per corpus — retrieval queries read it instead of
-    * re-running Lloyd iterations per query. Corpora without an
-    * embeddings table get an empty codebook (searches return no rows).
+    * re-running Lloyd iterations per query.
     *
     * ncells SCALES with the corpus (target cell width ~[[IvfCellWidth]]
     * vectors, floor 16, cap [[IvfCellCap]]): every blocked consumer —
@@ -157,18 +156,10 @@ object Warehouse {
     * vectors) the formula resolves to the floor 16, the historical
     * value. */
   def buildIvfCodebook(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = new Path(s"$sfDir/embeddings.parquet")
-    val cents =
-      if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) Seq.empty
-      else {
-        val e = Tables.embeddings(spark, sfDir)
-        val ncells = math.max(16L, math.min(IvfCellCap, e.count() / IvfCellWidth)).toInt
-        graft.vector.Similarity.trainIvfCentroids(
-          e, ncells = ncells, iters = 3, sampleMod = 4)
-      }
-    // repartition(1): an empty LocalRelation writes zero part files
-    // (only _SUCCESS), leaving nothing to infer the schema from on read
-    graft.vector.Similarity.codebookDf(spark, cents).repartition(1)
+    val e = Tables.embeddings(spark, sfDir)
+    val ncells = math.max(16L, math.min(IvfCellCap, e.count() / IvfCellWidth)).toInt
+    graft.vector.Similarity.codebookDf(spark, graft.vector.Similarity.trainIvfCentroids(
+      e, ncells = ncells, iters = 3, sampleMod = 4)).repartition(1)
   }
 
   /** Target vectors per IVF cell (see [[buildIvfCodebook]]). */
@@ -205,10 +196,6 @@ object Warehouse {
     * query. Queries project keepers/sizes from this table. */
   def buildNearDupClusters(spark: SparkSession, sfDir: String,
                            pairs: DataFrame): DataFrame = {
-    val p = new Path(s"$sfDir/documents.parquet")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return spark.range(0).select(col("id").as("doc_id"), col("id").as("cluster_id"))
-        .repartition(1)
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"))
     graft.operators.Components.minLabel(
         docs.select(col("doc_id").as("id")),
@@ -216,44 +203,26 @@ object Warehouse {
       .select(col("id").as("doc_id"), col("component").as("cluster_id"))
   }
 
-  /** Empty (doc_id, band, band_key) band table — the no-documents shape
-    * of the two band-signature artifacts below. */
-  private def emptyBands(spark: SparkSession): DataFrame =
-    spark.range(0).select(col("id").as("doc_id"), col("id").cast("int").as("band"),
-      col("id").cast("string").as("band_key")).repartition(1)
-
-  private def emptyGroups(spark: SparkSession): DataFrame =
-    spark.range(0).select(col("id").as("doc_id"), col("id").as("th"),
-      col("id").as("rep")).repartition(1)
-
   /** Exact-duplicate group table (doc_id, th, rep) over the FULL corpus
     * ([[graft.text.TextDedup.exactGroups]]) — the stage-1 dedup state
     * the banding artifacts derive from (r14: exact dedup BEFORE
     * near-dup, the RefinedWeb ordering): `band_signatures` bands one
     * rep per group, `neardup_pairs` recovers intra-group relations as
     * star edges through this table. */
-  def buildExactReps(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = new Path(s"$sfDir/documents.parquet")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return emptyGroups(spark)
+  def buildExactReps(spark: SparkSession, sfDir: String): DataFrame =
     graft.text.TextDedup.exactGroups(
       Tables.documents(spark, sfDir).select(col("doc_id"), col("text")))
-  }
 
   /** [[buildExactReps]] over the BASE slice (doc_id % 10 !=
     * [[HoldoutMod]]) — the corpus-side group table the incremental
     * near-dup (q76) and [[graft.streaming.StreamRelease]] probe for
     * exact hits (built from the base slice directly: a group's rep is
     * the min id WITHIN the population the probe claims to know). */
-  def buildExactRepsBase(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = new Path(s"$sfDir/documents.parquet")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return emptyGroups(spark)
+  def buildExactRepsBase(spark: SparkSession, sfDir: String): DataFrame =
     graft.text.TextDedup.exactGroups(
       Tables.documents(spark, sfDir)
         .where(pmod(col("doc_id"), lit(10)) =!= HoldoutMod)
         .select(col("doc_id"), col("text")))
-  }
 
   /** Capped MinHash-LSH band-signature table (doc_id, band, band_key)
     * over the FULL corpus — the parquet twin of what the pair build
@@ -267,11 +236,8 @@ object Warehouse {
     * WarehouseMaintenanceSpec pins append ≡ cold rebuild). */
   def buildBandSignatures(spark: SparkSession, sfDir: String,
                           groups: DataFrame): DataFrame = {
-    val p = new Path(s"$sfDir/documents.parquet")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return emptyBands(spark)
     // one REP per exact group bands (r14 — the landed `exact_reps`
-    // table passed in, the registry dependency pattern): a boilerplate
+    // table passed in): a boilerplate
     // mega-group holds one band slot, so the occupancy cap stops
     // discarding the distinct near-dup tail behind it
     graft.text.TextDedup.bandSignatures(
@@ -287,33 +253,24 @@ object Warehouse {
     * filter of the full table: the occupancy cap is a window over the
     * banded population, so cap-then-filter ≠ filter-then-cap). */
   def buildBandSignaturesBase(spark: SparkSession, sfDir: String,
-                              groups: DataFrame): DataFrame = {
-    val p = new Path(s"$sfDir/documents.parquet")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return emptyBands(spark)
+                              groups: DataFrame): DataFrame =
     graft.text.TextDedup.bandSignatures(
       graft.text.TextDedup.shingled(graft.text.TextDedup.repDocs(
         Tables.documents(spark, sfDir)
           .where(pmod(col("doc_id"), lit(10)) =!= HoldoutMod)
           .select(col("doc_id"), col("text")), groups)),
       graft.text.TextDedup.LshMaxBucket)
-  }
 
   /** The MinHash-LSH near-dup PAIR table (doc_a, doc_b, jaccard) — the
     * duplicate graph's edge list, materialized once per corpus like the
     * clusters built from it: every graph analytic (closure q35,
     * centrality q105, triangle density q107) reads this table instead
     * of re-running shingle → signature → band join per query. The
-    * candidate self-join reads the `band_signatures` artifact LANDED
-    * just above it in the registry (the ivf_assign dependency pattern);
+    * candidate self-join reads the landed `band_signatures` artifact;
     * only the exact-jaccard verify re-shingles, and only surviving
     * candidates are intersected. */
   def buildNearDupPairs(spark: SparkSession, sfDir: String,
                         bands: DataFrame, groups: DataFrame): DataFrame = {
-    val p = new Path(s"$sfDir/documents.parquet")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return spark.range(0).select(col("id").as("doc_a"), col("id").as("doc_b"),
-        col("id").cast("double").as("jaccard")).repartition(1)
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
     // rep-level verified pairs (bands hold reps only since r14) UNION
     // the intra-group star edges — the duplicate graph's spanning edge
@@ -333,12 +290,8 @@ object Warehouse {
     * per-vector data, these two are the literal-sized artifacts). */
   def buildPqCodebooks(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val p = new Path(s"$sfDir/embeddings.parquet")
-    val books =
-      if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-        Seq.empty[Seq[Seq[Double]]]
-      else graft.vector.ProductQuant.trainCodebooks(
-        Tables.embeddings(spark, sfDir), dim = 64, m = 4, ksub = 16)
+    val books = graft.vector.ProductQuant.trainCodebooks(
+      Tables.embeddings(spark, sfDir), dim = 64, m = 4, ksub = 16)
     books.zipWithIndex.flatMap { case (book, s) =>
       book.zipWithIndex.map { case (c, j) => (s, j, c) }
     }.toDF("subspace", "code", "cv").repartition(1)
@@ -357,21 +310,14 @@ object Warehouse {
     * while the codebook holds ≤ crossover cells (the test SFs),
     * two-level super-cell ranking above it — O(√ncells) dots/vector,
     * the change that let [[IvfCellCap]] lift off 4096. The super-cell
-    * artifacts are LANDED before this table (registry order) and passed
-    * in, so the assignment provably derives from the same super layer
-    * its probers read. */
+    * artifacts are declared inputs, landed and passed in, so the
+    * assignment provably derives from the same super layer its probers
+    * read. */
   def buildIvfAssign(spark: SparkSession, sfDir: String, codebook: DataFrame,
-                     supercells: DataFrame, superMap: DataFrame): DataFrame = {
-    val p = new Path(s"$sfDir/embeddings.parquet")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      // repartition(1): see buildIvfCodebook — an empty write must still
-      // land one part file or the read-back has no schema to infer
-      return spark.range(0).select(col("id").as("vec_id"), col("id").as("cell"),
-        col("id").cast("int").as("rn")).repartition(1)
+                     supercells: DataFrame, superMap: DataFrame): DataFrame =
     graft.vector.Similarity.cellRankAuto(Tables.embeddings(spark, sfDir), codebook,
       probes = IvfAssignMaxRank, supercells = Some(supercells),
       superMap = Some(superMap))
-  }
 
   /** PQ codes (vec_id, codes array<int>) under the trained codebooks —
     * the compressed per-vector index state (m bytes/vector; the only
@@ -380,11 +326,7 @@ object Warehouse {
     * inside every query. */
   def buildPqCodes(spark: SparkSession, sfDir: String,
                    books: Seq[Seq[Seq[Double]]]): DataFrame = {
-    val p = new Path(s"$sfDir/embeddings.parquet")
-    if (books.isEmpty ||
-        !p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return spark.range(0).select(col("id").as("vec_id"),
-        array().cast("array<int>").as("codes")).repartition(1)
+    if (books.isEmpty) return emptyArtifact(spark, "pq_codes")
     graft.vector.ProductQuant.encode(Tables.embeddings(spark, sfDir), dim = 64, books)
   }
 
@@ -399,10 +341,7 @@ object Warehouse {
   def buildIvfSuperCells(spark: SparkSession, codebook: DataFrame): DataFrame = {
     val (supers, m) = graft.vector.Similarity.trainSuperCells(
       graft.vector.Similarity.collectCodebook(codebook).toSeq)
-    if (supers.isEmpty)
-      return spark.range(0).select(col("id").as("sid"),
-        array().cast("array<double>").as("sv"), col("id").cast("double").as("snrm"))
-        .repartition(1)
+    if (supers.isEmpty) return emptyArtifact(spark, "ivf_supercells")
     graft.vector.Similarity.superCellTables(spark, supers, m)._1.repartition(1)
   }
 
@@ -412,9 +351,7 @@ object Warehouse {
   def buildIvfSuperMap(spark: SparkSession, codebook: DataFrame): DataFrame = {
     val (supers, m) = graft.vector.Similarity.trainSuperCells(
       graft.vector.Similarity.collectCodebook(codebook).toSeq)
-    if (supers.isEmpty)
-      return spark.range(0).select(col("id").as("cid"), col("id").as("sid"))
-        .repartition(1)
+    if (supers.isEmpty) return emptyArtifact(spark, "ivf_super_map")
     graft.vector.Similarity.superCellTables(spark, supers, m)._2.repartition(1)
   }
 
@@ -424,24 +361,8 @@ object Warehouse {
     * build beside the assignment so the full (q125) and incremental
     * (q137) miners score against identical neighborhoods. */
   def buildMarginDenoms(spark: SparkSession, sfDir: String,
-                        assign: DataFrame): DataFrame = {
-    val p = new Path(s"$sfDir/embeddings.parquet")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return spark.range(0).select(col("id"), col("id").as("den")).repartition(1)
+                        assign: DataFrame): DataFrame =
     graft.vector.Similarity.marginDenoms(Tables.embeddings(spark, sfDir), assign)
-  }
-
-  /** Empty (qid, rank, nid, cosine) ranked list — the shared shape of
-    * the three retrieval artifacts below for corpora without an
-    * embeddings table. */
-  private def emptyRankedList(spark: SparkSession): DataFrame =
-    spark.range(0).select(col("id").as("qid"), col("id").cast("int").as("rank"),
-      col("id").as("nid"), col("id").cast("double").as("cosine")).repartition(1)
-
-  private def hasEmbeddings(spark: SparkSession, sfDir: String): Boolean = {
-    val p = new Path(s"$sfDir/embeddings.parquet")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
 
   /** Label-blocked exact-kNN ground truth (qid, rank, nid, cosine) —
     * the single most expensive corpus derivation in the registry
@@ -452,37 +373,29 @@ object Warehouse {
     * into bounded parquet joins — the q29/q44 discipline applied to the
     * eval harness itself. At 100 TB the truth table is a nightly
     * build beside the index artifacts; evals are joins against it. */
-  def buildKnnExact(spark: SparkSession, sfDir: String): DataFrame = {
-    if (!hasEmbeddings(spark, sfDir)) return emptyRankedList(spark)
+  def buildKnnExact(spark: SparkSession, sfDir: String): DataFrame =
     graft.vector.Similarity.knnBruteForce(Tables.embeddings(spark, sfDir))
-  }
 
   /** Hyperplane-LSH top-k list (qid, rank, nid, cosine) — the searched
     * index output, same build-once argument as [[buildKnnExact]]: five
     * queries (q18/q102/q104/q114/q117/q118/q120) re-ran the bucketed
     * search per query; the ranked list is deterministic corpus state. */
-  def buildAnnLshTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    if (!hasEmbeddings(spark, sfDir)) return emptyRankedList(spark)
+  def buildAnnLshTopk(spark: SparkSession, sfDir: String): DataFrame =
     graft.vector.Similarity.annLsh(Tables.embeddings(spark, sfDir))
-  }
 
   /** Trained-IVF top-k list (qid, rank, nid, cosine) under the landed
     * ivf_assign — the searched-index sibling of [[buildAnnLshTopk]]. */
   def buildAnnIvfTopk(spark: SparkSession, sfDir: String,
-                      assign: DataFrame): DataFrame = {
-    if (!hasEmbeddings(spark, sfDir)) return emptyRankedList(spark)
+                      assign: DataFrame): DataFrame =
     graft.vector.Similarity.annIvfWithAssign(Tables.embeddings(spark, sfDir), assign)
-  }
 
   /** Sampled-GLOBAL exact top-k (qid, rank, nid, cosine) — ground
     * truth under the protocol that survives corpus scale (hash-sampled
     * queries × streamed corpus, sample broadcast): the second
     * denominator every recall eval reports beside the label-blocked
     * truth. Corpus state like [[buildKnnExact]]. */
-  def buildKnnGlobalSampled(spark: SparkSession, sfDir: String): DataFrame = {
-    if (!hasEmbeddings(spark, sfDir)) return emptyRankedList(spark)
+  def buildKnnGlobalSampled(spark: SparkSession, sfDir: String): DataFrame =
     graft.vector.Similarity.knnGlobalSampled(Tables.embeddings(spark, sfDir))
-  }
 
   /** Fixed-point label-centroid SUM state (label, pos, s, n) of the
     * BASE corpus (vec_id % 10 != [[HoldoutMod]]) — the maintained
@@ -491,15 +404,10 @@ object Warehouse {
     * sum-mergeable under appends (WarehouseMaintenanceSpec pins the
     * law), so scoring an arriving batch never re-aggregates the
     * corpus. */
-  def buildLabelCentroidSumsBase(spark: SparkSession, sfDir: String): DataFrame = {
-    if (!hasEmbeddings(spark, sfDir))
-      return spark.range(0).select(col("id").cast("int").as("label"),
-        col("id").cast("int").as("pos"), col("id").as("s"), col("id").as("n"))
-        .repartition(1)
+  def buildLabelCentroidSumsBase(spark: SparkSession, sfDir: String): DataFrame =
     graft.vector.Similarity.labelCentroidSums(
       Tables.embeddings(spark, sfDir)
         .where(pmod(col("vec_id"), lit(10)) =!= HoldoutMod))
-  }
 
   /** Corpus gram-occurrence table (doc_id, pos, h) at the ExactSubstr
     * resolution (8 tokens) — the distributed suffix-array stand-in,
@@ -507,14 +415,9 @@ object Warehouse {
     * analytic (scrub q122, incremental scrub q123, source overlap
     * q124) reads this table instead of re-hashing the corpus's grams
     * per query. */
-  def buildGramOccurrences(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = new Path(s"$sfDir/documents.parquet")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return spark.range(0).select(col("id").as("doc_id"), col("id").as("pos"),
-        col("id").as("h")).repartition(1)
+  def buildGramOccurrences(spark: SparkSession, sfDir: String): DataFrame =
     graft.text.SegmentDedup.gramOccurrences(
       Tables.documents(spark, sfDir).select(col("doc_id"), col("text")))
-  }
 
   /** The canonical ingestion-simulation split shared by every
     * incremental query (q76/q77/q123/q137): the landed, immutable
@@ -536,61 +439,44 @@ object Warehouse {
   /** Serialized sketch bloom fronting [[buildGramIndexBase]] — the
     * map-side pre-filter for the index probe (built once when the index
     * lands, exactly the artifact the operator scaladoc promises). One
-    * row: (bf BINARY, n_items, fpp_micro). An empty index gets a
+    * row: (bf BINARY, n_items, fpp_micro). An empty index gets an empty
     * 1-capacity bloom (still a valid filter; nothing passes that the
-    * semi-join wouldn't drop). */
+    * semi-join wouldn't drop) — built directly, because Spark's
+    * `stat.bloomFilter` throws on empty input. */
   def buildGramBloomBase(spark: SparkSession, index: DataFrame): DataFrame = {
     import spark.implicits._
     val n = index.count()
-    val bytes = graft.operators.BloomPrune.sketchBloomBytes(
-      index, "h", math.max(n, 1L), 0.01)
+    val bytes =
+      if (n == 0) graft.operators.BloomPrune.serialize(
+        org.apache.spark.util.sketch.BloomFilter.create(1L, 0.01))
+      else graft.operators.BloomPrune.sketchBloomBytes(index, "h", n, 0.01)
     Seq((bytes, n, 10000L)).toDF("bf", "n_items", "fpp_micro").repartition(1)
   }
 
   /** Trained BPE merge table (rank, left, right, pair_freq) — the
     * tokenizer is corpus state exactly like the IVF/PQ codebooks:
-    * trained once per corpus build, read by every encode query. Corpora
-    * without a documents table get an empty table (encode emits no
-    * rows). */
-  def buildBpeMerges(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val p = new Path(s"$sfDir/documents.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val table =
-      if (!fs.exists(p))
-        Seq.empty[(Int, String, String, Long)].toDF("rank", "left", "right", "pair_freq")
-      else graft.text.Bpe.mergeTable(
-        Tables.documents(spark, sfDir).select(col("doc_id"), col("text")), 12)
-    table.repartition(1)
-  }
+    * trained once per corpus build, read by every encode query. */
+  def buildBpeMerges(spark: SparkSession, sfDir: String): DataFrame =
+    graft.text.Bpe.mergeTable(
+      Tables.documents(spark, sfDir).select(col("doc_id"), col("text")), 12).repartition(1)
 
   /** Word co-occurrence edge list (tok_a, tok_b, w) — corpus state by
     * the neardup_pairs argument: vocabulary-bounded, derived once,
     * shared by the PMI collocations (q93) and TextRank (q101) graph
     * analytics instead of each re-deriving the same edges per query. */
-  def buildCooccurEdges(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = new Path(s"$sfDir/documents.parquet")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return spark.range(0).select(col("id").cast("string").as("tok_a"),
-        col("id").cast("string").as("tok_b"), col("id").as("w")).repartition(1)
+  def buildCooccurEdges(spark: SparkSession, sfDir: String): DataFrame =
     graft.text.Cooccur.pairCounts(
       Tables.documents(spark, sfDir).select(col("doc_id"), col("text")))
-  }
 
   /** BM25 inverted index (tok, doc_id, tf) — sparse-retrieval corpus
     * state beside the dense ann_* artifacts: every BM25 query reads
     * this instead of re-tokenizing `documents`. Landed term-sorted in
     * one file so a query-term filter prunes by parquet row-group
     * stats (the demo-scale stand-in for bucketing by `tok`). */
-  def buildBm25Postings(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = new Path(s"$sfDir/documents.parquet")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return spark.range(0).select(col("id").cast("string").as("tok"),
-        col("id").as("doc_id"), col("id").as("tf")).repartition(1)
+  def buildBm25Postings(spark: SparkSession, sfDir: String): DataFrame =
     graft.text.TextAnalysis.bm25Postings(
         Tables.documents(spark, sfDir).select(col("doc_id"), col("text")))
       .repartition(1).sortWithinPartitions("tok", "doc_id")
-  }
 
   /** BM25 per-doc token lengths (doc_id, len) — derived from the
     * LANDED postings (Σ tf per doc), the length-normalization side of
@@ -605,58 +491,38 @@ object Warehouse {
     * broadcast-size ratio table the incremental scorer (q153) probes,
     * so scoring an arriving batch never re-reads the corpus. Counts
     * sum-merge under appends (WarehouseMaintenanceSpec pins the law). */
-  def buildDsirCounts(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = new Path(s"$sfDir/documents.parquet")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return spark.range(0).select(col("id").as("feat"),
-        col("id").as("cnt_r"), col("id").as("cnt_t")).repartition(1)
+  def buildDsirCounts(spark: SparkSession, sfDir: String): DataFrame =
     graft.text.Curation.dsirCounts(graft.text.Curation.dsirFeatures(
       Tables.documents(spark, sfDir)
         .where(pmod(col("doc_id"), lit(10)) =!= HoldoutMod)
         .select(col("doc_id"), col("text"), col("lang"))))
-  }
 
   /** Canonical hashed shingle sets (doc_id, hs ARRAY<BIGINT>) — the
     * shared exact-set-similarity artifact
     * ([[graft.text.TextDedup.hashedShingleSets]]): PPJoin (q32),
     * containment (q40) and dup-gram coverage (q82) read it instead of
     * re-shingling the corpus per query. */
-  def buildDocHashsets(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = new Path(s"$sfDir/documents.parquet")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return spark.range(0).select(col("id").as("doc_id"),
-        array().cast("array<bigint>").as("hs")).repartition(1)
+  def buildDocHashsets(spark: SparkSession, sfDir: String): DataFrame =
     graft.text.TextDedup.hashedShingleSets(
       Tables.documents(spark, sfDir).select(col("doc_id"), col("text")))
-  }
 
   /** Positional posting table (tok, doc_id, pos) — the phrase-query
     * artifact beside the tf-only bm25_postings (see
     * [[graft.text.InvertedIndex.tokenPositions]]); landed term-sorted
     * for row-group pruning. */
-  def buildTokenPositions(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = new Path(s"$sfDir/documents.parquet")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return spark.range(0).select(col("id").cast("string").as("tok"),
-        col("id").as("doc_id"), col("id").cast("int").as("pos")).repartition(1)
+  def buildTokenPositions(spark: SparkSession, sfDir: String): DataFrame =
     graft.text.InvertedIndex.tokenPositions(
         Tables.documents(spark, sfDir).select(col("doc_id"), col("text")))
       .repartition(1).sortWithinPartitions("tok", "doc_id", "pos")
-  }
 
   /** Composite document quality (doc_id, quality) — the keeper-policy
     * score ([[graft.text.TextAnalysis.compositeQuality]]), corpus
     * state like the clusters it ranks: derived once, read by every
     * keeper/curation analytic instead of re-flagging the corpus per
     * query. */
-  def buildDocQuality(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = new Path(s"$sfDir/documents.parquet")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return spark.range(0).select(col("id").as("doc_id"), col("id").as("quality"))
-        .repartition(1)
+  def buildDocQuality(spark: SparkSession, sfDir: String): DataFrame =
     graft.text.TextAnalysis.compositeQuality(
       Tables.documents(spark, sfDir).select(col("doc_id"), col("text")))
-  }
 
   /** Scrubbed RELEASE-SURVIVOR pool (doc_id, source, quality,
     * n_tokens, n_dup_tokens, kept_tokens, clean_text) — stages 1+2 of
@@ -675,29 +541,17 @@ object Warehouse {
     * [[graft.streaming.StreamRelease]], stream≡batch spec-gated). */
   def buildReleaseSurvivors(spark: SparkSession, sfDir: String,
                             grams: DataFrame, clusters: DataFrame,
-                            quality: DataFrame): DataFrame = {
-    val p = new Path(s"$sfDir/documents.parquet")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return spark.range(0).select(col("id").as("doc_id"),
-        lit("").as("source"), col("id").as("quality"),
-        col("id").as("n_tokens"), col("id").as("n_dup_tokens"),
-        col("id").as("kept_tokens"), lit("").as("clean_text")).repartition(1)
+                            quality: DataFrame): DataFrame =
     graft.pipeline.Release.survivors(
       Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("source"), col("text")),
       grams, clusters, quality)
-  }
 
   /** Unigram counts (tok, n) under the same tokenization — the PMI
     * denominator table beside [[buildCooccurEdges]]. */
-  def buildTokenUnigrams(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = new Path(s"$sfDir/documents.parquet")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return spark.range(0).select(col("id").cast("string").as("tok"),
-        col("id").as("n")).repartition(1)
+  def buildTokenUnigrams(spark: SparkSession, sfDir: String): DataFrame =
     graft.text.Cooccur.unigramCounts(
       Tables.documents(spark, sfDir).select(col("doc_id"), col("text")))
-  }
 
   /** The events stream laid out for date pruning: hive-partitioned by
     * `day` = to_date(ts) — the warehouse layout the reference's daily
@@ -707,16 +561,8 @@ object Warehouse {
     * partition ([[Ingest.appendPartitioned]]) without rewriting landed
     * days. At 100 TB this is the difference between scanning years and
     * scanning a week. */
-  def buildEventsByDay(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = new Path(s"$sfDir/events.parquet")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return spark.range(0).select(col("id").as("event_id"),
-        current_timestamp().as("ts"), col("id").as("user_id"),
-        col("id").cast("string").as("event_type"), col("id").cast("double").as("value"),
-        col("id").cast("string").as("props"), current_date().as("day"))
-        .repartition(1)
+  def buildEventsByDay(spark: SparkSession, sfDir: String): DataFrame =
     Tables.events(spark, sfDir).withColumn("day", to_date(col("ts")))
-  }
 
   /** fact_orders_created (process_orders_sqls.py:79-90): the first event
     * per order joined to the date dimension for the surrogate key. */
@@ -739,8 +585,9 @@ object Warehouse {
   // Materialized layer: build once per corpus, read parquet thereafter.
   // ---------------------------------------------------------------------
 
-  /** Bump whenever any builder/merge SEMANTIC changes — a stale cache
-    * would otherwise silently feed old results to the correctness gate.
+  /** The cache LAYOUT version (dir naming, marker scheme): bump it only
+    * when the cache format itself changes. A build-semantics change
+    * bumps its artifact's declared `version` instead ([[Artifact]]).
     * v2: + ivf_codebook table (embeddings joined the fingerprint).
     * v3: + bpe_merges table (documents joined the fingerprint).
     * v4: + ivf_assign and pq_codes (the per-vector index state — q29/q44
@@ -772,60 +619,168 @@ object Warehouse {
     *   rep-level verified pairs ∪ intra-group star edges. */
   private val CacheVersion = "v12"
 
-  /** Per-artifact build-recipe versions — bump ONE entry when that
-    * artifact's build semantics change, instead of bumping
-    * [[CacheVersion]] and re-landing the whole warehouse (r14: the
-    * selector/banding changes re-built all ~40 artifacts, 46 s at
-    * sf0.1 and hours at sf10, when only 3 had changed). Downstream
-    * artifacts re-land automatically: an artifact's on-disk stamp
-    * ([[artifactStamps]]) hashes its own version AND its dependencies'
-    * stamps, so a bump propagates through [[artifactDeps]] exactly as
-    * far as the build graph requires. Artifacts absent here are at
-    * version 1. [[CacheVersion]] remains the LAYOUT version (dir
-    * naming, marker scheme) — bump it only when the cache format
-    * itself changes. */
-  private val artifactVersions: Map[String, Int] = Map(
+  /** One warehouse artifact, declared once. Its build reads landed
+    * artifacts only through [[Build.in]], so `inputs` is the whole
+    * build graph: it orders the registry, feeds the stamps
+    * ([[artifactStamps]]) and bounds what the build may read.
+    *  - `source`: the corpus table the artifact derives from; when that
+    *    table is absent the artifact lands as `empty` without building.
+    *  - `empty`: the landed schema as DDL (WarehouseCacheSpec pins it
+    *    against a full build).
+    *  - `version`: the build recipe. Bump it when this artifact's build
+    *    semantics change instead of bumping [[CacheVersion]] and
+    *    re-landing the whole warehouse (r14: the selector/banding
+    *    changes re-built all ~40 artifacts, 46 s at sf0.1 and hours at
+    *    sf10, when only 3 had changed); the stamps carry the bump to
+    *    every transitive dependent and no further.
+    *  - `partitionBy`: lands the artifact hive-partitioned on that column
+    *    ([[Ingest.overwriteSwapPartitioned]]), so date-ranged readers
+    *    prune at the scan. */
+  private[graft] final case class Artifact(name: String, source: Option[String],
+      empty: String, inputs: Seq[String] = Nil, version: Int = 1,
+      partitionBy: Option[String] = None)(val build: Build => DataFrame)
+
+  /** What an artifact's build sees: the session, the corpus dir and its
+    * declared inputs. */
+  private[graft] final class Build(val spark: SparkSession, val sfDir: String,
+                                   dir: String, artifact: Artifact) {
+    /** A declared input, read from the cache dir; any other name throws. */
+    def in(input: String): DataFrame = {
+      require(artifact.inputs.contains(input), s"warehouse artifact " +
+        s"'${artifact.name}' reads '$input', which it does not declare as an input")
+      spark.read.parquet(s"$dir/$input")
+    }
+
+    /** Lands the first batch of a chained merge beside the artifact and
+      * reads it back: the nightly recipe swaps merge N's output in before
+      * merge N+1 reads it. */
+    def landBatch(df: DataFrame): DataFrame = {
+      Ingest.overwriteSwap(spark, df, s"$dir/${artifact.name}_b1")
+      spark.read.parquet(s"$dir/${artifact.name}_b1")
+    }
+  }
+
+  /** The registry in build order; throws unless every input is declared
+    * before its dependent. */
+  private[graft] def declare(artifacts: Artifact*): Seq[Artifact] = {
+    artifacts.foldLeft(Set.empty[String]) { (before, a) =>
+      val late = a.inputs.filterNot(before)
+      require(late.isEmpty, s"warehouse artifact '${a.name}' reads " +
+        s"${late.mkString(",")}, which is not declared before it")
+      before + a.name
+    }
+    artifacts
+  }
+
+  private val Documents = Some("documents")
+  private val Embeddings = Some("embeddings")
+  private val RankedList = "qid BIGINT, rank INT, nid BIGINT, cosine DOUBLE"
+  private val Groups = "doc_id BIGINT, th BIGINT, rep BIGINT"
+  private val Bands = "doc_id BIGINT, band INT, band_key STRING"
+
+  /** Every warehouse artifact of a corpus, in build order. */
+  private[graft] val registry: Seq[Artifact] = declare(
+    Artifact("dim_orders", None, ordersDimSchema.toDDL)(b => buildDimOrders(b.spark, b.sfDir)),
+    Artifact("dim_products", None, partsDimSchema.toDDL)(b =>
+      buildDimParts(b.spark, b.sfDir, b.landBatch)),
+    Artifact("dim_orders_2b", None, ordersDimSchema.toDDL)(b =>
+      buildDimOrdersTwoBatches(b.spark, b.sfDir, b.landBatch)),
+    Artifact("fact_orders", None, "order_id BIGINT, created_date_id STRING, " +
+      "created_time TIMESTAMP, first_status STRING, value DOUBLE")(b =>
+      buildFactOrders(b.spark, b.sfDir)),
+    Artifact("ivf_codebook", Embeddings, "cid BIGINT, cv ARRAY<DOUBLE>, cnrm DOUBLE")(b =>
+      buildIvfCodebook(b.spark, b.sfDir)),
+    // the super layer lands BEFORE the assignment (r14): above the
+    // crossover the assignment ranks through it, so it must read the
+    // same landed super tables its probers will
+    Artifact("ivf_supercells", None, "sid BIGINT, sv ARRAY<DOUBLE>, snrm DOUBLE",
+      Seq("ivf_codebook"))(b => buildIvfSuperCells(b.spark, b.in("ivf_codebook"))),
+    Artifact("ivf_super_map", None, "cid BIGINT, sid BIGINT", Seq("ivf_codebook"))(b =>
+      buildIvfSuperMap(b.spark, b.in("ivf_codebook"))),
+    Artifact("ivf_assign", Embeddings, "vec_id BIGINT, cell BIGINT, rn INT",
+      Seq("ivf_codebook", "ivf_supercells", "ivf_super_map"))(b =>
+      buildIvfAssign(b.spark, b.sfDir, b.in("ivf_codebook"), b.in("ivf_supercells"),
+        b.in("ivf_super_map"))),
+    Artifact("margin_denoms", Embeddings, "id BIGINT, den BIGINT", Seq("ivf_assign"))(b =>
+      buildMarginDenoms(b.spark, b.sfDir, b.in("ivf_assign"))),
+    // retrieval truth + searched-index lists: corpus state consumed
+    // by the eval queries (q99/q104/q117/q118) and the demos
+    // (q17/q18/q29) — built once, beside the index they evaluate
+    Artifact("label_centroid_sums_base", Embeddings,
+      "label INT, pos INT, s BIGINT, n BIGINT")(b =>
+      buildLabelCentroidSumsBase(b.spark, b.sfDir)),
+    Artifact("knn_exact", Embeddings, RankedList)(b => buildKnnExact(b.spark, b.sfDir)),
+    Artifact("knn_global_sampled", Embeddings, RankedList)(b =>
+      buildKnnGlobalSampled(b.spark, b.sfDir)),
     // v2: annLsh's bucket join salted (SkewJoin ×LshSalt — same rows,
     // same top-k; re-land so the cache reflects the shipped plan)
-    "ann_lsh_topk" -> 2)
+    Artifact("ann_lsh_topk", Embeddings, RankedList, version = 2)(b =>
+      buildAnnLshTopk(b.spark, b.sfDir)),
+    Artifact("ann_ivf_topk", Embeddings, RankedList, Seq("ivf_assign"))(b =>
+      buildAnnIvfTopk(b.spark, b.sfDir, b.in("ivf_assign"))),
+    Artifact("pq_codebooks", Embeddings, "subspace INT, code INT, cv ARRAY<DOUBLE>")(b =>
+      buildPqCodebooks(b.spark, b.sfDir)),
+    Artifact("pq_codes", Embeddings, "vec_id BIGINT, codes ARRAY<INT>",
+      Seq("pq_codebooks"))(b =>
+      buildPqCodes(b.spark, b.sfDir, decodeBooks(b.in("pq_codebooks")))),
+    Artifact("bpe_merges", Documents, "rank INT, left STRING, right STRING, pair_freq BIGINT")(b =>
+      buildBpeMerges(b.spark, b.sfDir)),
+    // exact groups land first (r14: exact dedup BEFORE near-dup); the
+    // signature tables band their reps, the pair build self-joins the
+    // signatures and expands intra-group relations through the group
+    // table, the cluster closure reads the pairs (single source of
+    // truth for the duplicate graph — q14's operator demo still derives
+    // pairs fresh, but the graph analytics q35/q105/q107 read corpus
+    // state, as production would)
+    Artifact("exact_reps", Documents, Groups)(b => buildExactReps(b.spark, b.sfDir)),
+    Artifact("exact_reps_base", Documents, Groups)(b => buildExactRepsBase(b.spark, b.sfDir)),
+    Artifact("band_signatures", Documents, Bands, Seq("exact_reps"))(b =>
+      buildBandSignatures(b.spark, b.sfDir, b.in("exact_reps"))),
+    Artifact("band_signatures_base", Documents, Bands, Seq("exact_reps_base"))(b =>
+      buildBandSignaturesBase(b.spark, b.sfDir, b.in("exact_reps_base"))),
+    Artifact("neardup_pairs", Documents, "doc_a BIGINT, doc_b BIGINT, jaccard DOUBLE",
+      Seq("band_signatures", "exact_reps"))(b =>
+      buildNearDupPairs(b.spark, b.sfDir, b.in("band_signatures"), b.in("exact_reps"))),
+    Artifact("neardup_clusters", Documents, "doc_id BIGINT, cluster_id BIGINT",
+      Seq("neardup_pairs"))(b => buildNearDupClusters(b.spark, b.sfDir, b.in("neardup_pairs"))),
+    Artifact("gram_occurrences", Documents, "doc_id BIGINT, pos BIGINT, h BIGINT")(b =>
+      buildGramOccurrences(b.spark, b.sfDir)),
+    Artifact("gram_index_base", None, "h BIGINT", Seq("gram_occurrences"))(b =>
+      buildGramIndexBase(b.in("gram_occurrences"))),
+    Artifact("gram_bloom_base", None, "bf BINARY, n_items BIGINT, fpp_micro BIGINT",
+      Seq("gram_index_base"))(b => buildGramBloomBase(b.spark, b.in("gram_index_base"))),
+    Artifact("bm25_postings", Documents, "tok STRING, doc_id BIGINT, tf BIGINT")(b =>
+      buildBm25Postings(b.spark, b.sfDir)),
+    Artifact("dsir_counts", Documents, "feat BIGINT, cnt_r BIGINT, cnt_t BIGINT")(b =>
+      buildDsirCounts(b.spark, b.sfDir)),
+    Artifact("token_positions", Documents, "tok STRING, doc_id BIGINT, pos INT")(b =>
+      buildTokenPositions(b.spark, b.sfDir)),
+    Artifact("doc_hashsets", Documents, "doc_id BIGINT, hs ARRAY<BIGINT>")(b =>
+      buildDocHashsets(b.spark, b.sfDir)),
+    Artifact("bm25_doclens", None, "doc_id BIGINT, len BIGINT", Seq("bm25_postings"))(b =>
+      buildBm25DocLens(b.in("bm25_postings"))),
+    Artifact("cooccur_edges", Documents, "tok_a STRING, tok_b STRING, w BIGINT")(b =>
+      buildCooccurEdges(b.spark, b.sfDir)),
+    Artifact("token_unigrams", Documents, "tok STRING, n BIGINT")(b =>
+      buildTokenUnigrams(b.spark, b.sfDir)),
+    Artifact("doc_quality", Documents, "doc_id BIGINT, quality BIGINT")(b =>
+      buildDocQuality(b.spark, b.sfDir)),
+    Artifact("release_survivors", Documents, "doc_id BIGINT, n_tokens BIGINT, " +
+      "n_dup_tokens BIGINT, clean_text STRING, kept_tokens BIGINT, source STRING, quality BIGINT",
+      Seq("gram_occurrences", "neardup_clusters", "doc_quality"))(b =>
+      buildReleaseSurvivors(b.spark, b.sfDir, b.in("gram_occurrences"),
+        b.in("neardup_clusters"), b.in("doc_quality"))),
+    Artifact("events_by_day", Some("events"), "event_id BIGINT, ts TIMESTAMP, " +
+      "user_id BIGINT, event_type STRING, value DOUBLE, props STRING, day DATE",
+      partitionBy = Some("day"))(b => buildEventsByDay(b.spark, b.sfDir)))
 
-  /** The build-graph edges: artifact → the landed artifacts its build
-    * thunk reads (the `$dir/<name>` parquet reads in [[registry]]).
-    * Used ONLY for stamp propagation — build ORDER is still the
-    * registry's ordered Seq. A name listed here but missing from the
-    * registry fails [[ensureMaterialized]] loudly (typo guard); the
-    * spec additionally pins that every dep precedes its dependent in
-    * registry order. */
-  private[graft] val artifactDeps: Map[String, Seq[String]] = Map(
-    "ivf_supercells" -> Seq("ivf_codebook"),
-    "ivf_super_map" -> Seq("ivf_codebook"),
-    "ivf_assign" -> Seq("ivf_codebook", "ivf_supercells", "ivf_super_map"),
-    "margin_denoms" -> Seq("ivf_assign"),
-    "ann_ivf_topk" -> Seq("ivf_assign"),
-    "pq_codes" -> Seq("pq_codebooks"),
-    "band_signatures" -> Seq("exact_reps"),
-    "band_signatures_base" -> Seq("exact_reps_base"),
-    "neardup_pairs" -> Seq("band_signatures", "exact_reps"),
-    "neardup_clusters" -> Seq("neardup_pairs"),
-    "gram_index_base" -> Seq("gram_occurrences"),
-    "gram_bloom_base" -> Seq("gram_index_base"),
-    "bm25_doclens" -> Seq("bm25_postings"),
-    "release_survivors" -> Seq("gram_occurrences", "neardup_clusters", "doc_quality"))
+  private val declared: Map[String, Artifact] = registry.map(a => a.name -> a).toMap
 
-  /** Recipe version for one artifact: the static table, overridable at
-    * launch via `-Dgraft.wh.vbump=name:ver,...` (or SPARK_GRAFT_WH_VBUMP)
-    * — the operational force-rebuild knob: bump one artifact and its
-    * dependents re-land on next touch, nothing else does. */
-  private def versionOf(name: String): Int = {
-    val bumps = sys.props.get("graft.wh.vbump")
-      .orElse(sys.env.get("SPARK_GRAFT_WH_VBUMP"))
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).map { kv =>
-        val parts = kv.split(":")
-        require(parts.length == 2, s"graft.wh.vbump entry '$kv' is not name:version")
-        (parts(0).trim, parts(1).trim.toInt)
-      }.toMap).getOrElse(Map.empty)
-    bumps.getOrElse(name, artifactVersions.getOrElse(name, 1))
-  }
+  /** An artifact's declared empty shape. repartition(1): an empty write
+    * otherwise lands only `_SUCCESS`, leaving nothing to infer the schema
+    * from on read. */
+  private def emptyArtifact(spark: SparkSession, name: String): DataFrame =
+    emptyDim(spark, StructType.fromDDL(declared(name).empty)).repartition(1)
 
   /** Effective per-artifact stamp: md5 of (name, own version, dep
     * stamps) — pure, so the propagation law is spec-testable without a
@@ -906,103 +861,6 @@ object Warehouse {
       catch { case e: Throwable => Left(e) }
     ).fold(e => throw e, identity)
 
-  /** The warehouse table registry for one corpus, in dependency order
-    * (index/cluster builds read artifacts landed earlier in the list). */
-  private def registry(spark: SparkSession, sfDir: String, dir: String): Seq[(String, () => DataFrame)] = {
-    // dim_products batch 1 is itself a materialized table (the nightly
-    // recipe: merge N's output is swapped in before merge N+1 reads it).
-    def viaSwap(name: String): DataFrame => DataFrame = { df =>
-      Ingest.overwriteSwap(spark, df, s"$dir/$name")
-      spark.read.parquet(s"$dir/$name")
-    }
-    Seq(
-      "dim_orders" -> (() => buildDimOrders(spark, sfDir)),
-      "dim_products" -> (() => buildDimParts(spark, sfDir, viaSwap("dim_products_b1"))),
-      "dim_orders_2b" -> (() => buildDimOrdersTwoBatches(spark, sfDir, viaSwap("dim_orders_2b_b1"))),
-      "fact_orders" -> (() => buildFactOrders(spark, sfDir)),
-      "ivf_codebook" -> (() => buildIvfCodebook(spark, sfDir)),
-      // index state builds read the codebooks LANDED just above
-      // (ordered seq): re-training them here would fork the artifact.
-      // A failed codebook propagates: the parquet read throws, so the
-      // dependent table records its own Left — loud for its readers.
-      // Super layer lands BEFORE the assignment (r14): the assignment
-      // build ranks through it above the crossover, so it must read the
-      // same landed super tables its probers will.
-      "ivf_supercells" -> (() => buildIvfSuperCells(spark,
-        spark.read.parquet(s"$dir/ivf_codebook"))),
-      "ivf_super_map" -> (() => buildIvfSuperMap(spark,
-        spark.read.parquet(s"$dir/ivf_codebook"))),
-      "ivf_assign" -> (() => buildIvfAssign(spark, sfDir,
-        spark.read.parquet(s"$dir/ivf_codebook"),
-        spark.read.parquet(s"$dir/ivf_supercells"),
-        spark.read.parquet(s"$dir/ivf_super_map"))),
-      "margin_denoms" -> (() => buildMarginDenoms(spark, sfDir,
-        spark.read.parquet(s"$dir/ivf_assign"))),
-      // retrieval truth + searched-index lists: corpus state consumed
-      // by the eval queries (q99/q104/q117/q118) and the demos
-      // (q17/q18/q29) — built once, beside the index they evaluate
-      "label_centroid_sums_base" -> (() => buildLabelCentroidSumsBase(spark, sfDir)),
-      "knn_exact" -> (() => buildKnnExact(spark, sfDir)),
-      "knn_global_sampled" -> (() => buildKnnGlobalSampled(spark, sfDir)),
-      "ann_lsh_topk" -> (() => buildAnnLshTopk(spark, sfDir)),
-      "ann_ivf_topk" -> (() => buildAnnIvfTopk(spark, sfDir,
-        spark.read.parquet(s"$dir/ivf_assign"))),
-      "pq_codebooks" -> (() => buildPqCodebooks(spark, sfDir)),
-      "pq_codes" -> (() => buildPqCodes(spark, sfDir,
-        decodeBooks(spark.read.parquet(s"$dir/pq_codebooks")))),
-      "bpe_merges" -> (() => buildBpeMerges(spark, sfDir)),
-      // exact groups land first (r14: exact dedup BEFORE near-dup);
-      // the signature tables band their reps, the pair build self-joins
-      // the signatures and expands intra-group relations through the
-      // group table, the cluster closure reads the pairs (single source
-      // of truth for the duplicate graph — q14's operator demo still
-      // derives pairs fresh, but the graph analytics q35/q105/q107
-      // read corpus state, as production would)
-      "exact_reps" -> (() => buildExactReps(spark, sfDir)),
-      "exact_reps_base" -> (() => buildExactRepsBase(spark, sfDir)),
-      "band_signatures" -> (() => buildBandSignatures(spark, sfDir,
-        spark.read.parquet(s"$dir/exact_reps"))),
-      "band_signatures_base" -> (() => buildBandSignaturesBase(spark, sfDir,
-        spark.read.parquet(s"$dir/exact_reps_base"))),
-      "neardup_pairs" -> (() => buildNearDupPairs(spark, sfDir,
-        spark.read.parquet(s"$dir/band_signatures"),
-        spark.read.parquet(s"$dir/exact_reps"))),
-      "neardup_clusters" -> (() => buildNearDupClusters(spark, sfDir,
-        spark.read.parquet(s"$dir/neardup_pairs"))),
-      "gram_occurrences" -> (() => buildGramOccurrences(spark, sfDir)),
-      // base-corpus index + its fronting bloom, reduced from the gram
-      // table LANDED just above (the ivf_assign pattern: index state
-      // derives from the landed artifact, never a re-derivation)
-      "gram_index_base" -> (() => buildGramIndexBase(
-        spark.read.parquet(s"$dir/gram_occurrences"))),
-      "gram_bloom_base" -> (() => buildGramBloomBase(spark,
-        spark.read.parquet(s"$dir/gram_index_base"))),
-      "bm25_postings" -> (() => buildBm25Postings(spark, sfDir)),
-      "dsir_counts" -> (() => buildDsirCounts(spark, sfDir)),
-      "token_positions" -> (() => buildTokenPositions(spark, sfDir)),
-      "doc_hashsets" -> (() => buildDocHashsets(spark, sfDir)),
-      "bm25_doclens" -> (() => buildBm25DocLens(
-        spark.read.parquet(s"$dir/bm25_postings"))),
-      "cooccur_edges" -> (() => buildCooccurEdges(spark, sfDir)),
-      "token_unigrams" -> (() => buildTokenUnigrams(spark, sfDir)),
-      "doc_quality" -> (() => buildDocQuality(spark, sfDir)),
-      // the scrubbed survivor pool reads three artifacts LANDED above
-      // (gram_occurrences → dup marking, neardup_clusters → keepers,
-      // doc_quality → gate input) — the ivf_assign dependency pattern
-      "release_survivors" -> (() => buildReleaseSurvivors(spark, sfDir,
-        spark.read.parquet(s"$dir/gram_occurrences"),
-        spark.read.parquet(s"$dir/neardup_clusters"),
-        spark.read.parquet(s"$dir/doc_quality"))),
-      "events_by_day" -> (() => buildEventsByDay(spark, sfDir)))
-  }
-
-  /** Artifacts landed hive-partitioned (name → partition column) —
-    * [[ensureTable]] swaps these in via
-    * [[Ingest.overwriteSwapPartitioned]] so date-ranged readers prune
-    * at the scan. */
-  private val partitionedArtifacts: Map[String, String] =
-    Map("events_by_day" -> "day")
-
   /** Build one table if not yet landed AT THE CURRENT RECIPE STAMP;
     * memoize ITS OWN outcome. Each table lands atomically via
     * [[Ingest.overwriteSwap]] (write beside, rename over), so a killed
@@ -1014,16 +872,18 @@ object Warehouse {
     * rebuild, since those caches were built by the code that introduced
     * the markers. The marker is written AFTER the swap, so a crash
     * between them re-runs the (idempotent) build, never serves a
-    * half-landed table. */
-  private def ensureTable(spark: SparkSession, dir: String, name: String,
-                          build: () => DataFrame, want: String): Either[Throwable, Unit] =
-    tableState.getOrElseUpdate(s"$dir/$name", buildLock.synchronized {
+    * half-landed table. An artifact whose source corpus table is absent
+    * lands its declared empty shape instead of building. */
+  private def ensureTable(spark: SparkSession, sfDir: String, dir: String,
+                          a: Artifact, want: String): Either[Throwable, Unit] =
+    tableState.getOrElseUpdate(s"$dir/${a.name}", buildLock.synchronized {
       // re-check under the lock: a racing thread may have landed it
-      tableState.get(s"$dir/$name").getOrElse {
+      tableState.get(s"$dir/${a.name}").getOrElse {
         try {
-          val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val marker = new Path(s"$dir/$name/_GRAFT_V")
-          val landed = fs.exists(new Path(s"$dir/$name/_SUCCESS"))
+          val conf = spark.sparkContext.hadoopConfiguration
+          val fs = new Path(dir).getFileSystem(conf)
+          val marker = new Path(s"$dir/${a.name}/_GRAFT_V")
+          val landed = fs.exists(new Path(s"$dir/${a.name}/_SUCCESS"))
           val fresh = landed && {
             if (fs.exists(marker)) {
               val in = fs.open(marker)
@@ -1038,17 +898,19 @@ object Warehouse {
             // release them here instead of letting a 30-artifact
             // ensureMaterialized accumulate block-manager state
             graft.Graft.leaseScope {
-              partitionedArtifacts.get(name) match {
-                case Some(pc) =>
-                  val df = build()
-                  // a ZERO-row partitioned write emits no data files
-                  // (only _SUCCESS) — an unreadable dir the _SUCCESS
-                  // memoization would then pin forever; land empties
-                  // flat (schema-bearing parquet, the same shape every
-                  // non-partitioned fallback uses)
-                  if (df.isEmpty) Ingest.overwriteSwap(spark, df, s"$dir/$name")
-                  else Ingest.overwriteSwapPartitioned(spark, df, s"$dir/$name", pc)
-                case None => Ingest.overwriteSwap(spark, build(), s"$dir/$name")
+              val sourced = a.source.forall { t =>
+                val p = new Path(s"$sfDir/$t.parquet")
+                p.getFileSystem(conf).exists(p)
+              }
+              val df =
+                if (sourced) a.build(new Build(spark, sfDir, dir, a)) else emptyArtifact(spark, a.name)
+              a.partitionBy match {
+                // a ZERO-row partitioned write emits no data files (only
+                // _SUCCESS) — an unreadable dir the _SUCCESS memoization
+                // would then pin forever; land empties flat
+                case Some(pc) if !df.isEmpty =>
+                  Ingest.overwriteSwapPartitioned(spark, df, s"$dir/${a.name}", pc)
+                case _ => Ingest.overwriteSwap(spark, df, s"$dir/${a.name}")
               }
               writeMarker(fs, marker, want)
             }
@@ -1063,43 +925,53 @@ object Warehouse {
     try out.write(stamp.getBytes("UTF-8")) finally out.close()
   }
 
-  /** Artifacts excluded from materialization — comma-separated registry
-    * names via `-Dgraft.wh.skip` or `SPARK_GRAFT_WH_SKIP`. This is the
-    * cross-scale stress posture made operational: at sf10 the quadratic
-    * eval-truth tables (`knn_exact`, sampled/searched top-k lists) are
-    * deliberately not built, exactly as a 100 TB deployment samples its
-    * eval truth instead of materializing it. A skipped artifact never
-    * lands and is never memoized, so its readers fail LOUDLY at the
-    * parquet read (no silent empties), and dropping the skip later
-    * builds it into the same cache dir. Unknown names throw: a typo
-    * that silently built the quadratic table would defeat the point. */
-  private def skipSet(names: Seq[String]): Set[String] = {
-    val s = sys.props.get("graft.wh.skip")
-      .orElse(sys.env.get("SPARK_GRAFT_WH_SKIP"))
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
-    val unknown = s -- names.toSet
+  /** A per-artifact launch option: comma-separated entries of `-D<key>`
+    * (or env `<env>`), each parsed to (registry name, value). Unknown
+    * names throw: a typo that silently skipped or re-landed nothing
+    * would defeat the option. */
+  private def artifactOption[A](key: String, env: String)
+                               (parse: String => (String, A)): Map[String, A] = {
+    val entries = sys.props.get(key).orElse(sys.env.get(env)).toSeq
+      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).map(parse).toMap
+    val unknown = entries.keySet -- declared.keySet
     require(unknown.isEmpty,
-      s"graft.wh.skip names not in the warehouse registry: ${unknown.mkString(",")}")
-    s
+      s"$key names not in the warehouse registry: ${unknown.mkString(",")}")
+    entries
   }
 
   /** Attempt every warehouse table for `sfDir` (each build isolated —
     * one failed dim no longer aborts unrelated artifacts); returns the
     * cache directory. Idempotent and cheap after first touch. Throws
-    * only if NO table could be attempted (dir resolution failed);
-    * per-table failures surface at that table's reader. */
+    * only if NO table could be attempted (dir resolution failed, or an
+    * option names an unknown artifact); per-table failures surface at
+    * that table's reader.
+    *
+    * Two launch options, both parsed here once per call:
+    *  - `-Dgraft.wh.skip=name,...` (or SPARK_GRAFT_WH_SKIP) excludes
+    *    artifacts. This is the cross-scale stress posture made
+    *    operational: at sf10 the quadratic eval-truth tables
+    *    (`knn_exact`, sampled/searched top-k lists) are deliberately not
+    *    built, exactly as a 100 TB deployment samples its eval truth
+    *    instead of materializing it. A skipped artifact never lands and
+    *    is never memoized, so its readers fail naming it, and dropping
+    *    the skip later builds it into the same cache dir.
+    *  - `-Dgraft.wh.vbump=name:ver,...` (or SPARK_GRAFT_WH_VBUMP)
+    *    overrides declared recipe versions — the operational
+    *    force-rebuild knob: bump one artifact and its dependents re-land
+    *    on next touch, nothing else does. */
   def ensureMaterialized(spark: SparkSession, sfDir: String): String = {
     val dir = resolveDir(spark, sfDir)
-    val reg = registry(spark, sfDir, dir)
-    val names = reg.map(_._1)
-    val badDeps = (artifactDeps.keySet ++ artifactDeps.values.flatten) -- names.toSet
-    require(badDeps.isEmpty,
-      s"artifactDeps names not in the warehouse registry: ${badDeps.mkString(",")}")
-    val skip = skipSet(names)
-    val stamps = artifactStamps(versionOf, artifactDeps, names)
-    reg.foreach { case (name, build) =>
-      if (!skip.contains(name)) ensureTable(spark, dir, name, build, stamps(name))
+    val skip = artifactOption("graft.wh.skip", "SPARK_GRAFT_WH_SKIP")(n => n -> ()).keySet
+    val bumps = artifactOption("graft.wh.vbump", "SPARK_GRAFT_WH_VBUMP") { kv =>
+      kv.split(":") match {
+        case Array(n, v) => n.trim -> v.trim.toInt
+        case _ => throw new IllegalArgumentException(s"graft.wh.vbump entry '$kv' is not name:version")
+      }
+    }
+    val stamps = artifactStamps(n => bumps.getOrElse(n, declared(n).version),
+      declared.map { case (n, a) => n -> a.inputs }, registry.map(_.name))
+    registry.foreach { a =>
+      if (!skip(a.name)) ensureTable(spark, sfDir, dir, a, stamps(a.name))
     }
     dir
   }
@@ -1109,16 +981,19 @@ object Warehouse {
     * incrementally-maintained (with a stream≡rebuild equality test),
     * maintained-elsewhere, or refresh-on-build, and FAILS on any name
     * it has never heard of, so a new artifact cannot land without a
-    * maintenance story. Build thunks are not invoked. */
+    * maintenance story. Needs no session. */
   def artifactNames(spark: SparkSession, sfDir: String): Seq[String] =
-    registry(spark, sfDir, "<names-only>").map(_._1)
+    registry.map(_.name)
 
   private def read(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val dir = ensureMaterialized(spark, sfDir)
     tableState.get(s"$dir/$name") match {
+      case Some(Right(_)) => spark.read.parquet(s"$dir/$name")
       case Some(Left(e)) =>
         throw new IllegalStateException(s"warehouse table '$name' failed to build for $sfDir", e)
-      case _ => spark.read.parquet(s"$dir/$name")
+      // ensureMaterialized attempts every artifact the skip list omits
+      case None => throw new IllegalStateException(
+        s"warehouse table '$name' is not built for $sfDir: graft.wh.skip lists it")
     }
   }
 

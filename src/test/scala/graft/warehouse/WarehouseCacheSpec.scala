@@ -47,6 +47,21 @@ class WarehouseCacheSpec extends SparkSpec {
       assert(dir3 != dir1, "changed inputs must re-key the cache")
       val rows3 = Warehouse.dimOrders(spark, sfDir.toString).count()
       assert(rows3 > 0 && rows3 != rows1, "rebuilt dim must reflect the new corpus")
+
+      // without documents/embeddings their artifacts land from the
+      // declared empty shape, which must match the full build's schema
+      System.clearProperty("graft.wh.cache")
+      Warehouse.invalidateResolved()
+      val full = Warehouse.ensureMaterialized(spark, "/root/testdata/sf0.001")
+      def shape(dir: String, n: String) = spark.read.parquet(s"$dir/$n").schema
+        .map(f => s"${f.name} ${f.dataType.catalogString}")
+      Warehouse.registry.foreach { a =>
+        val want = shape(full, a.name)
+        assert(shape(dir3, a.name) === want, s"${a.name} landed empty with a different shape")
+        assert(org.apache.spark.sql.types.StructType.fromDDL(a.empty)
+          .map(f => s"${f.name} ${f.dataType.catalogString}") === want,
+          s"${a.name} declares a different empty shape")
+      }
     } finally {
       System.clearProperty("graft.wh.cache")
       Warehouse.invalidateResolved()
@@ -110,8 +125,9 @@ class WarehouseCacheSpec extends SparkSpec {
       assert(!Files.exists(Paths.get(dir, "knn_exact")), "skipped artifact must not land")
       assert(Files.exists(Paths.get(dir, "ivf_assign", "_SUCCESS")),
         "non-skipped artifacts still land")
-      // reader of a skipped artifact fails loudly at the parquet read
-      intercept[Exception](Warehouse.knnExact(spark, sfDir.toString).count())
+      // reader of a skipped artifact fails loudly, naming it and the skip
+      val e = intercept[IllegalStateException](Warehouse.knnExact(spark, sfDir.toString))
+      assert(e.getMessage.contains("knn_exact") && e.getMessage.contains("graft.wh.skip"))
       // non-skipped readers unaffected
       assert(Warehouse.ivfCodebook(spark, sfDir.toString).count() > 0)
       // dropping the skip builds the artifact into the SAME cache dir

@@ -14,19 +14,25 @@ class WarehouseFingerprintSpec extends SparkSpec {
 
   private val names = Warehouse.artifactNames(spark, "/root/testdata/sf0.001")
 
-  private def stamps(bumps: Map[String, Int] = Map.empty): Map[String, String] =
-    Warehouse.artifactStamps(n => bumps.getOrElse(n, 1), Warehouse.artifactDeps, names)
+  /** The build-graph edges, read from the declarations. */
+  private val inputs = Warehouse.registry.map(a => a.name -> a.inputs).toMap
 
-  test("every dep edge names registry artifacts, and deps precede dependents in build order") {
-    val all = names.toSet
-    val idx = names.zipWithIndex.toMap
-    Warehouse.artifactDeps.foreach { case (n, ds) =>
-      assert(all.contains(n), s"dep key $n not in registry")
-      ds.foreach { d =>
-        assert(all.contains(d), s"dep $d of $n not in registry")
-        assert(idx(d) < idx(n), s"dep $d must build before $n in registry order")
-      }
-    }
+  private def stamps(bumps: Map[String, Int] = Map.empty): Map[String, String] =
+    Warehouse.artifactStamps(n => bumps.getOrElse(n, 1), inputs, names)
+
+  test("a build reading an undeclared input throws, naming both artifacts") {
+    val decl = Warehouse.registry.find(_.name == "margin_denoms").get
+    val e = intercept[IllegalArgumentException](
+      new Warehouse.Build(spark, "unused-sf", "unused-dir", decl).in("ivf_codebook"))
+    assert(e.getMessage.contains("margin_denoms") && e.getMessage.contains("ivf_codebook"))
+  }
+
+  test("a declaration whose input is declared after it fails the registry build") {
+    def art(name: String, in: String*) =
+      Warehouse.Artifact(name, None, "id BIGINT", in)(_ => spark.emptyDataFrame)
+    assert(Warehouse.declare(art("a"), art("b", "a")).map(_.name) === Seq("a", "b"))
+    val e = intercept[IllegalArgumentException](Warehouse.declare(art("b", "a"), art("a")))
+    assert(e.getMessage.contains("'b' reads a,"))
   }
 
   test("a bump re-stamps the artifact and exactly its transitive dependents") {
@@ -85,6 +91,15 @@ class WarehouseFingerprintSpec extends SparkSpec {
       Warehouse.invalidateResolved()
       Warehouse.ensureMaterialized(spark, sfDir.toString)
       assert(mtime("dim_orders") == t1, "an already-landed stamp must be a no-op")
+
+      // a typo or a malformed entry throws instead of re-landing nothing
+      Seq("dim_orderz:2", "dim_orders").foreach { bump =>
+        System.setProperty("graft.wh.vbump", bump)
+        Warehouse.invalidateResolved()
+        val e = intercept[IllegalArgumentException](
+          Warehouse.ensureMaterialized(spark, sfDir.toString))
+        assert(e.getMessage.contains(bump.takeWhile(_ != ':')))
+      }
     } finally {
       System.clearProperty("graft.wh.cache")
       System.clearProperty("graft.wh.vbump")
