@@ -140,8 +140,8 @@ object BenchGuard {
       }
       (label, Measure.steadyMedian(times))
     }
-    def surv = rel.survivors(docs, wh.gramOccurrences(spark, sfDir),
-      wh.nearDupClusters(spark, sfDir), wh.docQuality(spark, sfDir))
+    def surv = rel.survivors(docs, wh.read(spark, sfDir, "gram_occurrences"),
+      wh.read(spark, sfDir, "neardup_clusters"), wh.read(spark, sfDir, "doc_quality"))
     Seq(
       // scrub has no in-session predecessor (reads landed artifacts) —
       // the 1-row pre keeps the run structure uniform

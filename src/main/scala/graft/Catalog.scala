@@ -160,7 +160,8 @@ object Catalog {
     val names = SparkEntry.queries.keys.toSeq.sorted
     val segments = querySegments(src, names)
     val budgets = BenchGuard.Budgets.toMap
-    val ref = """([A-Z][A-Za-z0-9]*)\.([a-zA-Z]\w*)""".r
+    // a read by name renders with its artifact: Warehouse.read(knn_exact)
+    val ref = """([A-Z][A-Za-z0-9]*)\.(?:read\([^()"]*"(\w+)"\)|([a-zA-Z]\w*))""".r
 
     val sb = new StringBuilder
     sb ++= "# graft operator catalog\n\n"
@@ -182,7 +183,7 @@ object Catalog {
       val gate = if (SparkEntry.oracleSql.contains(n)) "hash" else "rows-only"
       val pin = budgets.get(n).map(b => f"$b%.1f").getOrElse("—")
       val refs = ref.findAllMatchIn(segments(n))
-        .map(m => (m.group(1), m.group(2)))
+        .map(m => (m.group(1), Option(m.group(2)).fold(m.group(3))(a => s"read($a)")))
         .filter { case (o, _) => objects.contains(o) }
         .map { case (o, mth) => s"$o.$mth" }
         .distinct.take(3).toSeq

@@ -54,13 +54,13 @@ object SparkEntry {
     // r16: the operator demo keeps its candidate/verify stages live but
     // reads the exact-group and capped band-signature tables as CORPUS
     // STATE (exactly what the warehouse pair build itself consumes —
-    // buildNearDupPairs' shape) instead of re-deriving group md5 +
-    // shingle→minhash→band window per query. Pair decisions identical;
+    // the `neardup_pairs` row's shape) instead of re-deriving group md5
+    // + shingle→minhash→band window per query. Pair decisions identical;
     // the oracle replays the full chain from documents.
     "q14_dedup_minhash_lsh" -> ((s, d) => {
-      val g = graft.warehouse.Warehouse.exactReps(s, d)
+      val g = graft.warehouse.Warehouse.read(s, d, "exact_reps")
       TextDedup.minhashLshPairsFromBands(
-          graft.warehouse.Warehouse.bandSignatures(s, d),
+          graft.warehouse.Warehouse.read(s, d, "band_signatures"),
           graft.Graft.lease(TextDedup.shingled(TextDedup.repDocs(docs(s, d), g))))
         .unionByName(TextDedup.exactStarEdges(g))
         .orderBy("doc_a", "doc_b")
@@ -72,9 +72,9 @@ object SparkEntry {
     // re-order, the oracle replays the full derivation so the hash
     // gate still checks the artifact end-to-end.
     "q17_knn_cosine" -> ((s, d) =>
-      graft.warehouse.Warehouse.knnExact(s, d).orderBy("qid", "rank")),
+      graft.warehouse.Warehouse.read(s, d, "knn_exact").orderBy("qid", "rank")),
     "q18_ann_lsh" -> ((s, d) =>
-      graft.warehouse.Warehouse.annLshTopk(s, d).orderBy("qid", "rank")),
+      graft.warehouse.Warehouse.read(s, d, "ann_lsh_topk").orderBy("qid", "rank")),
     "q19_media_stats" -> ((s, d) => Multimodal.mediaStats(docs(s, d))),
     "q20_text_stats" -> ((s, d) => TextAnalysis.stats(docs(s, d)).orderBy("doc_id")),
     "q21_lang_guess" -> ((s, d) => TextAnalysis.langGuess(docs(s, d)).orderBy("doc_id")),
@@ -85,7 +85,7 @@ object SparkEntry {
     // independent by construction, unlike a fixed-cardinality label
     // block whose width grows with the corpus (20M pairs at sf1).
     "q24_embedding_neardup" -> ((s, d) => Similarity.cosineNearDupInCells(
-      Tables.embeddings(s, d), graft.warehouse.Warehouse.ivfAssign(s, d))),
+      Tables.embeddings(s, d), graft.warehouse.Warehouse.read(s, d, "ivf_assign"))),
     "q25_ann_ivf" -> ((s, d) => Similarity.annIvf(Tables.embeddings(s, d))),
     "q26_dim_orders_two_batches" -> ((s, d) => Metrics.dimOrdersTwoBatches(s, d)),
     // r16: leased before the global sort — rangepartitioning SAMPLES the
@@ -101,7 +101,7 @@ object SparkEntry {
     // per query; decisions identical (the artifact IS that derivation),
     // oracle still replays the whole chain from documents.
     "q28_curation_pipeline" -> ((s, d) => Curation.curateFromPairs(docs(s, d),
-      graft.warehouse.Warehouse.nearDupPairs(s, d))),
+      graft.warehouse.Warehouse.read(s, d, "neardup_pairs"))),
     // Training (k-means) is not SQL-expressible and stays spec-gated
     // (recall floor in SimilaritySpec); the SEARCH stage IS, so the
     // oracle replays it over the materialized CODEBOOK parquet (the
@@ -113,7 +113,7 @@ object SparkEntry {
     // compare. Per-query cost = two joins on a three-int parquet, not
     // ncells literal-centroid dots per vector (the r6 cold-path cost).
     "q29_ann_ivf_trained" -> ((s, d) =>
-      graft.warehouse.Warehouse.annIvfTopk(s, d).orderBy("qid", "rank")),
+      graft.warehouse.Warehouse.read(s, d, "ann_ivf_topk").orderBy("qid", "rank")),
     // r16: same lease-before-sort rule as q27 (regex-count map pass)
     "q30_lang_cjk" -> ((s, d) =>
       graft.Graft.lease(TextAnalysis.langGuessCjk(docs(s, d))).orderBy("doc_id")),
@@ -129,10 +129,10 @@ object SparkEntry {
     // (q44's r6 regression was exactly that encode codegen).
     "q44_ann_ivfpq" -> ((s, d) => graft.vector.ProductQuant.annIvfPq(
       Tables.embeddings(s, d),
-      graft.warehouse.Warehouse.ivfCodebook(s, d),
+      graft.warehouse.Warehouse.read(s, d, "ivf_codebook"),
       graft.warehouse.Warehouse.pqCodebooks(s, d), dim = 64,
-      codesOpt = Some(graft.warehouse.Warehouse.pqCodes(s, d)),
-      assignOpt = Some(graft.warehouse.Warehouse.ivfAssign(s, d)))),
+      codesOpt = Some(graft.warehouse.Warehouse.read(s, d, "pq_codes")),
+      assignOpt = Some(graft.warehouse.Warehouse.read(s, d, "ivf_assign")))),
     // Skew-salted join, oracle-gated through an aggregate: the salt must
     // neither drop nor duplicate rows, or the per-brand sums shift.
     // Exact n-gram Jaccard self-join (prefix filtering): deterministic
@@ -146,7 +146,7 @@ object SparkEntry {
     // q166 bounds the live candidate shuffle instead of dying on disk.
     // Any pass count yields the identical pair set (SaltedJaccardSpec).
     "q32_ngram_jaccard" -> ((s, d) => TextDedup.ngramJaccardPairsSalted(
-      graft.warehouse.Warehouse.docHashsets(s, d),
+      graft.warehouse.Warehouse.read(s, d, "doc_hashsets"),
       saltedLandingDir(s, "q32", d))),
     // q32's BOUNDED at-scale form (r14 verdict task 2): the identical
     // PPJoin candidate/verify chain run as `passes` disjoint
@@ -156,7 +156,7 @@ object SparkEntry {
     // mass exceeds available (local or fleet) shuffle disk. Same oracle
     // as q32: the hash gate proves the decomposition drops nothing.
     "q166_jaccard_salted" -> ((s, d) => TextDedup.ngramJaccardPairsSalted(
-      graft.warehouse.Warehouse.docHashsets(s, d),
+      graft.warehouse.Warehouse.read(s, d, "doc_hashsets"),
       saltedLandingDir(s, "q166", d))),
     // q40's BOUNDED at-scale form (the containment twin of q166): the
     // identical prefix/index candidate chain run as disjoint tok-hash
@@ -165,7 +165,7 @@ object SparkEntry {
     // oracle as q40: the hash gate proves the decomposition drops
     // nothing.
     "q167_containment_salted" -> ((s, d) => {
-      val hs = graft.warehouse.Warehouse.docHashsets(s, d)
+      val hs = graft.warehouse.Warehouse.read(s, d, "doc_hashsets")
       TextDedup.containmentPairsSalted(
         hs.where(col("doc_id") % 10 === 0),
         hs.where(col("doc_id") % 10 =!= 0),
@@ -278,7 +278,7 @@ object SparkEntry {
     // union — see [[graft.text.SegmentDedup.scrubExactSubstr]].
     "q122_substr_scrub" -> ((s, d) =>
       graft.text.SegmentDedup.scrubExactSubstrFromGrams(docs(s, d),
-          graft.warehouse.Warehouse.gramOccurrences(s, d))
+          graft.warehouse.Warehouse.read(s, d, "gram_occurrences"))
         .orderBy("doc_id")),
     // q122's INGESTION shape (the q76/q77 incremental family): scrub
     // the arriving batch (doc_id % 10 = 7) against the immutable
@@ -288,11 +288,11 @@ object SparkEntry {
     // negatives, so the scrub output is unchanged) + in-batch keeper;
     // corpus×corpus never re-pairs.
     "q123_substr_scrub_incr" -> ((s, d) => {
-      val g = graft.warehouse.Warehouse.gramOccurrences(s, d)
+      val g = graft.warehouse.Warehouse.read(s, d, "gram_occurrences")
       graft.text.SegmentDedup.scrubAgainstIndexFromGrams(
           docs(s, d).where(pmod(col("doc_id"), lit(10)) === 7),
           g.where(pmod(col("doc_id"), lit(10)) === 7),
-          graft.warehouse.Warehouse.gramIndexBase(s, d),
+          graft.warehouse.Warehouse.read(s, d, "gram_index_base"),
           bloom = Some(graft.warehouse.Warehouse.gramBloomBase(s, d)))
         .orderBy("doc_id")
     }),
@@ -301,7 +301,7 @@ object SparkEntry {
     // flow between sources, scored as shared/min-side containment ppm).
     "q124_source_substr_overlap" -> ((s, d) =>
       graft.text.SegmentDedup.sourceGramOverlapFromGrams(
-          graft.warehouse.Warehouse.gramOccurrences(s, d),
+          graft.warehouse.Warehouse.read(s, d, "gram_occurrences"),
           Tables.documents(s, d).select(col("doc_id"), col("source")))
         .orderBy("src_x", "src_y")),
     // Per-source quality percentile gate: keep each source's top
@@ -313,7 +313,7 @@ object SparkEntry {
     // corpus (group-then-window, the exact-quantile-by-group shape).
     "q128_quality_percentile_gate" -> ((s, d) => {
       val pd = Tables.documents(s, d).select(col("doc_id"), col("source"), col("n_chars"))
-        .join(graft.warehouse.Warehouse.docQuality(s, d), Seq("doc_id"))
+        .join(graft.warehouse.Warehouse.read(s, d, "doc_quality"), Seq("doc_id"))
       // r16: threshold/count/mass scalars from ONE windowed pass over
       // the distinct-quality table ([[graft.pipeline.Release
       // .decisionTable]] — bit-equal to the topFractionThresholds →
@@ -335,7 +335,7 @@ object SparkEntry {
     // the self-boilerplate rate, the intra-source companion to q124's
     // cross-source matrix. Reads the gram artifact; two-level agg.
     "q129_source_gram_diversity" -> ((s, d) => {
-      val per = graft.warehouse.Warehouse.gramOccurrences(s, d)
+      val per = graft.warehouse.Warehouse.read(s, d, "gram_occurrences")
         .join(Tables.documents(s, d).select(col("doc_id"), col("source")), Seq("doc_id"))
         .groupBy(col("source"), col("h")).agg(count(lit(1)).as("c"))
       per.groupBy(col("source"))
@@ -356,7 +356,7 @@ object SparkEntry {
     // "is boilerplate about to hot-spot the dup-marking join, and is
     // the salting engaged for it".
     "q139_gram_skew_audit" -> ((s, d) => {
-      val freq = graft.warehouse.Warehouse.gramOccurrences(s, d)
+      val freq = graft.warehouse.Warehouse.read(s, d, "gram_occurrences")
         .groupBy(col("h")).agg(count(lit(1)).as("cnt"))
       val dist = freq.groupBy(col("cnt")).agg(count(lit(1)).as("n_keys"))
       val w = org.apache.spark.sql.expressions.Window.orderBy(col("cnt"))
@@ -385,7 +385,7 @@ object SparkEntry {
     // replays the whole chain end-to-end from documents.
     "q140_release_card" -> ((s, d) =>
       graft.pipeline.Release.releaseCardFromSurvivors(
-        graft.warehouse.Warehouse.releaseSurvivors(s, d),
+        graft.warehouse.Warehouse.read(s, d, "release_survivors"),
         Tables.documents(s, d).groupBy(col("source"))
           .agg(count(lit(1)).as("n_docs_raw")),
         domainMixture(s, d).select(col("source"), col("mix_ppm")))),
@@ -396,7 +396,7 @@ object SparkEntry {
     // under frozen corpus state — see Release.releaseDiff.
     "q147_release_diff" -> ((s, d) =>
       graft.pipeline.Release.releaseDiffFromSurvivors(
-        graft.warehouse.Warehouse.releaseSurvivors(s, d),
+        graft.warehouse.Warehouse.read(s, d, "release_survivors"),
         Tables.documents(s, d).select(col("source")).distinct(),
         domainMixture(s, d).select(col("source"), col("mix_ppm")),
         isNew = pmod(col("doc_id"), lit(10)) === 7)),
@@ -413,25 +413,21 @@ object SparkEntry {
       val wh = graft.warehouse.Warehouse
       val victims = Tables.documents(s, d).select(col("doc_id").as("key"))
         .where(pmod(col("doc_id"), lit(37)) === 5)
-      val base = graft.operators.Erasure.audit(Seq(
-          ("bm25_doclens", wh.bm25DocLens(s, d), "doc_id"),
-          ("bm25_postings", wh.bm25Postings(s, d), "doc_id"),
-          ("doc_hashsets", wh.docHashsets(s, d), "doc_id"),
-          ("gram_occurrences", wh.gramOccurrences(s, d), "doc_id"),
-          // the survivor pool carries the victims' SCRUBBED TEXT — the
-          // artifact where a missed delete is retained personal data,
-          // not just index drift (the StreamErasure finding)
-          ("release_survivors", wh.releaseSurvivors(s, d), "doc_id"),
-          ("token_positions", wh.tokenPositions(s, d), "doc_id")), victims)
+      // release_survivors carries the victims' SCRUBBED TEXT — the
+      // artifact where a missed delete is retained personal data, not
+      // just index drift (the StreamErasure finding)
+      val base = graft.operators.Erasure.audit(Seq("bm25_doclens", "bm25_postings",
+          "doc_hashsets", "gram_occurrences", "release_survivors", "token_positions")
+          .map(n => (n, wh.read(s, d, n), "doc_id")), victims)
         .withColumn("n_repaired", lit(0L))
       val pairsRow = graft.operators.Erasure.auditAny("neardup_pairs",
-          wh.nearDupPairs(s, d), Seq("doc_a", "doc_b"), victims)
+          wh.read(s, d, "neardup_pairs"), Seq("doc_a", "doc_b"), victims)
         .withColumn("n_repaired", lit(0L))
       // index repair stats in ONE pass over the gram table: per-hash
       // (total, victim-carried) counts decide survival — a hash dies
       // iff its every occurrence was a victim's; leaked is the
       // measured count of survivors with no surviving occurrence
-      val go = wh.gramOccurrences(s, d)
+      val go = wh.read(s, d, "gram_occurrences")
       // leased (r15): perH is probed three times below (the 3-count
       // aggregate, the victim-only leak set, and the repair's index
       // input) — unleased, each probe re-ran the gram-wide groupBy
@@ -463,7 +459,7 @@ object SparkEntry {
         .select(lit("gram_index").as("table_name"), col("n_before"),
           col("n_deleted"), col("n_after"), col("n_leaked"),
           lit(0L).as("n_repaired"))
-      val cl = wh.nearDupClusters(s, d)
+      val cl = wh.read(s, d, "neardup_clusters")
       // leased (r15): three of the four crossJoined counts below probe
       // rel — unleased, the erase+relabel subtree re-executed per probe
       val rel = graft.Graft.lease(
@@ -491,14 +487,14 @@ object SparkEntry {
     // already perfect.
     "q130_triplet_export" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val exact = graft.warehouse.Warehouse.knnExact(s, d)
+      val exact = graft.warehouse.Warehouse.read(s, d, "knn_exact")
       val pos = exact.where(col("rank") === 1)
         .select(col("qid"), col("nid").as("pos_id"),
           expr("CAST(floor(cosine * 1000000.0) AS BIGINT)").as("pos_cos_micro"))
       val negs = Similarity.rerankExact(emb,
         Similarity.rrfFuse(Seq(
-            graft.warehouse.Warehouse.annLshTopk(s, d),
-            graft.warehouse.Warehouse.annIvfTopk(s, d)))
+            graft.warehouse.Warehouse.read(s, d, "ann_lsh_topk"),
+            graft.warehouse.Warehouse.read(s, d, "ann_ivf_topk")))
           .join(exact.select(col("qid"), col("nid")), Seq("qid", "nid"), "left_anti"))
       val bestNeg = negs.groupBy(col("qid"))
         .agg(min(struct(col("retr_rank"), col("nid"), col("cos_micro"))).as("b"))
@@ -515,7 +511,7 @@ object SparkEntry {
     // the curve an ingestion pipeline watches to see dedup pressure
     // build. One read of the pair artifact, no re-pairing.
     "q131_dedup_burndown" -> ((s, d) => {
-      val pairs = graft.warehouse.Warehouse.nearDupPairs(s, d)
+      val pairs = graft.warehouse.Warehouse.read(s, d, "neardup_pairs")
         .select(col("doc_a"), col("doc_b"))
       val dir = pairs.select(col("doc_a").as("x"), col("doc_b").as("y"))
         .unionByName(pairs.select(col("doc_b").as("x"), col("doc_a").as("y")))
@@ -597,11 +593,11 @@ object SparkEntry {
       Similarity.marginMiningBetween(
         e.where(pmod(col("vec_id"), lit(10)) === 7),
         e.where(pmod(col("vec_id"), lit(10)) =!= 7),
-        graft.warehouse.Warehouse.ivfAssign(s, d),
-        graft.warehouse.Warehouse.ivfCodebook(s, d),
-        corpusDenoms = Some(graft.warehouse.Warehouse.marginDenoms(s, d)),
-        supercells = Some(graft.warehouse.Warehouse.ivfSuperCells(s, d)),
-        superMap = Some(graft.warehouse.Warehouse.ivfSuperMap(s, d)))
+        graft.warehouse.Warehouse.read(s, d, "ivf_assign"),
+        graft.warehouse.Warehouse.read(s, d, "ivf_codebook"),
+        corpusDenoms = Some(graft.warehouse.Warehouse.read(s, d, "margin_denoms")),
+        supercells = Some(graft.warehouse.Warehouse.read(s, d, "ivf_supercells")),
+        superMap = Some(graft.warehouse.Warehouse.read(s, d, "ivf_super_map")))
     }),
     // INDEX-DRIFT monitor — the retrain trigger every frozen-codebook
     // deployment needs: per-cell occupancy of the landed corpus
@@ -613,18 +609,18 @@ object SparkEntry {
     // zero-occupancy cells report too.
     "q143_index_drift" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      val ca = graft.warehouse.Warehouse.ivfAssign(s, d)
+      val ca = graft.warehouse.Warehouse.read(s, d, "ivf_assign")
         .where(col("rn") === 1)
         .where(pmod(col("vec_id"), lit(10)) =!= 7)
         .groupBy(col("cell")).agg(count(lit(1)).as("corpus_n"))
       val ba = Similarity.cellRankAuto(
           e.where(pmod(col("vec_id"), lit(10)) === 7),
-          graft.warehouse.Warehouse.ivfCodebook(s, d), probes = 1,
-          supercells = Some(graft.warehouse.Warehouse.ivfSuperCells(s, d)),
-          superMap = Some(graft.warehouse.Warehouse.ivfSuperMap(s, d)))
+          graft.warehouse.Warehouse.read(s, d, "ivf_codebook"), probes = 1,
+          supercells = Some(graft.warehouse.Warehouse.read(s, d, "ivf_supercells")),
+          superMap = Some(graft.warehouse.Warehouse.read(s, d, "ivf_super_map")))
         .where(col("rn") === 1)
         .groupBy(col("cell")).agg(count(lit(1)).as("batch_n"))
-      val cells = graft.warehouse.Warehouse.ivfCodebook(s, d)
+      val cells = graft.warehouse.Warehouse.read(s, d, "ivf_codebook")
         .select(col("cid").as("cell"))
       val joined = cells
         .join(ca, Seq("cell"), "left").join(ba, Seq("cell"), "left")
@@ -653,7 +649,7 @@ object SparkEntry {
       // batch's own aggregate + a label-cardinality join, never a
       // corpus re-scan (the q76/q77 discipline for the monitor).
       Similarity.centroidDriftFromSums(
-        graft.warehouse.Warehouse.labelCentroidSumsBase(s, d),
+        graft.warehouse.Warehouse.read(s, d, "label_centroid_sums_base"),
         e.where(pmod(col("vec_id"), lit(10)) === 7))
     }),
     // Quality-DISTRIBUTION drift — the PSI-style curation-gate monitor
@@ -663,7 +659,7 @@ object SparkEntry {
     // assignment against ONE broadcast edge array.
     "q157_quality_drift" -> ((s, d) =>
       graft.text.Curation.qualityDrift(
-        graft.warehouse.Warehouse.docQuality(s, d),
+        graft.warehouse.Warehouse.read(s, d, "doc_quality"),
         pmod(col("doc_id"), lit(10)) === graft.warehouse.Warehouse.HoldoutMod)),
     // Batch GRAM-NOVELTY monitor — "does this crawl bring anything
     // new?": the arriving batch's gram occurrences vs the maintained
@@ -673,12 +669,12 @@ object SparkEntry {
     "q158_batch_novelty" -> ((s, d) => {
       val wh = graft.warehouse.Warehouse
       graft.text.SegmentDedup.batchNovelty(
-        wh.gramOccurrences(s, d)
+        wh.read(s, d, "gram_occurrences")
           .where(pmod(col("doc_id"), lit(10)) === wh.HoldoutMod),
         Tables.documents(s, d)
           .where(pmod(col("doc_id"), lit(10)) === wh.HoldoutMod)
           .select(col("doc_id"), col("source")),
-        wh.gramIndexBase(s, d),
+        wh.read(s, d, "gram_index_base"),
         Some(wh.gramBloomBase(s, d)))
     }),
     // Deterministic EPOCH SHUFFLE — the dataloader order: seeded
@@ -735,7 +731,7 @@ object SparkEntry {
     // fingerprint aggregate is map-side combinable.
     "q161_release_manifest" -> ((s, d) => {
       val rel = graft.pipeline.Release
-      val surv = graft.Graft.lease(graft.warehouse.Warehouse.releaseSurvivors(s, d))
+      val surv = graft.Graft.lease(graft.warehouse.Warehouse.read(s, d, "release_survivors"))
       // r16: thresholds + rates from ONE windowed decision-table pass
       // (the r15 card fold — oracle-pinned bit-equal to the
       // gateThresholds → mixtureRates cascade it replaces); the gate
@@ -769,7 +765,7 @@ object SparkEntry {
       // already owns
       val dd = Tables.documents(s, d).select(col("doc_id"), col("text"))
       graft.text.TextDedup.bandOccupancyAudit(
-        graft.text.TextDedup.repDocs(dd, graft.warehouse.Warehouse.exactReps(s, d)))
+        graft.text.TextDedup.repDocs(dd, graft.warehouse.Warehouse.read(s, d, "exact_reps")))
     }),
     // Malformed-payload quarantine: the synthesized media corpus
     // carries PLANTED corrupt blobs by deterministic rule (truncated
@@ -833,9 +829,9 @@ object SparkEntry {
     // partial-probe agreement rate).
     "q164_two_level_assign" -> ((s, d) => Similarity.cellAssignmentsTwoLevel(
       Tables.embeddings(s, d),
-      graft.warehouse.Warehouse.ivfCodebook(s, d),
-      graft.warehouse.Warehouse.ivfSuperCells(s, d),
-      graft.warehouse.Warehouse.ivfSuperMap(s, d))),
+      graft.warehouse.Warehouse.read(s, d, "ivf_codebook"),
+      graft.warehouse.Warehouse.read(s, d, "ivf_supercells"),
+      graft.warehouse.Warehouse.read(s, d, "ivf_super_map"))),
     // Mixed-language / code-switching audit: the q21 stopword vote per
     // SENTENCE vs per document — the pre-filter a monolingual slice
     // needs before trusting doc-level language ids.
@@ -855,7 +851,7 @@ object SparkEntry {
       }
       val sp = Tables.documents(s, d)
         .select(col("doc_id"), splitOf(col("doc_id")).as("split"))
-      val g = graft.warehouse.Warehouse.gramOccurrences(s, d)
+      val g = graft.warehouse.Warehouse.read(s, d, "gram_occurrences")
         .join(sp, Seq("doc_id"))
       val trainGrams = g.where(col("split") === "train").select(col("h")).distinct()
       val contam = g.where(col("split") =!= "train")
@@ -886,11 +882,11 @@ object SparkEntry {
         sum(col("n_chars")).as("total_chars"),
         countDistinct(col("lang")).as("n_langs"))
       val qual = dd.select(col("doc_id"), col("source"))
-        .join(graft.warehouse.Warehouse.docQuality(s, d), Seq("doc_id"))
+        .join(graft.warehouse.Warehouse.read(s, d, "doc_quality"), Seq("doc_id"))
         .groupBy(col("source"))
         .agg(sum(col("quality")).as("sq"), count(lit(1)).as("nq"))
         .select(col("source"), expr("sq div nq").as("avg_quality"))
-      val cl = graft.warehouse.Warehouse.nearDupClusters(s, d)
+      val cl = graft.warehouse.Warehouse.read(s, d, "neardup_clusters")
       val sizes = cl.groupBy(col("cluster_id")).agg(count(lit(1)).as("n_members"))
       val ret = dd.join(
           cl.join(sizes, Seq("cluster_id"))
@@ -899,7 +895,7 @@ object SparkEntry {
         .groupBy(col("source"))
         .agg(sum(expr("n_chars * weight_ppm")).as("effm"), sum(col("n_chars")).as("rc"))
         .select(col("source"), expr("effm div rc").as("retention_ppm"))
-      val gram = graft.warehouse.Warehouse.gramOccurrences(s, d)
+      val gram = graft.warehouse.Warehouse.read(s, d, "gram_occurrences")
         .join(dd.select(col("doc_id"), col("source")), Seq("doc_id"))
         .groupBy(col("source"), col("h")).agg(count(lit(1)).as("c"))
         .groupBy(col("source")).agg(sum(col("c")).as("tg"), count(lit(1)).as("dg"))
@@ -919,8 +915,8 @@ object SparkEntry {
     // the gate checks the artifact too (the q29/q44 replay).
     "q125_margin_mining" -> ((s, d) =>
       Similarity.marginMining(Tables.embeddings(s, d),
-        graft.warehouse.Warehouse.ivfAssign(s, d),
-        denoms = Some(graft.warehouse.Warehouse.marginDenoms(s, d)))),
+        graft.warehouse.Warehouse.read(s, d, "ivf_assign"),
+        denoms = Some(graft.warehouse.Warehouse.read(s, d, "margin_denoms")))),
     // Duplicate-aware DOWN-WEIGHTING (soft dedup): instead of dropping
     // non-keepers, every doc weights 1e6/cluster_size — each near-dup
     // cluster contributes one doc's worth of mass no matter how wide.
@@ -929,7 +925,7 @@ object SparkEntry {
     // designer reads next to q86's quotas. Reads corpus state (cluster
     // artifact); one grouped agg + two joins.
     "q126_soft_dedup_weights" -> ((s, d) => {
-      val cl = graft.warehouse.Warehouse.nearDupClusters(s, d)
+      val cl = graft.warehouse.Warehouse.read(s, d, "neardup_clusters")
       val sizes = cl.groupBy(col("cluster_id")).agg(count(lit(1)).as("n_members"))
       val w = cl.join(sizes, Seq("cluster_id"))
         .select(col("doc_id"), expr("1000000L div n_members").as("weight_ppm"))
@@ -988,7 +984,7 @@ object SparkEntry {
     // generation itself is map-only (Cooccur.pairCounts; zero joins).
     // The oracle unrolls the identical recurrence in DuckDB CTEs.
     "q101_textrank" -> ((s, d) => graft.text.TextRank.keywordsFromPairs(
-      graft.warehouse.Warehouse.cooccurEdges(s, d))),
+      graft.warehouse.Warehouse.read(s, d, "cooccur_edges"))),
     // Corpus-graph centrality: fixed-iteration integer PageRank over
     // the MinHash-LSH near-dup graph (q14's pairs) — ranks documents
     // WITHIN their duplicate blobs (canonical-representative pick) and
@@ -1005,7 +1001,7 @@ object SparkEntry {
       graft.Graft.lease(graft.text.HashedLinearModel.score(docs(s, d)))
         .orderBy("doc_id")),
     "q105_pagerank" -> ((s, d) => {
-      val pairs = graft.warehouse.Warehouse.nearDupPairs(s, d)
+      val pairs = graft.warehouse.Warehouse.read(s, d, "neardup_pairs")
       graft.operators.PageRank.ranks(
           docs(s, d).select(col("doc_id").as("id")),
           pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
@@ -1016,7 +1012,7 @@ object SparkEntry {
     // split by Jaccard ppm — rank flows toward the most TIGHTLY
     // duplicated variant, the better canonical pick within a blob.
     "q112_weighted_pagerank" -> ((s, d) => {
-      val pairs = graft.warehouse.Warehouse.nearDupPairs(s, d)
+      val pairs = graft.warehouse.Warehouse.read(s, d, "neardup_pairs")
         .select(col("doc_a").as("src"), col("doc_b").as("dst"),
           expr("CAST(floor(jaccard * 1000000.0) AS BIGINT)").as("w"))
       graft.operators.PageRank.ranksWeighted(
@@ -1054,8 +1050,8 @@ object SparkEntry {
     // expensive stage earned its cost.
     "q114_rerank_exact" -> ((s, d) => {
       Similarity.rerankExact(Tables.embeddings(s, d), Similarity.rrfFuse(Seq(
-        graft.warehouse.Warehouse.annLshTopk(s, d),
-        graft.warehouse.Warehouse.annIvfTopk(s, d))))
+        graft.warehouse.Warehouse.read(s, d, "ann_lsh_topk"),
+        graft.warehouse.Warehouse.read(s, d, "ann_ivf_topk"))))
     }),
     // Cross-source duplication matrix: which sources copy from which —
     // the near-dup PAIR table joined twice to the doc→source dim and
@@ -1069,7 +1065,7 @@ object SparkEntry {
     // trusting per-source quotas (q86).
     "q116_source_overlap" -> ((s, d) => {
       val src = Tables.documents(s, d).select(col("doc_id"), col("source"))
-      graft.warehouse.Warehouse.nearDupPairs(s, d)
+      graft.warehouse.Warehouse.read(s, d, "neardup_pairs")
         .join(src.select(col("doc_id").as("doc_a"), col("source").as("source_a")), Seq("doc_a"))
         .join(src.select(col("doc_id").as("doc_b"), col("source").as("source_b")), Seq("doc_b"))
         .select(least(col("source_a"), col("source_b")).as("src_x"),
@@ -1088,8 +1084,8 @@ object SparkEntry {
       val emb = Tables.embeddings(s, d)
       val exact = Similarity.knnGlobalSampled(emb).select(col("qid"), col("nid"))
       val fused = Similarity.rrfFuse(Seq(
-          graft.warehouse.Warehouse.annLshTopk(s, d),
-          graft.warehouse.Warehouse.annIvfTopk(s, d)))
+          graft.warehouse.Warehouse.read(s, d, "ann_lsh_topk"),
+          graft.warehouse.Warehouse.read(s, d, "ann_ivf_topk")))
         .select(col("qid").as("aqid"), col("nid").as("anid"))
       exact
         .join(fused, col("qid") === col("aqid") && col("nid") === col("anid"), "left")
@@ -1111,10 +1107,10 @@ object SparkEntry {
     // via the bounded rerank (k·queries pairs, corpus-independent).
     "q118_hard_negatives" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val exact = graft.warehouse.Warehouse.knnExact(s, d).select(col("qid"), col("nid"))
+      val exact = graft.warehouse.Warehouse.read(s, d, "knn_exact").select(col("qid"), col("nid"))
       val fused = Similarity.rrfFuse(Seq(
-        graft.warehouse.Warehouse.annLshTopk(s, d),
-        graft.warehouse.Warehouse.annIvfTopk(s, d)))
+        graft.warehouse.Warehouse.read(s, d, "ann_lsh_topk"),
+        graft.warehouse.Warehouse.read(s, d, "ann_ivf_topk")))
       val negs = fused.join(exact, Seq("qid", "nid"), "left_anti")
       Similarity.rerankExact(emb, negs)
         .select(col("qid"), col("nid"), col("retr_rank"), col("cos_micro"))
@@ -1131,7 +1127,7 @@ object SparkEntry {
         val b = pmod(graft.functions.PortableHash.h60(c.cast("string")), lit(10L))
         when(b < 8, "train").when(b < 9, "val").otherwise("test")
       }
-      graft.warehouse.Warehouse.nearDupClusters(s, d)
+      graft.warehouse.Warehouse.read(s, d, "neardup_clusters")
         .select(col("doc_id"), col("cluster_id"),
           splitOf(col("cluster_id")).as("split"),
           (splitOf(col("cluster_id")) =!= splitOf(col("doc_id"))).cast("int").as("moved"))
@@ -1144,8 +1140,8 @@ object SparkEntry {
     // re-rank is the standard recall lever; this measures it in-engine.
     "q117_rerank_recall" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val lsh = graft.warehouse.Warehouse.annLshTopk(s, d)
-      val ivf = graft.warehouse.Warehouse.annIvfTopk(s, d)
+      val lsh = graft.warehouse.Warehouse.read(s, d, "ann_lsh_topk")
+      val ivf = graft.warehouse.Warehouse.read(s, d, "ann_ivf_topk")
       // (r16 note: a fuse-once + leased variant — one k=6 fusion, the
       // top-3 as its prefix, both method frames leased for the two
       // truth probes — measured 0.64× in the interleaved final A/B:
@@ -1173,7 +1169,7 @@ object SparkEntry {
     // statistic) — the "did compression keep the geometry" gate.
     "q111_jl_distortion" -> ((s, d) =>
       graft.vector.RandomProjection.distortionAudit(Tables.embeddings(s, d),
-        graft.warehouse.Warehouse.ivfAssign(s, d))),
+        graft.warehouse.Warehouse.read(s, d, "ivf_assign"))),
     // Output-shard manifest: deterministic 16 KiB-budget shard
     // assignment by cumulative byte offset (the webdataset/WARC shard-
     // writing step) rolled up to the per-shard index a random-access
@@ -1207,7 +1203,7 @@ object SparkEntry {
     // clustering coefficient — distinguishes clique-shaped duplicate
     // blobs (template spam) from chain-shaped ones (drifted revisions).
     "q107_triangles" -> ((s, d) => {
-      val pairs = graft.warehouse.Warehouse.nearDupPairs(s, d)
+      val pairs = graft.warehouse.Warehouse.read(s, d, "neardup_pairs")
       graft.operators.Triangles.perNode(
           docs(s, d).select(col("doc_id").as("id")),
           pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
@@ -1225,8 +1221,8 @@ object SparkEntry {
     // materialized warehouse artifacts (pair graph + closure) — two
     // id-keyed aggregates and one cluster-keyed join, never text.
     "q149_cluster_chain_audit" -> ((s, d) => {
-      val cl = graft.warehouse.Warehouse.nearDupClusters(s, d)
-      val pe = graft.warehouse.Warehouse.nearDupPairs(s, d)
+      val cl = graft.warehouse.Warehouse.read(s, d, "neardup_clusters")
+      val pe = graft.warehouse.Warehouse.read(s, d, "neardup_pairs")
         .join(cl.select(col("doc_id").as("doc_a"), col("cluster_id")), Seq("doc_a"))
         .groupBy("cluster_id")
         .agg(count(lit(1)).as("n_edges"),
@@ -1251,8 +1247,8 @@ object SparkEntry {
     "q150_chain_cut" -> ((s, d) =>
       graft.operators.Components.chainCut(
           docs(s, d).select(col("doc_id").as("id")),
-          graft.warehouse.Warehouse.nearDupClusters(s, d),
-          graft.warehouse.Warehouse.nearDupPairs(s, d))
+          graft.warehouse.Warehouse.read(s, d, "neardup_clusters"),
+          graft.warehouse.Warehouse.read(s, d, "neardup_pairs"))
         .orderBy("doc_id")),
     // DSIR importance weights (Xie et al. 2023): target-vs-raw hashed
     // bigram likelihood ratio per doc, integer-ppm fixed point — the
@@ -1280,7 +1276,7 @@ object SparkEntry {
             .where(pmod(col("doc_id"), lit(10)) ===
               graft.warehouse.Warehouse.HoldoutMod)
             .select(col("doc_id"), col("text")))),
-        graft.warehouse.Warehouse.dsirCounts(s, d))),
+        graft.warehouse.Warehouse.read(s, d, "dsir_counts"))),
     // DSIR resampling REALIZED: deterministic hash-threshold keep with
     // probability ∝ importance weight, targeting 1/4 of the corpus —
     // the weights→dataset step the paper's pipeline ends with. Keep
@@ -1295,14 +1291,14 @@ object SparkEntry {
     "q155_split_leakage" -> ((s, d) =>
       graft.text.Curation.splitLeakage(
         Tables.documents(s, d).select(col("doc_id"), col("source")),
-        graft.warehouse.Warehouse.nearDupPairs(s, d))),
+        graft.warehouse.Warehouse.read(s, d, "neardup_pairs"))),
     // Hybrid-retrieval ensemble: reciprocal-rank fusion of the LSH
     // (q18) and materialized-IVF (q29) top-3 lists — integer-micros
     // RRF, fused over the bounded lists only (never the corpus). The
     // oracle replays both searches AND the fusion.
     "q102_rrf_ensemble" -> ((s, d) => Similarity.rrfFuse(Seq(
-      graft.warehouse.Warehouse.annLshTopk(s, d),
-      graft.warehouse.Warehouse.annIvfTopk(s, d)))),
+      graft.warehouse.Warehouse.read(s, d, "ann_lsh_topk"),
+      graft.warehouse.Warehouse.read(s, d, "ann_ivf_topk")))),
     // Ensemble-recall eval: recall@3 per label for LSH, IVF, and their
     // RRF fusion against blocked-exact ground truth — the q99 eval
     // extended to answer "does the ensemble pay for itself" inside the
@@ -1314,8 +1310,8 @@ object SparkEntry {
     // ensemble caveat this eval exists to surface.
     "q104_ensemble_recall" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val lsh = graft.warehouse.Warehouse.annLshTopk(s, d)
-      val ivf = graft.warehouse.Warehouse.annIvfTopk(s, d)
+      val lsh = graft.warehouse.Warehouse.read(s, d, "ann_lsh_topk")
+      val ivf = graft.warehouse.Warehouse.read(s, d, "ann_ivf_topk")
       // (r16 note: leasing the fused list for its two truth probes
       // measured 0.67× in the interleaved final A/B — same lesson as
       // q117: on a bounded artifact-fed subtree the fill serializes
@@ -1337,9 +1333,9 @@ object SparkEntry {
     // q44 replay), so the gate checks the whole materialized index.
     "q103_pq_recon_error" -> ((s, d) => graft.vector.ProductQuant.cellReconstructionError(
       Tables.embeddings(s, d),
-      graft.warehouse.Warehouse.pqCodes(s, d),
-      graft.warehouse.Warehouse.pqCodebooksDf(s, d),
-      graft.warehouse.Warehouse.ivfAssign(s, d), dim = 64)),
+      graft.warehouse.Warehouse.read(s, d, "pq_codes"),
+      graft.warehouse.Warehouse.read(s, d, "pq_codebooks"),
+      graft.warehouse.Warehouse.read(s, d, "ivf_assign"), dim = 64)),
     // Retrieval-quality eval INSIDE the engine (the langid-eval q46
     // pattern applied to ANN): recall@3 of the hyperplane-LSH index
     // (q18) against blocked exact kNN (q17) as ground truth, rolled up
@@ -1349,7 +1345,7 @@ object SparkEntry {
     // hash-join on (qid, nid), no collect.
     "q99_ann_recall" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val ann = graft.warehouse.Warehouse.annLshTopk(s, d)
+      val ann = graft.warehouse.Warehouse.read(s, d, "ann_lsh_topk")
       recallTruths(s, d).map { case (tn, truth) =>
         recallRollup(emb, truth, ann)
           .select(col("label"), lit(tn).as("truth"), col("n_queries"),
@@ -1384,7 +1380,7 @@ object SparkEntry {
     // operator's contract (property-gated in SnapshotDiffSpec); the
     // oracle replays the apply algebra itself, not the shortcut.
     "q97_cdc_apply" -> ((s, d) => {
-      val dim = graft.warehouse.Warehouse.dimOrders(s, d)
+      val dim = graft.warehouse.Warehouse.read(s, d, "dim_orders")
       def at(t: String) = graft.operators.AsOfJoin.currentAt(dim, t)
         .select(col("order_id"), col("status"))
       val s1 = at("2024-01-08 00:00:00")
@@ -1483,7 +1479,7 @@ object SparkEntry {
     // COMPOSE exactly (the oracle replays the whole path in SQL).
     "q45_training_prep" -> ((s, d) => {
       val ds = docs(s, d)
-      val keepers = graft.warehouse.Warehouse.nearDupClusters(s, d)
+      val keepers = graft.warehouse.Warehouse.read(s, d, "neardup_clusters")
         .where(col("doc_id") === col("cluster_id"))
         .select(col("doc_id"))
       val chunks = graft.text.Chunking.tokenWindows(ds.join(keepers, Seq("doc_id")))
@@ -1501,7 +1497,7 @@ object SparkEntry {
     // report in deciles ≥ 10, deliberately unclamped). Integer ppm
     // arithmetic; source-cardinality-free (pack-count-sized rollup).
     "q148_pack_efficiency" -> ((s, d) => {
-      val keepers = graft.warehouse.Warehouse.nearDupClusters(s, d)
+      val keepers = graft.warehouse.Warehouse.read(s, d, "neardup_clusters")
         .where(col("doc_id") === col("cluster_id")).select(col("doc_id"))
       val chunks = graft.text.Chunking.tokenWindows(docs(s, d).join(keepers, Seq("doc_id")))
       graft.operators.PrefixSum
@@ -1529,11 +1525,11 @@ object SparkEntry {
     // integer so the SAME two-level distributed prefix sum assigns
     // pack ids — no global sort of the chunk stream, ever.
     "q142_curriculum_pack" -> ((s, d) => {
-      val keepers = graft.warehouse.Warehouse.nearDupClusters(s, d)
+      val keepers = graft.warehouse.Warehouse.read(s, d, "neardup_clusters")
         .where(col("doc_id") === col("cluster_id")).select(col("doc_id"))
       val chunks = graft.text.Chunking
         .tokenWindows(docs(s, d).join(keepers, Seq("doc_id")))
-        .join(graft.warehouse.Warehouse.docQuality(s, d), Seq("doc_id"))
+        .join(graft.warehouse.Warehouse.read(s, d, "doc_quality"), Seq("doc_id"))
       // composite bounds: quality < 2^23 by construction (4 flag
       // levels × 2^20 + chars capped at 2^20−1); doc_id*1024+chunk
       // must fit 2^34 — guarded, same discipline as chunkOrderKey
@@ -1578,7 +1574,7 @@ object SparkEntry {
     // any-shared-shingle join — the hash-match proves the containment
     // prefix filter has perfect recall.
     "q40_contamination" -> ((s, d) => {
-      val hs = graft.warehouse.Warehouse.docHashsets(s, d)
+      val hs = graft.warehouse.Warehouse.read(s, d, "doc_hashsets")
       TextDedup.containmentPairsFromHashsets(
         hs.where(col("doc_id") % 10 === 0),
         hs.where(col("doc_id") % 10 =!= 0))
@@ -1629,7 +1625,7 @@ object SparkEntry {
     // the warehouse (`neardup_clusters`, exactly like the dims) — the
     // query projects sizes and keepers from the materialized table.
     "q35_neardup_clusters" -> ((s, d) => {
-      val comp = graft.warehouse.Warehouse.nearDupClusters(s, d)
+      val comp = graft.warehouse.Warehouse.read(s, d, "neardup_clusters")
       val sizes = comp.groupBy(col("cluster_id")).agg(count(lit(1)).as("n_members"))
       comp.join(sizes, Seq("cluster_id"))
         .select(col("doc_id"), col("cluster_id"), col("n_members"),
@@ -1757,7 +1753,7 @@ object SparkEntry {
       // re-running the full shingle → minhash → band → verify chain per
       // query (the artifact IS minhashLshPairs' output; oracle replays
       // the whole derivation from documents)
-      graft.warehouse.Warehouse.nearDupPairs(s, d)
+      graft.warehouse.Warehouse.read(s, d, "neardup_pairs")
         .join(split.select(col("doc_id").as("doc_a"), col("split").as("split_a")), Seq("doc_a"))
         .join(split.select(col("doc_id").as("doc_b"), col("split").as("split_b")), Seq("doc_b"))
         .where(col("split_a") =!= col("split_b"))
@@ -1845,7 +1841,7 @@ object SparkEntry {
     }),
     // BPE merge table: the trained tokenizer. Like the ANN codebooks,
     // the rules are CORPUS STATE — trained once per corpus build
-    // (Warehouse.buildBpeMerges; training cost lands in
+    // (warehouse `bpe_merges`; training cost lands in
     // warehouse_build_sec, exactly the reference's build-nightly/
     // query-often split) and READ here. Oracle-gated since r7: the
     // iteration count is a fixed training constant, so the argmax loop
@@ -1910,13 +1906,13 @@ object SparkEntry {
         .orderBy("lang")
     }),
     // Date-RANGED daily metric over the day-partitioned events
-    // artifact (Warehouse.eventsByDay): the filter on the partition
+    // artifact (`events_by_day`): the filter on the partition
     // column reaches the scan as a PartitionFilter (PlanShapeSpec pins
     // it), so only the seven matching day directories are read — at
     // 100 TB the years outside the window cost nothing. Fixed-point
     // value sums keep both engines exact.
     "q145_events_day_range" -> ((s, d) =>
-      graft.warehouse.Warehouse.eventsByDay(s, d)
+      graft.warehouse.Warehouse.read(s, d, "events_by_day")
         .where(col("day").between(lit("2024-01-10"), lit("2024-01-16")))
         .groupBy(col("day"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
@@ -1926,7 +1922,7 @@ object SparkEntry {
     // a 3-day window — a point-lookup-ish range whose scan reads 3 of
     // 30 partitions (PartitionFilters pinned alongside q145).
     "q146_events_recent_window" -> ((s, d) =>
-      graft.warehouse.Warehouse.eventsByDay(s, d)
+      graft.warehouse.Warehouse.read(s, d, "events_by_day")
         .where(col("day") >= lit("2024-01-28"))
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_events"),
@@ -1979,7 +1975,7 @@ object SparkEntry {
     // so a silent stage-order or flag regression shifts a count.
     // r16: artifact-path twin of the q28 change (same neardup_pairs)
     "q75_curation_funnel" -> ((s, d) => Curation.funnelFromPairs(docs(s, d),
-      graft.warehouse.Warehouse.nearDupPairs(s, d))),
+      graft.warehouse.Warehouse.read(s, d, "neardup_pairs"))),
     // BM25 retrieval over the corpus for a fixed query-term set —
     // integer-micros scoring (no libm ln), bounded top-k, reading the
     // MATERIALIZED inverted index + doc lengths (the corpus text is
@@ -1988,8 +1984,8 @@ object SparkEntry {
     // compile-time constants mirrored in the oracle.
     "q80_bm25_search" -> ((s, d) =>
       TextAnalysis.bm25FromIndex(
-        graft.warehouse.Warehouse.bm25Postings(s, d),
-        graft.warehouse.Warehouse.bm25DocLens(s, d), Bm25Terms, 20)),
+        graft.warehouse.Warehouse.read(s, d, "bm25_postings"),
+        graft.warehouse.Warehouse.read(s, d, "bm25_doclens"), Bm25Terms, 20)),
     // Ranked posting lists per query term (top-10 by the term's BM25
     // partial, ranked at e9 so the top-k DOUBLE state stays exact —
     // see bm25TopkPerTerm's bound note) — the sparse-retrieval serving
@@ -1998,22 +1994,22 @@ object SparkEntry {
     // sort window.
     "q133_bm25_postings" -> ((s, d) =>
       TextAnalysis.bm25TopkPerTermFromIndex(
-        graft.warehouse.Warehouse.bm25Postings(s, d),
-        graft.warehouse.Warehouse.bm25DocLens(s, d), Bm25Terms, 10)),
+        graft.warehouse.Warehouse.read(s, d, "bm25_postings"),
+        graft.warehouse.Warehouse.read(s, d, "bm25_doclens"), Bm25Terms, 10)),
     // SemDeDup: semantic near-dup removal within trained IVF cells —
     // the embedding-space twin of q14's LSH dedup. Training stays
     // spec-gated (k-means); the dedup stage under the fixed codebook
     // is assignment + in-cell pairs, which the oracle replays over the
     // materialized codebook parquet (q29's mechanism).
     "q81_semantic_dedup" -> ((s, d) => Similarity.semanticDedup(
-      Tables.embeddings(s, d), graft.warehouse.Warehouse.ivfCodebook(s, d),
-      supercells = Some(graft.warehouse.Warehouse.ivfSuperCells(s, d)),
-      superMap = Some(graft.warehouse.Warehouse.ivfSuperMap(s, d)))),
+      Tables.embeddings(s, d), graft.warehouse.Warehouse.read(s, d, "ivf_codebook"),
+      supercells = Some(graft.warehouse.Warehouse.read(s, d, "ivf_supercells")),
+      superMap = Some(graft.warehouse.Warehouse.read(s, d, "ivf_super_map")))),
     // Cross-document duplicated-n-gram coverage — suffix-array dedup's
     // distributed proxy: per doc, the fraction of its distinct shingles
     // that recur elsewhere in the corpus (boilerplate detector).
     "q82_dupgram_coverage" -> ((s, d) => TextDedup.dupGramCoverageFromHashsets(
-      graft.warehouse.Warehouse.docHashsets(s, d))),
+      graft.warehouse.Warehouse.read(s, d, "doc_hashsets"))),
     // Temperature-based multilingual mixing (the mT5/CC multinomial
     // recipe, α = ½): per-language keep rates ∝ √n_lang, applied as a
     // deterministic integer-ppm hash filter (q69's split mechanism).
@@ -2051,7 +2047,7 @@ object SparkEntry {
     // Counts overlapping occurrences — substring replace can't.
     "q84_phrase_search" -> ((s, d) =>
       graft.text.InvertedIndex.phraseSearchFromIndex(
-        graft.warehouse.Warehouse.tokenPositions(s, d), PhraseTerms)),
+        graft.warehouse.Warehouse.read(s, d, "token_positions"), PhraseTerms)),
     // Skip-gram co-occurrence with an integer PMI surrogate — the
     // word-embedding / collocation training-prep table. Window ±3 as a
     // map-side offset explode + (doc, pos) EQUI-join (never a range
@@ -2066,9 +2062,9 @@ object SparkEntry {
       // Edges and unigrams are warehouse corpus state (Cooccur.pairCounts
       // / unigramCounts, materialized once beside neardup_pairs); the
       // query is two broadcast probes of the vocabulary-sized tables.
-      val uni = graft.warehouse.Warehouse.tokenUnigrams(s, d)
+      val uni = graft.warehouse.Warehouse.read(s, d, "token_unigrams")
       val tot = uni.agg(sum(col("n")).as("n_tokens"))
-      graft.warehouse.Warehouse.cooccurEdges(s, d)
+      graft.warehouse.Warehouse.read(s, d, "cooccur_edges")
         .withColumnRenamed("w", "n_pair")
         .join(broadcast(uni.select(col("tok").as("tok_a"), col("n").as("na"))), Seq("tok_a"))
         .join(broadcast(uni.select(col("tok").as("tok_b"), col("n").as("nb"))), Seq("tok_b"))
@@ -2231,12 +2227,12 @@ object SparkEntry {
       val dd = docs(s, d)
       TextDedup.minhashLshPairsBetweenGrouped(
         dd.where(pmod(col("doc_id"), lit(10)) === 7),
-        graft.warehouse.Warehouse.exactRepsBase(s, d)
+        graft.warehouse.Warehouse.read(s, d, "exact_reps_base")
           .where(col("doc_id") === col("rep")),
-        graft.warehouse.Warehouse.bandSignaturesBase(s, d),
+        graft.warehouse.Warehouse.read(s, d, "band_signatures_base"),
         TextDedup.shingled(TextDedup.repDocs(
           dd.where(pmod(col("doc_id"), lit(10)) =!= 7),
-          graft.warehouse.Warehouse.exactRepsBase(s, d))).leased)
+          graft.warehouse.Warehouse.read(s, d, "exact_reps_base"))).leased)
     }),
     // Incremental ANN: today's embedding batch (vec_id % 10 = 7)
     // searched against the existing corpus index under the trained
@@ -2255,10 +2251,10 @@ object SparkEntry {
       Similarity.annIvfNewAgainstAssignedAuto(
         e.where(pmod(col("vec_id"), lit(10)) === 7),
         e.where(pmod(col("vec_id"), lit(10)) =!= 7),
-        graft.warehouse.Warehouse.ivfAssign(s, d),
-        graft.warehouse.Warehouse.ivfCodebook(s, d),
-        Some(graft.warehouse.Warehouse.ivfSuperCells(s, d)),
-        Some(graft.warehouse.Warehouse.ivfSuperMap(s, d)))
+        graft.warehouse.Warehouse.read(s, d, "ivf_assign"),
+        graft.warehouse.Warehouse.read(s, d, "ivf_codebook"),
+        Some(graft.warehouse.Warehouse.read(s, d, "ivf_supercells")),
+        Some(graft.warehouse.Warehouse.read(s, d, "ivf_super_map")))
     }),
     // Right-to-be-forgotten erasure audit: delete a deterministic
     // victim set (user_id % 97 = 13) across the event stream and the
@@ -2270,8 +2266,8 @@ object SparkEntry {
         .select(col("user_id").as("key")).distinct()
       graft.operators.Erasure.audit(Seq(
           ("events", Tables.events(s, d), "user_id"),
-          ("dim_orders", graft.warehouse.Warehouse.dimOrders(s, d), "order_id"),
-          ("fact_orders", graft.warehouse.Warehouse.factOrders(s, d), "order_id")),
+          ("dim_orders", graft.warehouse.Warehouse.read(s, d, "dim_orders"), "order_id"),
+          ("fact_orders", graft.warehouse.Warehouse.read(s, d, "fact_orders"), "order_id")),
           victims)
         .orderBy("table_name")
     }),
@@ -2320,7 +2316,7 @@ object SparkEntry {
     // validation primitive. Null-safe value compare; full-outer hash
     // join on the business key.
     "q62_snapshot_diff" -> ((s, d) => {
-      val dim = graft.warehouse.Warehouse.dimOrders(s, d)
+      val dim = graft.warehouse.Warehouse.read(s, d, "dim_orders")
       def at(t: String) = graft.operators.AsOfJoin.currentAt(dim, t)
         .select(col("order_id"), col("status"))
       graft.operators.SnapshotDiff
@@ -2470,8 +2466,9 @@ object SparkEntry {
     * the honest number you can actually afford at 100 TB). Both are
     * materialized warehouse artifacts; the evals are bounded joins. */
   private def recallTruths(s: SparkSession, d: String): Seq[(String, DataFrame)] = Seq(
-    ("blocked", graft.warehouse.Warehouse.knnExact(s, d).select(col("qid"), col("nid"))),
-    ("global3", graft.warehouse.Warehouse.knnGlobalSampled(s, d).select(col("qid"), col("nid"))))
+    ("blocked", graft.warehouse.Warehouse.read(s, d, "knn_exact").select(col("qid"), col("nid"))),
+    ("global3", graft.warehouse.Warehouse.read(s, d, "knn_global_sampled")
+      .select(col("qid"), col("nid"))))
 
   /** Per-label recall rollup of one ranked list against one truth
     * table — the shared kernel of the retrieval evals: hits = |truth ∩
@@ -2513,8 +2510,8 @@ object SparkEntry {
     * (quality, −doc_id) struct) — no window, no re-clustering, no
     * per-query corpus re-flagging. */
   private def qualityKeepers(s: SparkSession, d: String): DataFrame = {
-    val quality = graft.warehouse.Warehouse.docQuality(s, d)
-    graft.warehouse.Warehouse.nearDupClusters(s, d)
+    val quality = graft.warehouse.Warehouse.read(s, d, "doc_quality")
+    graft.warehouse.Warehouse.read(s, d, "neardup_clusters")
       .join(quality, Seq("doc_id"))
       .groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("n_members"),
@@ -2534,7 +2531,7 @@ object SparkEntry {
     * deficit_ppm, factor, w, mix_ppm). */
   private def domainMixture(s: SparkSession, d: String): DataFrame = {
     val perDoc = Tables.documents(s, d).select(col("doc_id"), col("source"))
-      .join(graft.warehouse.Warehouse.docQuality(s, d), Seq("doc_id"))
+      .join(graft.warehouse.Warehouse.read(s, d, "doc_quality"), Seq("doc_id"))
     // ONE corpus scan+join (pre-r15 the perDoc subtree was re-evaluated
     // 4× across glob/tot/final — 8 scans per mixture consumer), and the
     // global average / weight total attach as UNPARTITIONED WINDOW sums

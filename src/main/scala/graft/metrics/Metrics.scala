@@ -29,7 +29,7 @@ object Metrics {
     * (reference uses CURRENT_TIMESTAMP; injected for determinism). */
   def currentOrdersByStatus(spark: SparkSession, sfDir: String,
                             asOf: String = "2024-01-15 00:00:00"): DataFrame = {
-    AsOfJoin.currentAt(Warehouse.dimOrders(spark, sfDir), asOf)
+    AsOfJoin.currentAt(Warehouse.read(spark, sfDir, "dim_orders"), asOf)
       .groupBy(col("status"))
       .agg(count(lit(1)).as("order_count"))
       .orderBy("status")
@@ -46,7 +46,7 @@ object Metrics {
     * low-cardinality key. */
   def ordersQuarterCategory(spark: SparkSession, sfDir: String): DataFrame = {
     val li = Tables.lineitem(spark, sfDir).select(col("l_partkey"), col("l_shipdate"))
-    val dim = Warehouse.dimParts(spark, sfDir)
+    val dim = Warehouse.read(spark, sfDir, "dim_products")
     val dates = DimDates.build(spark)
     AsOfJoin(li, dim, "l_partkey", "id", li("l_shipdate"))
       .join(broadcast(dates), to_date(col("l_shipdate")) === dates("datum"))
@@ -65,8 +65,8 @@ object Metrics {
   def retainedNotCompleted(spark: SparkSession, sfDir: String,
                            asOf: String = "2024-02-15 00:00:00"): DataFrame = {
     val at = to_timestamp(lit(asOf))
-    val fact = Warehouse.factOrders(spark, sfDir)
-    val dim = Warehouse.dimOrders(spark, sfDir)
+    val fact = Warehouse.read(spark, sfDir, "fact_orders")
+    val dim = Warehouse.read(spark, sfDir, "dim_orders")
     AsOfJoin(fact, dim, "order_id", "order_id", at)
       .where(dim("status") =!= lit("purchase") &&
              fact("created_time") < date_trunc("month", at))
@@ -81,8 +81,9 @@ object Metrics {
     * (first_day_of_next_month — create_dim_dates.py:44). */
   def createdNotCompleted(spark: SparkSession, sfDir: String,
                           bucket: String = "month"): DataFrame = {
-    val fact = Warehouse.factOrders(spark, sfDir).select(col("order_id"), col("created_time"))
-    val purchases = Warehouse.dimOrders(spark, sfDir)
+    val fact = Warehouse.read(spark, sfDir, "fact_orders")
+      .select(col("order_id"), col("created_time"))
+    val purchases = Warehouse.read(spark, sfDir, "dim_orders")
       .where(col("status") === lit("purchase"))
       .groupBy(col("order_id"))
       .agg(min(col("start_time")).as("purchase_time"))
@@ -163,7 +164,7 @@ object Metrics {
     * query can run this way; one is registered as the gate. */
   def sqlCurrentOrdersByStatus(spark: SparkSession, sfDir: String,
                                asOf: String = "2024-01-15 00:00:00"): DataFrame = {
-    Warehouse.dimOrders(spark, sfDir).createOrReplaceTempView("dim_orders")
+    Warehouse.read(spark, sfDir, "dim_orders").createOrReplaceTempView("dim_orders")
     spark.sql(
       s"""SELECT status, count(1) AS order_count
          |FROM dim_orders
@@ -174,7 +175,7 @@ object Metrics {
   /** Oracle-gated dump of the SCD2-EVENTS output (SURVEY.md §2.6):
     * every dim_orders version row under a total ORDER BY. */
   def dimOrdersScd2(spark: SparkSession, sfDir: String): DataFrame =
-    Warehouse.dimOrders(spark, sfDir).select(
+    Warehouse.read(spark, sfDir, "dim_orders").select(
       col("order_id"), col("status"),
       date_format(col("start_time"), TsFmt).as("start_time"),
       date_format(col("end_time"), TsFmt).as("end_time"))
@@ -185,7 +186,7 @@ object Metrics {
     * cross-batch close/append semantics (not just the single-batch
     * chain of [[dimOrdersScd2]]) against an independent SQL statement. */
   def dimOrdersTwoBatches(spark: SparkSession, sfDir: String): DataFrame =
-    Warehouse.dimOrdersTwoBatches(spark, sfDir).select(
+    Warehouse.read(spark, sfDir, "dim_orders_2b").select(
       col("order_id"), col("status"),
       date_format(col("start_time"), TsFmt).as("start_time"),
       date_format(col("end_time"), TsFmt).as("end_time"))
@@ -194,7 +195,7 @@ object Metrics {
   /** Oracle-gated dump of the chained SCD2-SNAPSHOT output: every
     * dim_products version row under a total ORDER BY. */
   def dimProductsScd2(spark: SparkSession, sfDir: String): DataFrame =
-    Warehouse.dimParts(spark, sfDir).select(
+    Warehouse.read(spark, sfDir, "dim_products").select(
       col("id"), col("category"), col("price"),
       date_format(col("start_time"), TsFmt).as("start_time"),
       date_format(col("end_time"), TsFmt).as("end_time"))
@@ -203,7 +204,7 @@ object Metrics {
   /** Oracle-gated dump of FACT-BUILD (process_orders_sqls.py:135-147):
     * first event per order with the surrogate date key. */
   def factOrdersCreated(spark: SparkSession, sfDir: String): DataFrame =
-    Warehouse.factOrders(spark, sfDir).select(
+    Warehouse.read(spark, sfDir, "fact_orders").select(
       col("order_id"), col("created_date_id"),
       date_format(col("created_time"), TsFmt).as("created_time"),
       col("first_status"), col("value"))

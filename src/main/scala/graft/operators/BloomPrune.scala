@@ -88,13 +88,16 @@ object BloomPrune {
 
   /** Build a serialized sketch bloom over the LONG key column `key` of
     * `keys` (putLong semantics — probe with [[mightContainLong]]).
-    * Runs one Spark job (the warehouse-artifact build path: sized by
-    * the known key cardinality, built once when the index lands). */
+    * Runs two Spark jobs: an emptiness probe (`limit 1`), then the
+    * sketch. An empty key set yields the empty filter of the requested
+    * geometry, which still merges with any other filter of it; Spark
+    * 4.1's `stat.bloomFilter` throws an NPE on empty input. */
   def sketchBloomBytes(keys: DataFrame, key: String, expectedItems: Long,
                        fpp: Double = 0.01): Array[Byte] = {
     require(expectedItems > 0, "expectedItems must be positive")
-    val bf = keys.stat.bloomFilter(key, expectedItems, fpp)
-    serialize(bf)
+    serialize(
+      if (keys.isEmpty) BloomFilter.create(expectedItems, fpp)
+      else keys.stat.bloomFilter(key, expectedItems, fpp))
   }
 
   def serialize(bf: BloomFilter): Array[Byte] = {

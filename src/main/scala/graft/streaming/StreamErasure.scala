@@ -144,8 +144,8 @@ object StreamErasure {
       // the orphans are already gone); a crash after the base erase
       // replays with an empty victim-hash set, a no-op on an index
       // that this very step already repaired. Both sides filter to
-      // the SAME slice the index was built from (buildGramIndexBase's
-      // %10 ≠ HoldoutMod) — probing the full base would keep a hash
+      // the SAME slice the index was built from (the `gram_index_base`
+      // registry row's %10 ≠ HoldoutMod) — probing the full base would keep a hash
       // whose only surviving carrier is a holdout doc, silently
       // forking the maintained index from a cold rebuild.
       readIf(spark, s"$root/$GramOccurrences").foreach { preBase =>

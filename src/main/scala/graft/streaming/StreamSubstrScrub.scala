@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.operators.BloomPrune
 import graft.sources.Ingest
 import graft.text.SegmentDedup
 
@@ -69,8 +70,7 @@ object StreamSubstrScrub {
           // batches pre-filtering with a bloom that misses the old
           // index's grams: false negatives, silent under-scrubbing,
           // stream≢batch. One full index scan, paid once at attach.
-          Some(graft.operators.BloomPrune.serialize(
-            index.stat.bloomFilter("h", BloomCapacity, BloomFpp)))
+          Some(BloomPrune.sketchBloomBytes(index, "h", BloomCapacity, BloomFpp))
         else None
       val scrubbed = SegmentDedup
         .scrubExactSubstrAgainstIndex(batch, index, minTokens, bloom)
@@ -87,13 +87,12 @@ object StreamSubstrScrub {
       // the semi-join drops them); the reverse order could leave an
       // index whose bloom is missing its grams — false negatives, which
       // would silently break stream≡batch
-      val batchSketch = graft.operators.BloomPrune.serialize(
-        SegmentDedup.gramIndex(batch, minTokens)
-          .stat.bloomFilter("h", BloomCapacity, BloomFpp))
+      val batchSketch = BloomPrune.sketchBloomBytes(
+        SegmentDedup.gramIndex(batch, minTokens), "h", BloomCapacity, BloomFpp)
       val mergedBloom = bloom.fold(batchSketch) { prev =>
-        val bf = graft.operators.BloomPrune.deserialize(prev)
-        bf.mergeInPlace(graft.operators.BloomPrune.deserialize(batchSketch))
-        graft.operators.BloomPrune.serialize(bf)
+        val bf = BloomPrune.deserialize(prev)
+        bf.mergeInPlace(BloomPrune.deserialize(batchSketch))
+        BloomPrune.serialize(bf)
       }
       import spark.implicits._
       Ingest.overwriteSwap(spark,

@@ -65,7 +65,7 @@ object Curation {
 
   /** [[curate]] over the MATERIALIZED duplicate-graph edge list
     * (warehouse `neardup_pairs` = rep-level verified pairs ∪ exact star
-    * edges — [[graft.warehouse.Warehouse.buildNearDupPairs]]): the
+    * edges — its row in [[graft.warehouse.Warehouse.registry]]): the
     * near-dup stage reads corpus state exactly like the graph analytics
     * (q35/q105/q107 read the same table) instead of re-running
     * exact-group → shingle → minhash → band → verify per query.

@@ -12,7 +12,7 @@ class ClusterSplitSpec extends SparkSpec {
   test("cluster-consistent split has zero near-dup leakage") {
     val split = SparkEntry.queries("q119_cluster_split")(spark, sfDir)
       .select(col("doc_id"), col("split"))
-    val leaks = graft.warehouse.Warehouse.nearDupPairs(spark, sfDir)
+    val leaks = graft.warehouse.Warehouse.read(spark, sfDir, "neardup_pairs")
       .join(split.select(col("doc_id").as("doc_a"), col("split").as("split_a")), Seq("doc_a"))
       .join(split.select(col("doc_id").as("doc_b"), col("split").as("split_b")), Seq("doc_b"))
       .where(col("split_a") =!= col("split_b"))

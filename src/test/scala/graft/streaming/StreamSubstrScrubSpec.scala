@@ -115,4 +115,18 @@ class StreamSubstrScrubSpec extends SparkSpec {
       !graft.operators.BloomPrune.mightContainLong(bloom, col("h"))).count()
     assert(dropped == 0L, s"merged bloom dropped $dropped index grams — false negatives")
   }
+
+  test("a micro-batch whose docs are all shorter than minTokens still merges") {
+    val index = tmp("short") + "/idx"
+    val out = tmp("shortout") + "/scrubbed"
+    val long = "a b c d e f g h i"
+    // fewer than 8 tokens each: the first batch contributes no gram, so
+    // its sketch is built over an empty key set
+    StreamSubstrScrub.mergeBatch(spark,
+      Seq((1L, "a b c"), (2L, "d e f g h")).toDF("doc_id", "text"), 0L, index, out)
+    StreamSubstrScrub.mergeBatch(spark, Seq((3L, long)).toDF("doc_id", "text"), 1L, index, out)
+    StreamSubstrScrub.mergeBatch(spark, Seq((4L, s"$long z")).toDF("doc_id", "text"), 2L, index, out)
+    assert(canon(spark.read.parquet(out)) == Set((1L, 3L, 0L, "a b c"),
+      (2L, 5L, 0L, "d e f g h"), (3L, 9L, 0L, long), (4L, 10L, 9L, "z")))
+  }
 }

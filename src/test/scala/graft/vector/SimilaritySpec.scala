@@ -146,11 +146,11 @@ class SimilaritySpec extends SparkSpec {
     val inline = Similarity.annIvfTrained(embeddings)
       .select("qid", "rank", "nid", "cosine").as[(Long, Int, Long, Double)].collect().toSet
     val viaWh = Similarity.annIvfWithCodebook(
-      embeddings, graft.warehouse.Warehouse.ivfCodebook(spark, sfDir))
+      embeddings, graft.warehouse.Warehouse.read(spark, sfDir, "ivf_codebook"))
       .select("qid", "rank", "nid", "cosine").as[(Long, Int, Long, Double)].collect().toSet
     assert(viaWh == inline,
       "pre-trained codebook search must return exactly what inline training returns")
-    assert(graft.warehouse.Warehouse.ivfCodebook(spark, sfDir).count() == 16)
+    assert(graft.warehouse.Warehouse.read(spark, sfDir, "ivf_codebook").count() == 16)
   }
 
   test("assign-reading incremental ANN == corpus-reassigning incremental ANN") {
@@ -158,8 +158,8 @@ class SimilaritySpec extends SparkSpec {
     // artifact) must return row-for-row what the self-contained form
     // (which re-assigns the corpus per call) returns — same codebook,
     // same (−ccos, cid) tie-break, so equality is by construction
-    val cb = graft.warehouse.Warehouse.ivfCodebook(spark, sfDir)
-    val assign = graft.warehouse.Warehouse.ivfAssign(spark, sfDir)
+    val cb = graft.warehouse.Warehouse.read(spark, sfDir, "ivf_codebook")
+    val assign = graft.warehouse.Warehouse.read(spark, sfDir, "ivf_assign")
     val batch = embeddings.where(pmod(col("vec_id"), lit(10)) === 7)
     val corpus = embeddings.where(pmod(col("vec_id"), lit(10)) =!= 7)
     val direct = Similarity.annIvfNewAgainstCorpus(batch, corpus, cb)
@@ -180,10 +180,10 @@ class SimilaritySpec extends SparkSpec {
     // so the probe set — and therefore the whole search — must equal
     // the flat form row-for-row; at the default SuperProbe the result
     // keys stay complete and overlap stays high (recall trade, measured)
-    val cb = graft.warehouse.Warehouse.ivfCodebook(spark, sfDir)
-    val assign = graft.warehouse.Warehouse.ivfAssign(spark, sfDir)
-    val sc = graft.warehouse.Warehouse.ivfSuperCells(spark, sfDir)
-    val mp = graft.warehouse.Warehouse.ivfSuperMap(spark, sfDir)
+    val cb = graft.warehouse.Warehouse.read(spark, sfDir, "ivf_codebook")
+    val assign = graft.warehouse.Warehouse.read(spark, sfDir, "ivf_assign")
+    val sc = graft.warehouse.Warehouse.read(spark, sfDir, "ivf_supercells")
+    val mp = graft.warehouse.Warehouse.read(spark, sfDir, "ivf_super_map")
     val nsuper = sc.count().toInt
     val batch = embeddings.where(pmod(col("vec_id"), lit(10)) === 7)
     val corpus = embeddings.where(pmod(col("vec_id"), lit(10)) =!= 7)
@@ -213,10 +213,10 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("auto selector: flat branch at/below the crossover, two-level branch above it") {
-    val cb = graft.warehouse.Warehouse.ivfCodebook(spark, sfDir) // 16 cells
-    val assign = graft.warehouse.Warehouse.ivfAssign(spark, sfDir)
-    val sc = graft.warehouse.Warehouse.ivfSuperCells(spark, sfDir)
-    val mp = graft.warehouse.Warehouse.ivfSuperMap(spark, sfDir)
+    val cb = graft.warehouse.Warehouse.read(spark, sfDir, "ivf_codebook") // 16 cells
+    val assign = graft.warehouse.Warehouse.read(spark, sfDir, "ivf_assign")
+    val sc = graft.warehouse.Warehouse.read(spark, sfDir, "ivf_supercells")
+    val mp = graft.warehouse.Warehouse.read(spark, sfDir, "ivf_super_map")
     def canon(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Int)] =
       df.select("vec_id", "cell", "rn").as[(Long, Long, Int)].collect().toSet
     // default crossover (128 >= 16 cells) → flat, truncated at probes

@@ -2,6 +2,8 @@ package graft.warehouse
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -25,7 +27,7 @@ class WarehouseCacheSpec extends SparkSpec {
     try {
       Warehouse.invalidateResolved()
       val dir1 = Warehouse.ensureMaterialized(spark, sfDir.toString)
-      val rows1 = Warehouse.dimOrders(spark, sfDir.toString).count()
+      val rows1 = Warehouse.read(spark, sfDir.toString, "dim_orders").count()
       assert(rows1 > 0)
       // second touch: same dir, no rebuild (marker mtime unchanged)
       val marker = Paths.get(dir1, "dim_orders", "_SUCCESS")
@@ -45,7 +47,7 @@ class WarehouseCacheSpec extends SparkSpec {
       Warehouse.invalidateResolved()
       val dir3 = Warehouse.ensureMaterialized(spark, sfDir.toString)
       assert(dir3 != dir1, "changed inputs must re-key the cache")
-      val rows3 = Warehouse.dimOrders(spark, sfDir.toString).count()
+      val rows3 = Warehouse.read(spark, sfDir.toString, "dim_orders").count()
       assert(rows3 > 0 && rows3 != rows1, "rebuilt dim must reflect the new corpus")
 
       // without documents/embeddings their artifacts land from the
@@ -89,16 +91,17 @@ class WarehouseCacheSpec extends SparkSpec {
     try {
       Warehouse.invalidateResolved()
       // events-derived readers fail loudly, naming their table
-      val e = intercept[IllegalStateException](Warehouse.dimOrders(spark, sfDir.toString).count())
+      val e = intercept[IllegalStateException](
+        Warehouse.read(spark, sfDir.toString, "dim_orders").count())
       assert(e.getMessage.contains("dim_orders"))
-      intercept[IllegalStateException](Warehouse.factOrders(spark, sfDir.toString).count())
+      intercept[IllegalStateException](Warehouse.read(spark, sfDir.toString, "fact_orders").count())
       // ...while unrelated corpus state still lands and reads green
-      assert(Warehouse.nearDupPairs(spark, sfDir.toString).columns.contains("doc_a"))
-      assert(Warehouse.nearDupClusters(spark, sfDir.toString).count() > 0)
-      assert(Warehouse.ivfAssign(spark, sfDir.toString).count() > 0)
-      assert(Warehouse.pqCodes(spark, sfDir.toString).count() > 0)
+      assert(Warehouse.read(spark, sfDir.toString, "neardup_pairs").columns.contains("doc_a"))
+      assert(Warehouse.read(spark, sfDir.toString, "neardup_clusters").count() > 0)
+      assert(Warehouse.read(spark, sfDir.toString, "ivf_assign").count() > 0)
+      assert(Warehouse.read(spark, sfDir.toString, "pq_codes").count() > 0)
       assert(Warehouse.bpeMerges(spark, sfDir.toString).nonEmpty)
-      assert(Warehouse.dimParts(spark, sfDir.toString).count() > 0)
+      assert(Warehouse.read(spark, sfDir.toString, "dim_products").count() > 0)
     } finally {
       System.clearProperty("graft.wh.cache")
       Warehouse.invalidateResolved()
@@ -126,15 +129,15 @@ class WarehouseCacheSpec extends SparkSpec {
       assert(Files.exists(Paths.get(dir, "ivf_assign", "_SUCCESS")),
         "non-skipped artifacts still land")
       // reader of a skipped artifact fails loudly, naming it and the skip
-      val e = intercept[IllegalStateException](Warehouse.knnExact(spark, sfDir.toString))
+      val e = intercept[IllegalStateException](Warehouse.read(spark, sfDir.toString, "knn_exact"))
       assert(e.getMessage.contains("knn_exact") && e.getMessage.contains("graft.wh.skip"))
       // non-skipped readers unaffected
-      assert(Warehouse.ivfCodebook(spark, sfDir.toString).count() > 0)
+      assert(Warehouse.read(spark, sfDir.toString, "ivf_codebook").count() > 0)
       // dropping the skip builds the artifact into the SAME cache dir
       System.clearProperty("graft.wh.skip")
       Warehouse.invalidateResolved()
       assert(Warehouse.ensureMaterialized(spark, sfDir.toString) == dir)
-      assert(Warehouse.knnExact(spark, sfDir.toString).count() > 0)
+      assert(Warehouse.read(spark, sfDir.toString, "knn_exact").count() > 0)
       // a typo throws instead of silently building everything
       System.setProperty("graft.wh.skip", "knn_exactt")
       Warehouse.invalidateResolved()
@@ -147,11 +150,34 @@ class WarehouseCacheSpec extends SparkSpec {
     }
   }
 
+  test("a read lands only its artifact's cone; ensureMaterialized lands the rest") {
+    val sfDir = "/root/testdata/sf0.001"
+    val cacheRoot = Files.createTempDirectory("whcone-root")
+    def names(dir: Path) = Files.list(dir).iterator.asScala.map(_.getFileName.toString).toSet
+    System.setProperty("graft.wh.cache", cacheRoot.toString)
+    try {
+      Warehouse.invalidateResolved()
+      assert(Warehouse.read(spark, sfDir, "bm25_doclens").count() > 0)
+      val Seq(dir) = Files.list(cacheRoot).iterator.asScala.toSeq
+      assert(names(dir) == Set("bm25_postings", "bm25_doclens"))
+      val postings = Files.getLastModifiedTime(dir.resolve("bm25_postings/_SUCCESS"))
+      assert(Warehouse.ensureMaterialized(spark, sfDir) == dir.toString)
+      val all = Warehouse.registry.map(_.name)
+      assert(names(dir).filterNot(_.endsWith("_b1")) == all.toSet)
+      assert(all.forall(n => Files.exists(dir.resolve(s"$n/_GRAFT_V"))))
+      assert(Files.getLastModifiedTime(dir.resolve("bm25_postings/_SUCCESS")) == postings,
+        "the cone's artifacts must not rebuild")
+    } finally {
+      System.clearProperty("graft.wh.cache")
+      Warehouse.invalidateResolved()
+    }
+  }
+
   test("materialized dims equal a direct build of the merge chain") {
     val sfDir = "/root/testdata/sf0.001"
     val direct = rowsOf(Warehouse.buildDimParts(spark, sfDir)
       .select(col("id"), col("category"), col("price"), col("start_time"), col("end_time")))
-    val cached = rowsOf(Warehouse.dimParts(spark, sfDir)
+    val cached = rowsOf(Warehouse.read(spark, sfDir, "dim_products")
       .select(col("id"), col("category"), col("price"), col("start_time"), col("end_time")))
     assert(cached == direct)
   }
