@@ -137,6 +137,31 @@ object Catalog {
       .toSet - "SparkEntry"
   }
 
+  /** `source` with its `//` and block comments blanked out; string
+    * literals are kept. The comment that introduces a registry entry
+    * sits in the previous entry's segment, so refs come from code only. */
+  private[graft] def stripComments(source: String): String = {
+    val out = new StringBuilder(source.length)
+    var i = 0
+    def at(s: String) = source.startsWith(s, i)
+    def copyUntil(end: String, escapes: Boolean): Unit = {
+      while (i < source.length && !at(end)) {
+        if (escapes && source(i) == '\\' && i + 1 < source.length) { out += source(i); i += 1 }
+        out += source(i); i += 1
+      }
+      out ++= source.substring(i, math.min(i + end.length, source.length)); i += end.length
+    }
+    while (i < source.length) {
+      if (at("\"\"\"")) { out ++= "\"\"\""; i += 3; copyUntil("\"\"\"", escapes = false) }
+      else if (at("\"")) { out += '"'; i += 1; copyUntil("\"", escapes = true) }
+      else if (at("'\"'")) { out ++= "'\"'"; i += 3 }
+      else if (at("//")) { while (i < source.length && source(i) != '\n') i += 1 }
+      else if (at("/*")) { val e = source.indexOf("*/", i + 2); i = if (e < 0) source.length else e + 2 }
+      else { out += source(i); i += 1 }
+    }
+    out.result()
+  }
+
   private def querySegments(entrySource: String, names: Seq[String]): Map[String, String] = {
     // first occurrence of each key = the queries-map entry (oracleSql
     // entries come later in the file); segment runs to the next key
@@ -152,16 +177,28 @@ object Catalog {
     }.toMap
   }
 
+  /** Per entry, the first three `Object.member` refs its code makes to
+    * `objects`; a read by name renders with its artifact:
+    * `Warehouse.read(knn_exact)`. */
+  private[graft] def codeRefs(entrySource: String, names: Seq[String],
+                              objects: Set[String]): Map[String, Seq[String]] = {
+    val ref = """([A-Z][A-Za-z0-9]*)\.(?:read\([^()"]*"(\w+)"\)|([a-zA-Z]\w*))""".r
+    querySegments(stripComments(entrySource), names).map { case (n, segment) =>
+      n -> ref.findAllMatchIn(segment)
+        .map(m => (m.group(1), Option(m.group(2)).fold(m.group(3))(a => s"read($a)")))
+        .filter { case (o, _) => objects.contains(o) }
+        .map { case (o, mth) => s"$o.$mth" }
+        .distinct.take(3).toSeq
+    }
+  }
+
   def render(repoRoot: String = "."): String = {
     val root = java.nio.file.Paths.get(repoRoot)
     val src = java.nio.file.Files.readString(
       root.resolve("src/main/scala/graft/SparkEntry.scala"))
-    val objects = graftObjects(root.resolve("src/main/scala/graft"))
     val names = SparkEntry.queries.keys.toSeq.sorted
-    val segments = querySegments(src, names)
+    val refs = codeRefs(src, names, graftObjects(root.resolve("src/main/scala/graft")))
     val budgets = BenchGuard.Budgets.toMap
-    // a read by name renders with its artifact: Warehouse.read(knn_exact)
-    val ref = """([A-Z][A-Za-z0-9]*)\.(?:read\([^()"]*"(\w+)"\)|([a-zA-Z]\w*))""".r
 
     val sb = new StringBuilder
     sb ++= "# graft operator catalog\n\n"
@@ -182,12 +219,7 @@ object Catalog {
     names.foreach { n =>
       val gate = if (SparkEntry.oracleSql.contains(n)) "hash" else "rows-only"
       val pin = budgets.get(n).map(b => f"$b%.1f").getOrElse("—")
-      val refs = ref.findAllMatchIn(segments(n))
-        .map(m => (m.group(1), Option(m.group(2)).fold(m.group(3))(a => s"read($a)")))
-        .filter { case (o, _) => objects.contains(o) }
-        .map { case (o, mth) => s"$o.$mth" }
-        .distinct.take(3).toSeq
-      val code = if (refs.isEmpty) "SparkEntry inline" else refs.mkString(", ")
+      val code = if (refs(n).isEmpty) "SparkEntry inline" else refs(n).mkString(", ")
       sb ++= s"| $n | ${ScaleClass(n)} | $gate | $pin | $code |\n"
     }
     sb.result()

@@ -25,7 +25,8 @@ import org.apache.spark.sql.execution.FormattedMode
   * `-Dgraft.wh.vbump=name:version` times re-landing one artifact's cone.
   * Then, per query and run, it prints one line: construction, planning
   * and execution seconds, the jobs, stages and tasks the run launched,
-  * and its shuffle read, shuffle write and spill bytes. The last run of
+  * how many of those jobs the construction launched (`build jobs`), and
+  * its shuffle read, shuffle write and spill bytes. The last run of
   * each query also lists its slowest stages. With `planDir`, each query's
   * formatted physical plan is written to `<planDir>/<query>.txt`. A query
   * that throws is named on a FAIL line and makes the exit code 1.
@@ -71,6 +72,7 @@ object Measure {
     def shuffleReadBytes: Long = stages.map(_.taskMetrics.shuffleReadMetrics.totalBytesRead).sum
     def shuffleWriteBytes: Long = stages.map(_.taskMetrics.shuffleWriteMetrics.bytesWritten).sum
     def spillBytes: Long = stages.map(_.taskMetrics.diskBytesSpilled).sum
+    def ++(later: Sched): Sched = Sched(jobs + later.jobs, stages ++ later.stages)
   }
 
   private def stageMs(s: StageInfo): Long =
@@ -122,9 +124,10 @@ object Measure {
   }
 
   /** One timed run of one query: wall seconds, split into construction,
-    * planning and execution, and what the scheduler ran for it. */
+    * planning and execution, what the scheduler ran for it and how many
+    * of its jobs the construction launched. */
   final case class Run(query: String, run: Int, wall: Double, build: Double,
-                       plan: Double, exec: Double, sched: Sched)
+                       plan: Double, exec: Double, sched: Sched, buildJobs: Int)
 
   /** Stages listed after a query's last run. */
   val SlowestStages = 10
@@ -143,15 +146,17 @@ object Measure {
         val rs = (1 to runs).map { i =>
           teardown(spark)
           l.fence(spark)
-          val ((df, build, plan, exec), wall) = timed {
-            val (df, build) = timed(SparkEntry.queries(name)(spark, sfDir))
-            (df, build, seconds(df.queryExecution.executedPlan), seconds(noop(df)))
-          }
-          val r = Run(name, i, wall, build, plan, exec, l.fence(spark))
+          val ((df, build), built) = timed(timed(SparkEntry.queries(name)(spark, sfDir)))
+          // the fence between construction and planning is outside both spans
+          val construction = l.fence(spark)
+          val ((plan, exec), ran) =
+            timed((seconds(df.queryExecution.executedPlan), seconds(noop(df))))
+          val r = Run(name, i, built + ran, build, plan, exec, construction ++ l.fence(spark),
+            construction.jobs)
           val s = r.sched
-          println(f"[measure] $name run $i/$runs: wall $wall%.2f s (build $build%.2f, " +
-            f"plan $plan%.2f, exec $exec%.2f) | jobs ${s.jobs}, stages ${s.stages.size}, " +
-            s"tasks ${s.tasks} | shuffle read ${mb(s.shuffleReadBytes)} MB, " +
+          println(f"[measure] $name run $i/$runs: wall ${r.wall}%.2f s (build $build%.2f, " +
+            f"plan $plan%.2f, exec $exec%.2f) | jobs ${s.jobs}, build jobs ${r.buildJobs}, " +
+            s"stages ${s.stages.size}, tasks ${s.tasks} | shuffle read ${mb(s.shuffleReadBytes)} MB, " +
             s"write ${mb(s.shuffleWriteBytes)} MB, spill ${mb(s.spillBytes)} MB")
           if (i == runs) {
             s.stages.sortBy(st => -stageMs(st)).take(SlowestStages).foreach { st =>

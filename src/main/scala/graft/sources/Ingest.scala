@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.Tables
+
 /** Ingestion & warehouse-write primitives.
   *
   * Reference surface (SURVEY.md §2.1):
@@ -160,9 +162,9 @@ object Ingest {
     * table format with real transactions (Delta/Iceberg). */
   def compact(spark: SparkSession, path: String, targetRowsPerFile: Long = 1048576L): Int = {
     require(targetRowsPerFile > 0, "targetRowsPerFile must be positive")
-    val n = spark.read.parquet(path).count()
-    val files = math.max(1L, (n + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-    overwriteSwap(spark, spark.read.parquet(path).repartition(files), path)
+    val df = Tables.parquet(spark, path)
+    val files = math.max(1L, (df.count() + targetRowsPerFile - 1) / targetRowsPerFile).toInt
+    overwriteSwap(spark, df.repartition(files), path)
     files
   }
 

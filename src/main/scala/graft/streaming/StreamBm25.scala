@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Tables
 import graft.sources.Ingest
 import graft.text.TextAnalysis
 
@@ -38,7 +39,7 @@ object StreamBm25 {
   def mergeBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
                  postingsPath: String, doclensPath: String): Unit = {
     val existing =
-      if (Ingest.readyRecovering(spark, postingsPath)) Some(spark.read.parquet(postingsPath))
+      if (Ingest.readyRecovering(spark, postingsPath)) Some(Tables.parquet(spark, postingsPath))
       else None
     val lastMerged = existing
       .flatMap(df => Option(df.agg(max(col("last_batch"))).head.get(0)))

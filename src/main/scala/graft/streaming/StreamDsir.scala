@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Tables
 import graft.sources.Ingest
 import graft.text.Curation
 
@@ -34,7 +35,7 @@ object StreamDsir {
                  countsPath: String, targetLang: String = "en",
                  nBuckets: Int = 1024): Unit = {
     val existing =
-      if (Ingest.readyRecovering(spark, countsPath)) Some(spark.read.parquet(countsPath))
+      if (Ingest.readyRecovering(spark, countsPath)) Some(Tables.parquet(spark, countsPath))
       else None
     val lastMerged = existing
       .flatMap(df => Option(df.agg(max(col("last_batch"))).head.get(0)))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Tables
 import graft.operators.Erasure
 import graft.sources.Ingest
 
@@ -75,7 +76,7 @@ object StreamErasure {
   val BloomRebuildShrinkPct = 10
 
   private def readIf(spark: SparkSession, path: String): Option[DataFrame] =
-    if (Ingest.readyRecovering(spark, path)) Some(spark.read.parquet(path)) else None
+    if (Ingest.readyRecovering(spark, path)) Some(Tables.parquet(spark, path)) else None
 
   /** Apply one batch of victims (single column `key`) across every
     * artifact present under `root`.

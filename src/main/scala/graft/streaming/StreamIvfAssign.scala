@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Tables
 import graft.sources.Ingest
 import graft.vector.Similarity
 
@@ -35,7 +36,7 @@ object StreamIvfAssign {
   def mergeBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
                  codebook: DataFrame, assignPath: String): Unit = {
     val existing =
-      if (Ingest.readyRecovering(spark, assignPath)) Some(spark.read.parquet(assignPath))
+      if (Ingest.readyRecovering(spark, assignPath)) Some(Tables.parquet(spark, assignPath))
       else None
     val lastMerged = existing
       .flatMap(df => Option(df.agg(max(col("last_batch"))).head.get(0)))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Tables
 import graft.vector.Similarity
 
 /** Continuous margin-based pair mining — the streaming deployment of
@@ -51,7 +52,7 @@ object StreamMarginMine {
       return spark.range(0).select(col("id").as("vec_new"), col("id").as("vec_corpus"),
         col("id").cast("int").as("label_new"), col("id").cast("int").as("label_corpus"),
         col("id").as("cos_micro"), col("id").as("margin_ppm"), col("id").as("batch_id"))
-    spark.read.option("basePath", outPath).parquet(outPath)
+    Tables.parquet(spark, outPath)
   }
 
   /** Attach the continuously-mining sink. `vecs` is a streaming

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Tables
 import graft.operators.Components
 import graft.pipeline.Release
 import graft.sources.Ingest
@@ -117,7 +118,7 @@ object StreamRelease {
                  packBudget: Long = 512L): Unit = {
     val indexPath = s"$statePath/gram_index"
     val existingIndex =
-      if (Ingest.readyRecovering(spark, indexPath)) Some(spark.read.parquet(indexPath))
+      if (Ingest.readyRecovering(spark, indexPath)) Some(Tables.parquet(spark, indexPath))
       else None
     val lastMerged = existingIndex
       .flatMap(df => Option(df.agg(max(col("last_batch"))).head.get(0)))
@@ -136,7 +137,7 @@ object StreamRelease {
       val repsPath = s"$statePath/reps"
       val oldReps =
         if (Ingest.readyRecovering(spark, repsPath))
-          Some(graft.Graft.lease(spark.read.parquet(repsPath)
+          Some(graft.Graft.lease(Tables.parquet(spark, repsPath)
             .where(col("batch") < batchId)
             .where(col("doc_id") === col("rep"))
             .select(col("th"), col("rep"))))
@@ -162,7 +163,7 @@ object StreamRelease {
       val clustersPath = s"$statePath/clusters"
       val oldClusters =
         if (Ingest.readyRecovering(spark, clustersPath))
-          spark.read.parquet(clustersPath).select(col("doc_id"), col("cluster_id"))
+          Tables.parquet(spark, clustersPath).select(col("doc_id"), col("cluster_id"))
         else spark.range(0).select(col("id").as("doc_id"), col("id").as("cluster_id"))
       // exact hits: batch members of an existing corpus group join that
       // group's CLUSTER (via the corpus rep's current label) — the path
@@ -186,13 +187,13 @@ object StreamRelease {
       // own partial output
       val oldBands =
         if (Ingest.readyRecovering(spark, bandsPath))
-          Some(graft.Graft.lease(spark.read.parquet(bandsPath)
+          Some(graft.Graft.lease(Tables.parquet(spark, bandsPath)
             .where(col("batch") < batchId)
             .select(col("doc_id"), col("band"), col("band_key"))))
         else None
       val crossRep = (oldBands match {
         case Some(bands) =>
-          val shOld = spark.read.parquet(shinglesPath)
+          val shOld = Tables.parquet(spark, shinglesPath)
             .where(col("batch") < batchId)
             .select(col("doc_id"), col("shingles"))
           // the corpus side is the MAINTAINED capped REP band artifact —
@@ -293,13 +294,13 @@ object StreamRelease {
     val clustersPath = s"$statePath/clusters"
     if (!Ingest.readyRecovering(spark, clustersPath)) return // nothing ingested yet
     graft.Graft.leaseScope {
-      val keepers = spark.read.parquet(clustersPath)
+      val keepers = Tables.parquet(spark, clustersPath)
         .where(col("doc_id") === col("cluster_id")).select(col("doc_id"))
-      val surv = spark.read.parquet(s"$statePath/pool")
+      val surv = Tables.parquet(spark, s"$statePath/pool")
         .select(col("doc_id"), col("source"), col("quality"), col("n_tokens"),
           col("n_dup_tokens"), col("kept_tokens"), col("clean_text"))
         .join(keepers, Seq("doc_id")) // demotions drop out here
-      val raw = spark.read.parquet(s"$statePath/raw")
+      val raw = Tables.parquet(spark, s"$statePath/raw")
         .groupBy(col("source")).agg(sum(col("n")).as("n_docs_raw"))
       val card = Release.releaseCardFromSurvivors(
         surv, raw, mixture, window, stride, packBudget)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Tables
 import graft.operators.IncrementalAgg
 import graft.sources.Ingest
 
@@ -30,7 +31,7 @@ object StreamRollup {
   def mergeBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
                  statePath: String, key: String, hashCol: String, k: Int): Unit = {
     val existing =
-      if (Ingest.readyRecovering(spark, statePath)) Some(spark.read.parquet(statePath))
+      if (Ingest.readyRecovering(spark, statePath)) Some(Tables.parquet(spark, statePath))
       else None
     val lastMerged = existing
       .flatMap(df => Option(df.agg(max(col("last_batch"))).head.get(0)))
@@ -59,5 +60,5 @@ object StreamRollup {
 
   /** Read the maintained state with the KMV estimate attached. */
   def read(spark: SparkSession, statePath: String, k: Int = 16): DataFrame =
-    IncrementalAgg.estimate(spark.read.parquet(statePath).drop("last_batch"), k)
+    IncrementalAgg.estimate(Tables.parquet(spark, statePath).drop("last_batch"), k)
 }

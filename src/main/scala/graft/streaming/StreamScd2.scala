@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
+import graft.Tables
 import graft.sources.Ingest
 import graft.warehouse.Warehouse
 
@@ -37,7 +38,7 @@ object StreamScd2 {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val dim =
-          if (Ingest.readyRecovering(spark, dimPath)) spark.read.parquet(dimPath)
+          if (Ingest.readyRecovering(spark, dimPath)) Tables.parquet(spark, dimPath)
           else Warehouse.emptyDim(spark, Warehouse.ordersDimSchema)
         val merged = graft.operators.Scd2.eventsMerge(dim, batch.toDF(), batchTs(batchId))
         Ingest.overwriteSwap(spark, merged, dimPath)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Tables
 import graft.operators.BloomPrune
 import graft.sources.Ingest
 import graft.text.SegmentDedup
@@ -51,7 +52,7 @@ object StreamSubstrScrub {
                  indexPath: String, outPath: String, minTokens: Int = 8): Unit = {
     val bloomPath = s"${indexPath}_bloom"
     val existing =
-      if (Ingest.readyRecovering(spark, indexPath)) Some(spark.read.parquet(indexPath))
+      if (Ingest.readyRecovering(spark, indexPath)) Some(Tables.parquet(spark, indexPath))
       else None
     val lastMerged = existing
       .flatMap(df => Option(df.agg(max(col("last_batch"))).head.get(0)))
@@ -61,7 +62,7 @@ object StreamSubstrScrub {
         .getOrElse(spark.range(0).select(col("id").as("h")))
       val bloom =
         if (existing.isDefined && Ingest.readyRecovering(spark, bloomPath))
-          Some(spark.read.parquet(bloomPath).select(col("bf")).head.getAs[Array[Byte]](0))
+          Some(Tables.parquet(spark, bloomPath).select(col("bf")).head.getAs[Array[Byte]](0))
         else if (existing.isDefined)
           // Bootstrap: attaching to a pre-existing index with no
           // maintained sketch (a batch-built index, or a resume from

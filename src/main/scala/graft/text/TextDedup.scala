@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.Tables
 import graft.Graft.LeaseOps
 
 import org.apache.spark.sql.{Column, DataFrame}
@@ -752,7 +753,7 @@ object TextDedup {
         .write.mode("overwrite").parquet(s"$outDir/pass=$p")
       if (gcBetween) System.gc()
     }
-    spark.read.parquet((0 until nPasses).map(p => s"$outDir/pass=$p"): _*)
+    Tables.parquet(spark, (0 until nPasses).map(p => s"$outDir/pass=$p"): _*)
       .dropDuplicates("doc_a", "doc_b")
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
       .orderBy("doc_a", "doc_b")
@@ -960,7 +961,7 @@ object TextDedup {
         .write.mode("overwrite").parquet(s"$outDir/pass=$p")
       if (gcBetween) System.gc()
     }
-    spark.read.parquet((0 until nPasses).map(p => s"$outDir/pass=$p"): _*)
+    Tables.parquet(spark, (0 until nPasses).map(p => s"$outDir/pass=$p"): _*)
       .dropDuplicates("test_id", "train_id")
       .select(col("test_id"), col("train_id"), col("containment"))
       .orderBy("test_id", "train_id")

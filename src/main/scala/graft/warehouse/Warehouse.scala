@@ -305,7 +305,7 @@ object Warehouse {
     def in(input: String): DataFrame = {
       require(artifact.inputs.contains(input), s"warehouse artifact " +
         s"'${artifact.name}' reads '$input', which it does not declare as an input")
-      spark.read.parquet(s"$dir/$input")
+      Tables.parquet(spark, s"$dir/$input")
     }
 
     /** The corpus documents as (doc_id, text). */
@@ -318,7 +318,7 @@ object Warehouse {
       * merge N+1 reads it. */
     def landBatch(df: DataFrame): DataFrame = {
       Ingest.overwriteSwap(spark, df, s"$dir/${artifact.name}_b1")
-      spark.read.parquet(s"$dir/${artifact.name}_b1")
+      Tables.parquet(spark, s"$dir/${artifact.name}_b1")
     }
   }
 
@@ -756,7 +756,7 @@ object Warehouse {
     require(cones.contains(name), s"'$name' is not a declared warehouse artifact")
     val dir = materialize(spark, sfDir, cones(name))
     tableState.get(s"$dir/$name") match {
-      case Some(Right(_)) => spark.read.parquet(s"$dir/$name")
+      case Some(Right(_)) => Tables.parquet(spark, s"$dir/$name")
       case Some(Left(e)) =>
         throw new IllegalStateException(s"warehouse table '$name' failed to build for $sfDir", e)
       // materialize attempts every artifact of the cone the skip list omits

@@ -24,6 +24,18 @@ class CatalogSpec extends AnyFunSuite {
     assert(undefined.isEmpty, s"undefined scale classes: ${undefined.mkString(", ")}")
   }
 
+  test("a comment introducing the next entry adds no ref to the previous row") {
+    val src =
+      """  "qa" -> ((s, d) => Tables.documents(s, d)),
+        |  // qb reads Warehouse.read(s, d, "knn_exact") through Bpe.encode
+        |  /* and TextDedup.shingled */
+        |  "qb" -> ((s, d) => Tables.events(s, d).where("url = 'http://x'")),
+        |""".stripMargin
+    val refs = Catalog.codeRefs(src, Seq("qa", "qb"),
+      Set("Tables", "Warehouse", "Bpe", "TextDedup"))
+    assert(refs == Map("qa" -> Seq("Tables.documents"), "qb" -> Seq("Tables.events")))
+  }
+
   test("CATALOG.md matches the generator (regenerate with runMain graft.CatalogGen)") {
     val path = java.nio.file.Paths.get("CATALOG.md")
     assert(java.nio.file.Files.exists(path), "CATALOG.md missing — run CatalogGen")

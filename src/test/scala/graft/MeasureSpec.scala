@@ -21,10 +21,17 @@ class MeasureSpec extends SparkSpec {
       assert(s.tasks >= s.stages.size, r)
       assert(r.build >= 0 && r.plan >= 0 && r.exec > 0, r)
       assert(r.build + r.plan + r.exec <= r.wall, r)
+      assert(r.buildJobs >= 0 && r.buildJobs <= s.jobs, r)
     }
     assert(Files.list(planDir).iterator.asScala.map(_.getFileName.toString).toSet ==
       queries.map(q => s"$q.txt").toSet)
     assert(Files.readString(planDir.resolve(s"${queries.head}.txt")).contains("Physical Plan"))
+  }
+
+  test("build jobs count the jobs construction launches, and only those") {
+    // q39 counts the corpus while it is built
+    val Seq(r) = Measure.measure(spark, sfDir, Seq("q39_keywords"), 1, None)
+    assert(r.buildJobs >= 1 && r.buildJobs < r.sched.jobs, r)
   }
 
   test("a second call adds no second listener") {
