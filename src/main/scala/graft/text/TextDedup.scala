@@ -83,12 +83,26 @@ object TextDedup {
     * as before — on a cluster that shuffle is aggregate disk. */
   val BroadcastVerifyBytes = 1L << 30
 
-  /** Estimated in-flight bytes of a (doc_id, hs) table: 8 B per hash +
-    * fixed per-row overhead. One linear agg over the (cached) frame. */
-  private def hashsetBytes(hs: DataFrame): Long = {
-    val r = hs.agg(coalesce(sum(size(col("hs"))), lit(0L)).as("n"),
-      count(lit(1)).as("rows")).head()
-    r.getLong(0) * 8L + r.getLong(1) * 32L
+  /** Whether the verify stage may broadcast the hashset `sides`: the sum
+    * of Spark's own size estimates (the optimized plan's statistics, the
+    * figure `autoBroadcastJoinThreshold` is compared with) is at most
+    * `bound`. Planning only, no job: on a parquet scan the estimate is
+    * the files' size, and a filter does not shrink it while cost-based
+    * optimization is off, so two id-filters of one table count it twice. */
+  private[graft] def verifyFitsBroadcast(sides: Seq[DataFrame],
+                                         bound: Long = BroadcastVerifyBytes): Boolean =
+    sides.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum <= bound
+
+  /** A computed hashset table, cached and filled before the operators'
+    * prefix and verify subtrees read it inside one action: Spark's lazy
+    * cache fill is not synchronized across concurrent build futures, so
+    * each would recompute the shingle pipeline per partition (measured
+    * 17–62 s vs ~4 s warm in round 4). One cheap count serializes the
+    * fill. */
+  private def filled(hs: DataFrame): DataFrame = {
+    val c = hs.leased
+    c.count()
+    c
   }
 
   /** Distinct word 3-gram shingles of a text column (`c` must be a
@@ -577,26 +591,20 @@ object TextDedup {
     // so the compare stays exact, not approximate. The prefix-filter
     // lemma is order-agnostic: the hash order is just another fixed
     // total order on shingles.
-    ngramJaccardPairsFromHashsets(hashedSets(sh), threshold)
+    ngramJaccardPairsFromHashsets(filled(hashedSets(sh)), threshold)
 
   /** [[ngramJaccardPairsFromShingles]] over the materialized hashed-set
     * artifact ([[hashedShingleSets]] / warehouse `doc_hashsets`).
     *
-    * '''API note — this is an ACTION, not a lazy transformation''': it
-    * eager-fills the hashset cache (`hs.count()` below) before the four
-    * consuming subtrees run; callers cannot compose it lazily. */
+    * A lazy transformation: building it launches no job. `hashsets` is
+    * read by four subtrees (two prefix sides, two verify attaches), so it
+    * should be a landed table, which each re-scans at the cost of reading
+    * a cache, or one the caller has cached and filled. */
   def ngramJaccardPairsFromHashsets(hashsets: DataFrame,
                                     threshold: Double = 0.5): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
-    val hs = hashsets.leased
-    // Eager cache fill: four probes below (two prefix sides, two verify
-    // attaches) read `hs` inside one action, and Spark's lazy cache fill
-    // is not synchronized across concurrent build futures — each future
-    // would recompute the shingle pipeline per partition (measured 17–62 s
-    // vs ~4 s warm in round 4). One cheap count serializes the fill.
-    hs.count()
-    jaccardCandVerify(hs, jaccardPrefix(hs, threshold), threshold,
-        broadcastVerify = hashsetBytes(hs) <= BroadcastVerifyBytes)
+    jaccardCandVerify(hashsets, jaccardPrefix(hashsets, threshold), threshold,
+        broadcastVerify = verifyFitsBroadcast(Seq(hashsets)))
       .orderBy("doc_a", "doc_b")
   }
 
@@ -613,8 +621,8 @@ object TextDedup {
     * prefix table — the shared core of the single-pass operator and the
     * salted multi-pass variant. Emits UNSORTED verified pairs.
     * `broadcastVerify` picks the attach-join strategy for the verify
-    * stage (see [[BroadcastVerifyBytes]]): callers measure the hashset
-    * table once and thread the decision in. */
+    * stage (see [[verifyFitsBroadcast]]): callers decide once and thread
+    * the decision in. */
   private def jaccardCandVerify(hs: DataFrame, prefix: DataFrame,
                                 threshold: Double,
                                 broadcastVerify: Boolean): DataFrame = {
@@ -714,8 +722,7 @@ object TextDedup {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     require(passes >= 0, "passes must be non-negative (0 = auto)")
     val spark = hashsets.sparkSession
-    val hs = hashsets.leased
-    val nDocs = hs.count() // eager fill — see ngramJaccardPairsFromHashsets
+    val nDocs = hashsets.count()
     // AUTO (passes = 0): scale the slice count with the corpus so the
     // per-pass candidate mass stays roughly one [[SaltedSliceDocs]]
     // corpus's worth — bench-scale corpora run 2 thin passes (the
@@ -738,17 +745,17 @@ object TextDedup {
     // only earns its pause when a pass's footprint is material; below
     // one slice's worth of docs the whole run's shuffle is trivial
     val gcBetween = nDocs >= SaltedSliceDocs
-    val bcast = hashsetBytes(hs) <= BroadcastVerifyBytes
-    val prefix = jaccardPrefix(hs, threshold)
+    val bcast = verifyFitsBroadcast(Seq(hashsets))
+    val prefix = jaccardPrefix(hashsets, threshold)
     // single pass ≡ the whole chain with no tok restriction: skip the
     // pass landing + re-read entirely (in-pass candidates are already
     // deduped, so the cross-pass dropDuplicates is vacuous at P=1)
     if (nPasses == 1)
-      return jaccardCandVerify(hs, prefix, threshold, broadcastVerify = bcast)
+      return jaccardCandVerify(hashsets, prefix, threshold, broadcastVerify = bcast)
         .select(col("doc_a"), col("doc_b"), col("jaccard"))
         .orderBy("doc_a", "doc_b")
     (0 until nPasses).foreach { p =>
-      jaccardCandVerify(hs, prefix.where(pmod(col("tok"), lit(nPasses)) === p),
+      jaccardCandVerify(hashsets, prefix.where(pmod(col("tok"), lit(nPasses)) === p),
           threshold, broadcastVerify = bcast)
         .write.mode("overwrite").parquet(s"$outDir/pass=$p")
       if (gcBetween) System.gc()
@@ -835,23 +842,21 @@ object TextDedup {
 
   def containmentPairs(test: DataFrame, train: DataFrame,
                        threshold: Double = 0.5): DataFrame =
-    containmentPairsFromHashsets(
-      hashedSets(shingled(test)), hashedSets(shingled(train)), threshold)
+    containmentPairsFromHashsets(filled(hashedSets(shingled(test))),
+      filled(hashedSets(shingled(train))), threshold)
 
   /** [[containmentPairs]] over pre-hashed shingle sets (the artifact
-    * path: both splits are id-filters of warehouse `doc_hashsets`). */
+    * path: both splits are id-filters of warehouse `doc_hashsets`).
+    *
+    * A lazy transformation: building it launches no job. Each side is
+    * read by a candidate and a verify subtree, so it should be a landed
+    * table, or one the caller has cached and filled. */
   def containmentPairsFromHashsets(testSets: DataFrame, trainSets: DataFrame,
                                    threshold: Double = 0.5): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
-    val hsTest = testSets.leased
-    val hsTrain = trainSets.leased
-    // eager cache fill (the q32 lesson): prefix + verify probes read
-    // these inside one action; lazy fill races across build futures
-    hsTest.count(); hsTrain.count()
-    containmentCandVerify(hsTest, hsTrain, containmentPrefix(hsTest, threshold),
-        containmentIndex(hsTrain), threshold,
-        broadcastVerify =
-          hashsetBytes(hsTest) + hashsetBytes(hsTrain) <= BroadcastVerifyBytes)
+    containmentCandVerify(testSets, trainSets, containmentPrefix(testSets, threshold),
+        containmentIndex(trainSets), threshold,
+        broadcastVerify = verifyFitsBroadcast(Seq(testSets, trainSets)))
       .orderBy("test_id", "train_id")
   }
 
@@ -929,9 +934,7 @@ object TextDedup {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     require(passes >= 0, "passes must be non-negative (0 = auto)")
     val spark = testSets.sparkSession
-    val hsTest = testSets.leased
-    val hsTrain = trainSets.leased
-    val nDocs = hsTest.count() + hsTrain.count() // eager fill, both sides
+    val nDocs = testSets.count() + trainSets.count()
     // AUTO sizing: same rule as [[ngramJaccardPairsSalted]] over the
     // combined corpus — the candidate mass Σ df_test(tok)·df_train(tok)
     // scales with the same token-frequency profile
@@ -941,20 +944,19 @@ object TextDedup {
       else math.max(1, math.min(16,
         ((nDocs + SaltedSliceDocs - 1) / SaltedSliceDocs).toInt))
     val gcBetween = nDocs >= SaltedSliceDocs
-    val bcast =
-      hashsetBytes(hsTest) + hashsetBytes(hsTrain) <= BroadcastVerifyBytes
-    val prefix = containmentPrefix(hsTest, threshold)
-    val index = containmentIndex(hsTrain)
+    val bcast = verifyFitsBroadcast(Seq(testSets, trainSets))
+    val prefix = containmentPrefix(testSets, threshold)
+    val index = containmentIndex(trainSets)
     // r16: no dropDuplicates here — containmentCandVerify already
     // dedups candidates before verify, so at P=1 the pair stream is
     // unique by construction and the extra exchange was pure overhead
     if (nPasses == 1)
-      return containmentCandVerify(hsTest, hsTrain, prefix, index, threshold,
+      return containmentCandVerify(testSets, trainSets, prefix, index, threshold,
           broadcastVerify = bcast)
         .select(col("test_id"), col("train_id"), col("containment"))
         .orderBy("test_id", "train_id")
     (0 until nPasses).foreach { p =>
-      containmentCandVerify(hsTest, hsTrain,
+      containmentCandVerify(testSets, trainSets,
           prefix.where(pmod(col("tok"), lit(nPasses)) === p),
           index.where(pmod(col("tok"), lit(nPasses)) === p), threshold,
           broadcastVerify = bcast)

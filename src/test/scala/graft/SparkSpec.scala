@@ -22,6 +22,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     super.afterAll()
   }
 
+  /** `body`'s result and the number of jobs launched while it ran. */
+  def jobs[T](body: => T): (T, Int) = {
+    val l = Measure.listener(spark)
+    l.fence(spark)
+    val r = body
+    (r, l.fence(spark).jobs)
+  }
+
   /** Collect to a sorted Seq of plain tuples-as-strings for order-free compare. */
   def rowsOf(df: DataFrame): Seq[Seq[String]] =
     df.collect().toSeq.map(r => (0 until r.length).map(i => String.valueOf(r.get(i))))

@@ -67,14 +67,6 @@ class TablesSmokeSpec extends SparkSpec {
       s"events.ts must land as TIMESTAMP (session UTC), got $dt")
   }
 
-  /** Jobs launched while `body` runs. */
-  private def jobs[T](body: => T): (T, Int) = {
-    val l = Measure.listener(spark)
-    l.fence(spark)
-    val r = body
-    (r, l.fence(spark).jobs)
-  }
-
   private def assertParity(paths: Seq[String]): Unit = {
     assert(paths.nonEmpty)
     paths.foreach { p =>

@@ -34,8 +34,11 @@ import glob
 import os
 import subprocess
 import sys
+from pathlib import Path
 
 import duckdb
+
+ROOT = Path(__file__).resolve().parents[1]  # the checkout whose jar is gated
 
 SFDIR = (sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("--")
          else "target/sf10")
@@ -56,7 +59,7 @@ SKIP = ("dim_orders,dim_products,dim_orders_2b,fact_orders,ivf_codebook,"
         "release_survivors,events_by_day")
 
 if "--skip-spark" not in sys.argv:
-    jar = [j for j in glob.glob("/root/repo/target/scala-2.13/*.jar")
+    jar = [j for j in glob.glob(f"{ROOT}/target/scala-2.13/*.jar")
            if not j.endswith("-tests.jar")][0]
     opens = " ".join(f"--add-opens {p}=ALL-UNNAMED" for p in [
         "java.base/java.lang", "java.base/java.lang.invoke",

@@ -5,7 +5,11 @@ oracle SQL in DuckDB over the same parquet tables and value-compare.
 Usage: python3 tools/verify_local.py [sfdir] [--skip-spark] [--only q01,q02]
 """
 import json, math, subprocess, sys, os, glob
+from pathlib import Path
 import duckdb
+
+# the checkout this script sits in: it builds and verifies that tree
+ROOT = Path(__file__).resolve().parents[1]
 
 SFDIR = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("--") else "/root/testdata/sf0.01"
 # distinct dump dir per sfdir: concurrent verifies at different scales
@@ -35,23 +39,23 @@ if "--skip-spark" not in sys.argv:
     # oracle keys are missing too, so the loop never sees them)
     # exclude -tests.jar: a Test/runMain can leave one beside the library
     # jar, and picking it up breaks the classpath (no graft.Verify inside)
-    jars = [j for j in glob.glob("/root/repo/target/scala-2.13/*.jar")
+    jars = [j for j in glob.glob(f"{ROOT}/target/scala-2.13/*.jar")
             if not j.endswith("-tests.jar")]
-    srcs = (glob.glob("/root/repo/src/main/scala/**/*.scala", recursive=True)
-            + glob.glob("/root/repo/build.sbt")
-            + glob.glob("/root/repo/project/*.sbt")
-            + glob.glob("/root/repo/project/*.scala")
-            + glob.glob("/root/repo/src/main/resources/**/*", recursive=True))
+    srcs = (glob.glob(f"{ROOT}/src/main/scala/**/*.scala", recursive=True)
+            + glob.glob(f"{ROOT}/build.sbt")
+            + glob.glob(f"{ROOT}/project/*.sbt")
+            + glob.glob(f"{ROOT}/project/*.scala")
+            + glob.glob(f"{ROOT}/src/main/resources/**/*", recursive=True))
     # compare against the NEWEST jar: with several jars in target/ the
     # first glob hit is arbitrary and could be a stale leftover
     stale = (not jars) or (srcs and max(map(os.path.getmtime, srcs))
                            > max(map(os.path.getmtime, jars)))
     if stale:
-        cp = subprocess.run(["bash", "-c", "cd /root/repo && sbt -batch package"],
+        cp = subprocess.run(["sbt", "-batch", "package"], cwd=ROOT,
             capture_output=True, text=True)
         if cp.returncode != 0:
             print(cp.stdout[-3000:]); print(cp.stderr[-2000:]); sys.exit(1)
-    jar = [j for j in glob.glob("/root/repo/target/scala-2.13/*.jar")
+    jar = [j for j in glob.glob(f"{ROOT}/target/scala-2.13/*.jar")
            if not j.endswith("-tests.jar")][0]
     opens = " ".join(f"--add-opens {p}=ALL-UNNAMED" for p in [
         "java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
