@@ -68,20 +68,31 @@ object TextDedup {
     * when the corpus is at least this large. */
   val SaltedSliceDocs = 65536L
 
-  /** Hashset-table size (estimated bytes) below which the exact-join
-    * VERIFY stage attaches the shingle arrays by BROADCAST instead of
-    * shuffle_hash. Why this matters (measured, r15 sf10): the verify
-    * attach is pair-keyed, so a shuffled attach moves every surviving
-    * candidate row WITH a ~700 B hashset array through the second
-    * exchange — ~310 GB at sf10's 1.13e10 prefix-candidate mass, the
-    * stage that actually exceeded local disk (the 16 B/row candidate
-    * dedup exchange is two orders smaller). Broadcasting the (bounded,
+  /** Bound on Spark's size estimate of the hashset sides (see
+    * [[verifyFitsBroadcast]]) below which the exact-join VERIFY stage
+    * attaches the shingle arrays by BROADCAST instead of shuffle_hash.
+    * Why this matters (measured, r15 sf10): the verify attach is
+    * pair-keyed, so a shuffled attach moves every surviving candidate
+    * row WITH a ~700 B hashset array through the second exchange —
+    * ~310 GB at sf10's 1.13e10 prefix-candidate mass, the stage that
+    * actually exceeded local disk (the 16 B/row candidate dedup
+    * exchange is two orders smaller). Broadcasting the (bounded,
     * corpus-linear) hashset table instead moves it once per executor
-    * and the pair stream never re-shuffles. Above the threshold (huge
+    * and the pair stream never re-shuffles. Above the bound (huge
     * corpora where the table itself is no longer broadcastable) the
     * shuffled attach returns and the pass count is the footprint knob,
-    * as before — on a cluster that shuffle is aggregate disk. */
-  val BroadcastVerifyBytes = 1L << 30
+    * as before — on a cluster that shuffle is aggregate disk.
+    *
+    * The estimate is the parquet files' size, not the broadcast's
+    * in-memory size (Σ |hs|·8 + rows·32 B). On landed `doc_hashsets`,
+    * files over memory measure 0.96 at sf0.001 and sf0.01, 0.58 at sf0.1
+    * and 0.23 at sf10 (52,963,790 B against 227,643,688 B), near this
+    * corpus's floor: its ≤ 29,791 distinct shingles dictionary-encode in
+    * 15 bits, against 8 B per hash in memory. The bound is a 1 GiB
+    * in-memory bound scaled by the sf10 ratio: it admits ~1.1 GiB in
+    * memory on the most compressible corpus measured, and on corpora
+    * whose hashes compress less the shuffled attach returns sooner. */
+  val BroadcastVerifyBytes = 1L << 28
 
   /** Whether the verify stage may broadcast the hashset `sides`: the sum
     * of Spark's own size estimates (the optimized plan's statistics, the

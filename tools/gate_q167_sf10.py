@@ -65,7 +65,8 @@ if "--skip-spark" not in sys.argv:
         "java.base/java.util.concurrent.atomic", "java.base/sun.nio.ch",
         "java.base/sun.nio.cs", "java.base/sun.security.action",
         "java.base/sun.util.calendar"])
-    cmd = (f"java {opens} -Xmx64g -Dspark.ui.enabled=false "
+    xmx = os.environ.get("GRAFT_VERIFY_XMX", "64g")
+    cmd = (f"java {opens} -Xmx{xmx} -Dspark.ui.enabled=false "
            f"-Dspark.sql.session.timeZone=UTC -cp {jar}:/opt/spark/jars/* "
            f"graft.Verify {SFDIR} {OUT} q167_containment_salted")
     env = dict(os.environ)
