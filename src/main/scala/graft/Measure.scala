@@ -78,6 +78,18 @@ object Measure {
   private def stageMs(s: StageInfo): Long =
     s.completionTime.getOrElse(0L) - s.submissionTime.getOrElse(0L)
 
+  /** What a stage ran: the operation-scope names of its RDDs in lineage
+    * order, e.g. `Scan parquet > WholeStageCodegen (1) > Exchange` for a
+    * shuffle map or `… > BroadcastExchange` for a broadcast build. Spark
+    * names every stage an adaptive query submits after one call site
+    * (`$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java`),
+    * which tells none of them apart. A range-partitioned sort's sample
+    * job and its shuffle map both end in `Exchange`. */
+  def stageLabel(s: StageInfo): String = {
+    val scopes = s.rddInfos.sortBy(_.id).flatMap(_.scope.map(_.name)).distinct
+    if (scopes.isEmpty) s.name else scopes.mkString(" > ")
+  }
+
   /** Counts the jobs Spark starts and the stages it completes. */
   final class Listener extends SparkListener {
     private var jobs = 0
@@ -162,7 +174,7 @@ object Measure {
             s.stages.sortBy(st => -stageMs(st)).take(SlowestStages).foreach { st =>
               println(f"[stage] id=${st.stageId}%-5d wall=${stageMs(st) / 1e3}%6.3f " +
                 f"tasks=${st.numTasks}%-4d shR=${mb(st.taskMetrics.shuffleReadMetrics.totalBytesRead)}%8s MB " +
-                f"shW=${mb(st.taskMetrics.shuffleWriteMetrics.bytesWritten)}%8s MB  ${st.name.take(60)}")
+                f"shW=${mb(st.taskMetrics.shuffleWriteMetrics.bytesWritten)}%8s MB  ${stageLabel(st).take(100)}")
             }
             planDir.foreach(d => Files.writeString(Paths.get(d, s"$name.txt"),
               df.queryExecution.explainString(FormattedMode)))

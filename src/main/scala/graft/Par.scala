@@ -3,14 +3,35 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-/** Parallelism guard for compute-heavy per-row stages (signature
-  * hashing, vector math, decode): when the upstream scan yields fewer
-  * partitions than the session's default parallelism — e.g. a small
-  * single-row-group parquet file — redistribute before the expensive
-  * map. At 100 TB inputs arrive in thousands of splits and this is a
-  * no-op; on a small corpus it is the difference between using 1 core
-  * and all of them. */
+/** Partition placement for the two ends of a query.
+  *
+  * [[fanOut]] is the parallelism guard for compute-heavy per-row stages
+  * (signature hashing, vector math, decode): when the upstream scan
+  * yields fewer partitions than the session's default parallelism — e.g.
+  * a small single-row-group parquet file — redistribute before the
+  * expensive map. At 100 TB inputs arrive in thousands of splits and this
+  * is a no-op; on a small corpus it is the difference between using 1
+  * core and all of them.
+  *
+  * [[single]] is its opposite, for a query's bounded tail. */
 object Par {
+
+  /** `df` in one partition: the bounded tail of a query (a value table,
+    * per-source rows, a dimension-sized result) runs as one task after
+    * its last real shuffle. One partition satisfies every distribution
+    * an operator can require, so the windows, aggregates and final sort
+    * above it plan no exchange and no range-sample job; each of those
+    * is a job of fixed cost (~0.07 s on a 4-core host) that moves
+    * nothing a single task could not hold.
+    *
+    * Safe only on a frame bounded by construction — its row count set by
+    * a grouping key's cardinality (sources, statuses, quality values,
+    * calendar buckets), never by the corpus — that sits directly above a
+    * shuffle, so the coalesce merges that shuffle's output and nothing
+    * upstream. Never on a map-only corpus frame: the coalesce is a narrow
+    * dependency and would collapse the scan itself into one task. */
+  def single(df: DataFrame): DataFrame = df.coalesce(1)
+
   def fanOut(df: DataFrame): DataFrame = {
     // Streaming DataFrames pass through: `.rdd` is illegal before
     // writeStream.start(), micro-batches carry their source's own

@@ -731,17 +731,18 @@ object SparkEntry {
     // fingerprint aggregate is map-side combinable.
     "q161_release_manifest" -> ((s, d) => {
       val rel = graft.pipeline.Release
-      val surv = graft.Graft.lease(graft.warehouse.Warehouse.read(s, d, "release_survivors"))
-      // r16: thresholds + rates from ONE windowed decision-table pass
-      // (the r15 card fold — oracle-pinned bit-equal to the
-      // gateThresholds → mixtureRates cascade it replaces); the gate
-      // output is probed once (the released filter) so its lease goes
-      val dec = graft.Graft.lease(rel.decisionTable(surv))
-      val released = rel.releasedDocs(
-        rel.gatedBy(surv, dec.select(col("source"), col("threshold"))),
-        rel.ratesFromDecision(dec,
-          domainMixture(s, d).select(col("source"), col("mix_ppm"))))
-      released
+      val surv = graft.warehouse.Warehouse.read(s, d, "release_survivors")
+      // thresholds + rates from ONE windowed decision-table pass (the
+      // r15 card fold — oracle-pinned bit-equal to the gateThresholds →
+      // mixtureRates cascade it replaces). The rates frame carries the
+      // threshold beside the keep rate, so the gate and the sample read
+      // it through ONE broadcast: the decision chain is planned once
+      // with nothing leased (two consumers would plan it twice).
+      val rates = rel.ratesFromDecision(rel.decisionTable(surv),
+        domainMixture(s, d).select(col("source"), col("mix_ppm")))
+      val released = rel.sampled(rel.gatedBy(surv,
+        broadcast(rates.select(col("source"), col("threshold"), col("keep_ppm")))))
+      graft.Par.single(released
         .select(col("source"), col("kept_tokens"),
           graft.functions.PortableHash.h60(
             concat(col("doc_id").cast("string"), lit(":"),
@@ -749,7 +750,7 @@ object SparkEntry {
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_released"),
           sum(col("kept_tokens")).as("released_tokens"),
-          expr("bit_xor(fp)").as("content_fp60"))
+          expr("bit_xor(fp)").as("content_fp60")))
         .orderBy("source")
     }),
     // LSH band-bucket occupancy audit — the degeneracy monitor the
@@ -815,9 +816,9 @@ object SparkEntry {
             .when(col("j._corrupt").isNotNull, lit("malformed"))
             .otherwise(lit("ok")))
         .withColumn("k", when(col("err_kind") === "ok", col("j.k")))
-      parsed.groupBy(col("event_type"), col("err_kind"))
+      graft.Par.single(parsed.groupBy(col("event_type"), col("err_kind"))
         .agg(count(lit(1)).as("n_events"), count(col("k")).as("n_with_k"),
-          sum(col("k")).as("sum_k"))
+          sum(col("k")).as("sum_k")))
         .orderBy("event_type", "err_kind")
     }),
     // Two-level coarse assignment: rank √ncells super-cells (landed
@@ -929,12 +930,13 @@ object SparkEntry {
       val sizes = cl.groupBy(col("cluster_id")).agg(count(lit(1)).as("n_members"))
       val w = cl.join(sizes, Seq("cluster_id"))
         .select(col("doc_id"), expr("1000000L div n_members").as("weight_ppm"))
-      Tables.documents(s, d).select(col("doc_id"), col("source"), col("n_chars"))
-        .join(w, Seq("doc_id"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("raw_chars"),
-          sum(expr("n_chars * weight_ppm")).as("eff_chars_micro"))
+      graft.Par.single(
+        Tables.documents(s, d).select(col("doc_id"), col("source"), col("n_chars"))
+          .join(w, Seq("doc_id"))
+          .groupBy(col("source"))
+          .agg(count(lit(1)).as("n_docs"),
+            sum(col("n_chars")).as("raw_chars"),
+            sum(expr("n_chars * weight_ppm")).as("eff_chars_micro")))
         .select(col("source"), col("n_docs"), col("raw_chars"),
           expr("eff_chars_micro div 1000000").as("eff_chars"),
           expr("eff_chars_micro div raw_chars").as("retention_ppm"))
@@ -1454,22 +1456,22 @@ object SparkEntry {
       val t = Tables.documents(s, d).select(col("doc_id"), col("text"), col("lang"))
       val g = TextAnalysis.langGuess(t.select(col("doc_id"), col("text")))
         .select(col("doc_id"), col("lang_guess"))
-      t.select(col("doc_id"), col("lang")).join(g, Seq("doc_id"))
+      graft.Par.single(t.select(col("doc_id"), col("lang")).join(g, Seq("doc_id"))
         .groupBy(col("lang"), col("lang_guess"))
-        .agg(count(lit(1)).as("n_docs"))
+        .agg(count(lit(1)).as("n_docs")))
         .orderBy("lang", "lang_guess")
     }),
     // Gopher-style quality firewall report: per-source counts of
     // integer-exact repetition / word-length / symbol flags.
     "q47_quality_flags" -> ((s, d) => {
       val src = Tables.documents(s, d).select(col("doc_id"), col("source"))
-      TextAnalysis.qualityFlags(docs(s, d)).join(src, Seq("doc_id"))
+      graft.Par.single(TextAnalysis.qualityFlags(docs(s, d)).join(src, Seq("doc_id"))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("flag_repetitive")).as("n_repetitive"),
           sum(col("flag_short_words")).as("n_short_words"),
           sum(col("flag_long_words")).as("n_long_words"),
-          sum(col("flag_symbol_heavy")).as("n_symbol_heavy"))
+          sum(col("flag_symbol_heavy")).as("n_symbol_heavy")))
         .orderBy("source")
     }),
     // Capstone composition — the full training-data prep path: LSH
@@ -1500,7 +1502,7 @@ object SparkEntry {
       val keepers = graft.warehouse.Warehouse.read(s, d, "neardup_clusters")
         .where(col("doc_id") === col("cluster_id")).select(col("doc_id"))
       val chunks = graft.text.Chunking.tokenWindows(docs(s, d).join(keepers, Seq("doc_id")))
-      graft.operators.PrefixSum
+      graft.Par.single(graft.operators.PrefixSum
         .packByBudget(chunkOrderKey(chunks), "k", "n_chunk_tokens", budget = 512L)
         .groupBy(col("pack_id"))
         .agg(sum(col("n_chunk_tokens")).as("pack_tokens"),
@@ -1514,7 +1516,7 @@ object SparkEntry {
           min(col("fill_ppm")).as("min_fill_ppm"),
           max(col("fill_ppm")).as("max_fill_ppm"),
           sum(col("pack_tokens")).as("sum_tokens"),
-          sum(col("padding_tokens")).as("sum_padding"))
+          sum(col("padding_tokens")).as("sum_padding")))
         .orderBy("decile")
     }),
     // CURRICULUM packing: q45's chunk/pack with the global pack order
@@ -1640,7 +1642,7 @@ object SparkEntry {
     "q34_corpus_profile" -> ((s, d) => {
       val st = TextAnalysis.stats(docs(s, d))
       val lg = TextAnalysis.langGuess(docs(s, d)).select(col("doc_id"), col("lang_guess"))
-      st.join(lg, Seq("doc_id"))
+      graft.Par.single(st.join(lg, Seq("doc_id"))
         // integer bucket arithmetic (n - n % 25), identical in DuckDB —
         // `/` on longs would go through double
         .withColumn("token_bucket", col("n_tokens") - pmod(col("n_tokens"), lit(25L)))
@@ -1657,7 +1659,7 @@ object SparkEntry {
           min(col("quality_score")).as("min_quality"),
           max(col("quality_score")).as("max_quality"),
           sum(col("n_tokens")).as("sum_tokens"),
-          sum(col("n_pieces")).as("sum_pieces"))
+          sum(col("n_pieces")).as("sum_pieces")))
         .orderBy("lang_guess", "token_bucket")
     }),
     // Keyless binned range join: line items priced inside each brand's
@@ -1870,11 +1872,12 @@ object SparkEntry {
     // word in every downstream budget. Integer piece/word sums, one
     // double division per lang.
     "q92_bpe_fertility" -> ((s, d) =>
-      graft.text.Bpe.encode(docs(s, d), graft.warehouse.Warehouse.bpeMerges(s, d))
-        .join(Tables.documents(s, d).select(col("doc_id"), col("lang")), Seq("doc_id"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_words")).as("n_words"),
-          sum(col("n_pieces")).as("n_pieces"))
+      graft.Par.single(
+        graft.text.Bpe.encode(docs(s, d), graft.warehouse.Warehouse.bpeMerges(s, d))
+          .join(Tables.documents(s, d).select(col("doc_id"), col("lang")), Seq("doc_id"))
+          .groupBy(col("lang"))
+          .agg(count(lit(1)).as("n_docs"), sum(col("n_words")).as("n_words"),
+            sum(col("n_pieces")).as("n_pieces")))
         .withColumn("fertility",
           col("n_pieces").cast("double") / col("n_words").cast("double"))
         .orderBy("lang")),
@@ -1887,14 +1890,15 @@ object SparkEntry {
     // One encode pass, split by the canonical doc_id%10 holdout.
     "q144_tokenizer_drift" -> ((s, d) => {
       val isBatch = pmod(col("doc_id"), lit(10)) === 7
-      graft.text.Bpe.encode(docs(s, d), graft.warehouse.Warehouse.bpeMerges(s, d))
-        .join(Tables.documents(s, d).select(col("doc_id"), col("lang")), Seq("doc_id"))
-        .groupBy(col("lang"))
-        .agg(
-          coalesce(sum(when(!isBatch, col("n_words"))), lit(0L)).as("corpus_words"),
-          coalesce(sum(when(!isBatch, col("n_pieces"))), lit(0L)).as("corpus_pieces"),
-          coalesce(sum(when(isBatch, col("n_words"))), lit(0L)).as("batch_words"),
-          coalesce(sum(when(isBatch, col("n_pieces"))), lit(0L)).as("batch_pieces"))
+      graft.Par.single(
+        graft.text.Bpe.encode(docs(s, d), graft.warehouse.Warehouse.bpeMerges(s, d))
+          .join(Tables.documents(s, d).select(col("doc_id"), col("lang")), Seq("doc_id"))
+          .groupBy(col("lang"))
+          .agg(
+            coalesce(sum(when(!isBatch, col("n_words"))), lit(0L)).as("corpus_words"),
+            coalesce(sum(when(!isBatch, col("n_pieces"))), lit(0L)).as("corpus_pieces"),
+            coalesce(sum(when(isBatch, col("n_words"))), lit(0L)).as("batch_words"),
+            coalesce(sum(when(isBatch, col("n_pieces"))), lit(0L)).as("batch_pieces")))
         .select(col("lang"), col("corpus_words"), col("corpus_pieces"),
           col("batch_words"), col("batch_pieces"),
           expr("(corpus_pieces * 1000000) div greatest(1L, corpus_words)")
@@ -2089,10 +2093,10 @@ object SparkEntry {
     // schema — wrong for a 100 TB table and nondeterministic columns).
     // One hash aggregate; pivot cells are conditional counts.
     "q87_status_pivot" -> ((s, d) =>
-      Tables.orders(s, d)
+      graft.Par.single(Tables.orders(s, d)
         .select(date_format(col("o_orderdate"), "yyyy-MM").as("month"), col("o_orderstatus"))
         .groupBy(col("month")).pivot("o_orderstatus", Seq("O", "F", "P"))
-        .agg(count(lit(1)))
+        .agg(count(lit(1))))
         .na.fill(0L, Seq("O", "F", "P"))
         .select(col("month"), col("O").as("n_open"), col("F").as("n_filled"),
           col("P").as("n_partial"))
@@ -2108,12 +2112,12 @@ object SparkEntry {
       val o = Tables.orders(s, d).select(col("o_orderkey").as("l_orderkey"),
         year(col("o_orderdate")).as("yr"))
       val p = Tables.part(s, d).select(col("p_partkey").as("l_partkey"), col("p_brand"))
-      li.join(o, Seq("l_orderkey")).join(p, Seq("l_partkey"))
+      graft.Par.single(li.join(o, Seq("l_orderkey")).join(p, Seq("l_partkey"))
         .cube(col("yr"), col("p_brand"))
         .agg(grouping(col("yr")).cast("long").as("g_yr"),
           grouping(col("p_brand")).cast("long").as("g_brand"),
           count(lit(1)).as("n_items"),
-          sum(col("price")).cast("double").as("revenue"))
+          sum(col("price")).cast("double").as("revenue")))
         .select(coalesce(col("yr").cast("string"), lit("ALL")).as("yr"),
           coalesce(col("p_brand"), lit("ALL")).as("brand"),
           col("g_yr"), col("g_brand"), col("n_items"), col("revenue"))
@@ -2184,7 +2188,7 @@ object SparkEntry {
       val st = ev.groupBy(col("event_type")).agg(
         count(lit(1)).as("n"), sum(col("v")).as("s"),
         sum((col("v") * col("v")).cast("decimal(38,0)")).as("ssq"))
-      ev.join(broadcast(st), Seq("event_type"))
+      graft.Par.single(ev.join(broadcast(st), Seq("event_type"))
         .withColumn("lhs",
           expr("cast(4 * cast(n * v - s as decimal(38,0)) * cast(n * v - s as decimal(38,0)) as decimal(38,0))"))
         .withColumn("rhs",
@@ -2193,7 +2197,7 @@ object SparkEntry {
         .agg(max(col("n")).as("n_events"),
           (max(col("s")).cast("double") / max(col("n")).cast("double")
             / lit(1048576.0)).as("mean_value"),
-          sum(when(col("lhs") > col("rhs"), 1L).otherwise(0L)).as("n_outliers"))
+          sum(when(col("lhs") > col("rhs"), 1L).otherwise(0L)).as("n_outliers")))
         .orderBy("event_type")
     }),
     // Trailing 7-observed-day moving aggregates over the PRE-AGGREGATED
@@ -2278,12 +2282,12 @@ object SparkEntry {
     "q78_props_extract" -> ((s, d) => {
       val ev = Tables.events(s, d).select(col("event_type"),
         get_json_object(col("props"), "$.k").cast("long").as("k"))
-      ev.groupBy(col("event_type")).agg(
+      graft.Par.single(ev.groupBy(col("event_type")).agg(
         count(lit(1)).as("n_events"),
         count(col("k")).as("n_with_k"),
         sum(col("k")).as("sum_k"),
         min(col("k")).as("min_k"),
-        max(col("k")).as("max_k"))
+        max(col("k")).as("max_k")))
         .orderBy("event_type")
     }),
     // Incremental rollup maintenance: per-day partial states (count +
@@ -2421,7 +2425,7 @@ object SparkEntry {
       val o = Tables.orders(s, d).select(col("o_orderkey").as("l_orderkey"),
         year(col("o_orderdate")).as("yr"), quarter(col("o_orderdate")).as("qtr"))
       val p = Tables.part(s, d).select(col("p_partkey").as("l_partkey"), col("p_brand"))
-      li.join(o, Seq("l_orderkey")).join(p, Seq("l_partkey"))
+      graft.Par.single(li.join(o, Seq("l_orderkey")).join(p, Seq("l_partkey"))
         .rollup(col("yr"), col("qtr"), col("p_brand"))
         .agg(
           grouping(col("yr")).cast("long").as("g_yr"),
@@ -2434,7 +2438,7 @@ object SparkEntry {
           coalesce(col("qtr").cast("string"), lit("ALL")).as("qtr"),
           coalesce(col("p_brand"), lit("ALL")).as("brand"),
           col("g_yr"), col("g_qtr"), col("g_brand"),
-          col("n_items"), col("revenue"))
+          col("n_items"), col("revenue")))
         // g_* in the sort keys: a NULL o_orderdate/p_brand data row
         // coalesces to 'ALL' and would otherwise tie with a subtotal
         // row, leaving Spark/DuckDB free to order the tie differently

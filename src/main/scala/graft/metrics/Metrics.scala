@@ -3,7 +3,7 @@ package graft.metrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Par, Tables}
 import graft.dims.DimDates
 import graft.operators.{AsOfJoin, ForwardFill}
 import graft.warehouse.Warehouse
@@ -29,9 +29,9 @@ object Metrics {
     * (reference uses CURRENT_TIMESTAMP; injected for determinism). */
   def currentOrdersByStatus(spark: SparkSession, sfDir: String,
                             asOf: String = "2024-01-15 00:00:00"): DataFrame = {
-    AsOfJoin.currentAt(Warehouse.read(spark, sfDir, "dim_orders"), asOf)
+    Par.single(AsOfJoin.currentAt(Warehouse.read(spark, sfDir, "dim_orders"), asOf)
       .groupBy(col("status"))
-      .agg(count(lit(1)).as("order_count"))
+      .agg(count(lit(1)).as("order_count")))
       .orderBy("status")
   }
 
@@ -48,13 +48,13 @@ object Metrics {
     val li = Tables.lineitem(spark, sfDir).select(col("l_partkey"), col("l_shipdate"))
     val dim = Warehouse.read(spark, sfDir, "dim_products")
     val dates = DimDates.build(spark)
-    AsOfJoin(li, dim, "l_partkey", "id", li("l_shipdate"))
+    Par.single(AsOfJoin(li, dim, "l_partkey", "id", li("l_shipdate"))
       .join(broadcast(dates), to_date(col("l_shipdate")) === dates("datum"))
       .groupBy(
         concat(col("year").cast("string"), lit("_"), col("quarter").cast("string"))
           .as("year_quarter"),
         col("category"))
-      .agg(count(lit(1)).as("order_count"))
+      .agg(count(lit(1)).as("order_count")))
       .orderBy("year_quarter", "category")
   }
 
@@ -99,11 +99,11 @@ object Metrics {
         date_add(col("datum"), 1).cast("timestamp"))
       case other => throw new IllegalArgumentException(s"bucket: $other")
     }
-    joined.groupBy(label.as("bucket"))
+    Par.single(joined.groupBy(label.as("bucket"))
       .agg(
         count(lit(1)).as("created_count"),
         count(when(col("purchase_time").isNull || col("purchase_time") >= bucketEnd, 1))
-          .as("not_completed_count"))
+          .as("not_completed_count")))
       .orderBy("bucket")
   }
 
@@ -221,10 +221,10 @@ object Metrics {
       .where(col("o_orderdate") >= to_timestamp(lit(from)) &&
              col("o_orderdate") <  to_timestamp(lit(until)))
     val dates = DimDates.build(spark)
-    orders.join(broadcast(dates), to_date(col("o_orderdate")) === dates("datum"))
+    Par.single(orders.join(broadcast(dates), to_date(col("o_orderdate")) === dates("datum"))
       .groupBy(concat(col("year").cast("string"), lit("_"), col("quarter").cast("string"))
         .as("year_quarter"))
-      .agg(count(lit(1)).as("order_count"))
+      .agg(count(lit(1)).as("order_count")))
       .orderBy("year_quarter")
   }
 }

@@ -66,15 +66,18 @@ object Release {
 
   /** Stage 3 — source-relative top-quartile gate over the survivors. */
   def gated(surv: DataFrame): DataFrame =
-    gatedBy(surv, gateThresholds(surv))
+    gatedBy(surv, gateThresholds(surv).select(col("source"), col("threshold")))
 
   /** [[gated]] under an ALREADY-computed threshold table — the single
     * definition of the gate predicate; releaseDiff's two decision
     * layers go through here so a gate change cannot silently diverge
-    * between the card and the diff. */
+    * between the card and the diff. `thr` has one row per source with
+    * its `threshold`; its other columns ride along to the gated rows, so
+    * a rates frame that carries the threshold ([[ratesFromDecision]])
+    * gates and brings the sample's keep rate in one join (q161). */
   def gatedBy(surv: DataFrame, thr: DataFrame): DataFrame =
     surv
-      .join(thr.select(col("source"), col("threshold")), Seq("source"))
+      .join(thr, Seq("source"))
       .where(col("quality") >= col("threshold"))
 
   /** The gate's per-source thresholds (exposed for the card). */
@@ -109,7 +112,16 @@ object Release {
     *    dedup (bounded ~20 rows forever), computed BEFORE the mixture
     *    join exactly like mixtureRates' `tot`.
     * The fold is oracle-pinned: q140/q147/q128-family hash gates re-run
-    * green after the change. */
+    * green after the change.
+    *
+    * The distinct-quality table is bounded by construction (sources ×
+    * score values), so every window and the dedup run in one task after
+    * its one shuffle ([[graft.Par.single]]): no exchange by source, no
+    * single-partition exchange for `all_tokens`, and the output is one
+    * partition. That also makes the decision branch a single query stage,
+    * so it cannot race a consumer's other branches for the adaptive
+    * planner's codegen stage ids (q161: a race there renumbered the
+    * generated classes and recompiled them on a warm call). */
   private[graft] def decisionTable(surv: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val bySrc = Window.partitionBy(col("source"))
@@ -131,9 +143,9 @@ object Release {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val all = Window.partitionBy()
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    surv.select(col("source"), col("quality"), col("kept_tokens"))
+    graft.Par.single(surv.select(col("source"), col("quality"), col("kept_tokens"))
       .groupBy(col("source"), col("quality"))
-      .agg(count(lit(1)).as("__c"), sum(col("kept_tokens")).as("__t"))
+      .agg(count(lit(1)).as("__c"), sum(col("kept_tokens")).as("__t")))
       .withColumn("n_rows", sum(col("__c")).over(bySrc))
       .withColumn("__cum", sum(col("__c")).over(byQualDesc))
       .withColumn("threshold",
@@ -161,7 +173,9 @@ object Release {
     * assembly, so the card's survivor stats no longer need a second
     * dec-derived join. */
   private[graft] def ratesFromDecision(dec: DataFrame, mixture: DataFrame): DataFrame =
-    dec.join(mixture.select(col("source"), col("mix_ppm")), Seq("source"), "left")
+    // the mixture is source-cardinality: broadcast it, so the decision
+    // branch is never the build side of its own stage (see decisionTable)
+    dec.join(broadcast(mixture.select(col("source"), col("mix_ppm"))), Seq("source"), "left")
       .withColumn("share_ppm",
         when(col("mix_ppm").isNotNull,
           expr("(gated_tokens * 1000000) div greatest(1L, all_tokens)")))
@@ -183,10 +197,14 @@ object Release {
 
   /** Stage 4b — the capped per-source hash sample under the rates. */
   def releasedDocs(gatedDf: DataFrame, rates: DataFrame): DataFrame =
-    gatedDf
-      .join(broadcast(rates.select(col("source"), col("keep_ppm"))), Seq("source"))
-      .where(pmod(graft.functions.PortableHash.h60(col("doc_id").cast("string")),
-        lit(1000000L)) < col("keep_ppm"))
+    sampled(gatedDf
+      .join(broadcast(rates.select(col("source"), col("keep_ppm"))), Seq("source")))
+
+  /** The sample predicate of [[releasedDocs]], the single definition of
+    * it, over gated rows that already carry their source's `keep_ppm`. */
+  private[graft] def sampled(gatedDf: DataFrame): DataFrame =
+    gatedDf.where(pmod(graft.functions.PortableHash.h60(col("doc_id").cast("string")),
+      lit(1000000L)) < col("keep_ppm"))
 
   /** Stage 5 — chunk + pack the released clean text (empty-scrubbed
     * docs contribute no chunks). */

@@ -394,12 +394,12 @@ object Curation {
       .where(col("ta") =!= col("tb"))
       .select(when(col("ta") === 1, col("doc_a")).otherwise(col("doc_b")).as("doc_id"))
       .distinct()
-    d.join(cross.withColumn("contaminated", lit(1)), Seq("doc_id"), "left")
+    graft.Par.single(d.join(cross.withColumn("contaminated", lit(1)), Seq("doc_id"), "left")
       .groupBy(col("source"))
       .agg(
         sum(lit(1) - col("is_test")).as("n_train"),
         sum(col("is_test")).as("n_test"),
-        sum(coalesce(col("contaminated"), lit(0)) * col("is_test")).as("n_test_contaminated"))
+        sum(coalesce(col("contaminated"), lit(0)) * col("is_test")).as("n_test_contaminated")))
       .withColumn("leak_ppm",
         when(col("n_test") > 0,
           expr("(n_test_contaminated * 1000000) div n_test")).otherwise(lit(0L)))
@@ -420,54 +420,54 @@ object Curation {
     * Binning is tie-stable (the q152 rule): cumulative strictly-below
     * counts over the DISTINCT-value table of the CORPUS side — never
     * ntile, never a corpus-wide window; engine tie order cannot move a
-    * doc across bins. Bin edges (each bin's min value) collapse to ONE
-    * broadcast array row, so assigning EITHER side is a map-only
-    * 10-element array scan — a batch doc below every corpus value
-    * clamps to bin 0. Integer end to end.
+    * doc across bins. A corpus value's bin is
+    * `least(nBins - 1, below * nBins div tot)`; every value (a
+    * batch-only one too) is assigned the bin of the largest corpus
+    * value at or below it — the running max of the corpus bins in
+    * quality order — and a value below every corpus value clamps to
+    * bin 0. A batch-only value cannot take its bin from its own
+    * `below`: that count includes the corpus value just under it and
+    * can cross a bin edge that value does not. Integer end to end.
     *
-    * Scale: one distinct-value aggregate of the corpus quality table
-    * (bounded by the score's value range, ≪ corpus — the q152
-    * argument), a window over THAT table only, one 1-row broadcast of
-    * the edges, one map-side-combined (side, bin) count. The quality
-    * table itself is the materialized doc_quality artifact. */
+    * Scale: one aggregate of the quality table to the value table
+    * (quality → corpus and batch counts, bounded by the score's value
+    * range, ≪ corpus — the q152 argument) is the only shuffle. The
+    * value table is then bounded by construction, so the windows, the
+    * per-bin aggregate and the bin enumeration run in one task over it
+    * ([[graft.Par.single]]). The quality table itself is the
+    * materialized doc_quality artifact. */
   def qualityDrift(quality: DataFrame, isBatch: org.apache.spark.sql.Column,
                    nBins: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val q = quality.select(col("doc_id"), col("quality"),
-      isBatch.cast("int").as("is_b"))
-    val dist = q.where(col("is_b") === 0)
-      .groupBy(col("quality")).agg(count(lit(1)).as("c"))
-    val tot = dist.agg(sum(col("c")).as("tot"))
-    // distinct values only → RANGE ≡ ROWS peers; the window runs over
-    // the value table, never the corpus
-    val binned = dist.crossJoin(broadcast(tot))
-      .withColumn("below",
-        sum(col("c")).over(Window.orderBy("quality")) - col("c"))
-      .withColumn("bin",
-        least(lit(nBins - 1), expr(s"(below * $nBins) div tot")))
-    val edges = binned.groupBy(col("bin")).agg(min(col("quality")).as("bin_min"))
-    // occupied bins can be SPARSE (fewer distinct values than bins), so
-    // assignment takes the LARGEST occupied bin whose edge ≤ v — never
-    // the edge's ordinal (ordinal ≠ bin id once a bin is empty)
-    val edgeRow = edges
-      .agg(expr("array_sort(collect_list(struct(bin_min, bin)))").as("bin_edges"))
-    val assigned = q.crossJoin(broadcast(edgeRow))
-      .withColumn("bin", coalesce(
-        expr("try_element_at(filter(bin_edges, e -> e.bin_min <= quality), -1).bin"),
-        lit(0L)))
+    val isB = isBatch.cast("int")
+    val values = graft.Par.single(quality.groupBy(col("quality"))
+      .agg(sum(lit(1L) - isB).as("cn"), sum(isB.cast("long")).as("bn")))
+    // distinct values only → ROWS ≡ RANGE peers
+    val upTo = Window.orderBy("quality")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val bins = values
+      .withColumn("tot", sum(col("cn")).over(Window.partitionBy()))
+      .withColumn("below", sum(col("cn")).over(upTo) - col("cn"))
+      .withColumn("corpus_bin", when(col("cn") > 0,
+        least(lit(nBins - 1L), expr(s"(below * $nBins) div tot"))))
+      .withColumn("bin", coalesce(max(col("corpus_bin")).over(upTo), lit(0L)))
       .groupBy(col("bin"))
-      .agg(sum(lit(1L) - col("is_b")).as("corpus_n"),
-        sum(col("is_b").cast("long")).as("batch_n"))
-    val allBins = quality.sparkSession.range(nBins).select(col("id").as("bin"))
-    val j = allBins
-      .join(assigned, Seq("bin"), "left")
-      .join(edges, Seq("bin"), "left")
+      .agg(min(when(col("cn") > 0, col("quality"))).as("bin_min"),
+        sum(col("cn")).as("corpus_n"), sum(col("bn")).as("batch_n"))
+    // one row: the occupied bins by id and both sides' totals; the
+    // enumeration fills the empty bins without a join
+    val occupied = element_at(col("by_bin"), col("bin"))
+    bins
+      .agg(map_from_entries(collect_list(struct(col("bin"),
+          struct(col("bin_min"), col("corpus_n"), col("batch_n"))))).as("by_bin"),
+        sum(col("corpus_n")).as("ct"), sum(col("batch_n")).as("bt"))
+      .select(explode(sequence(lit(0L), lit(nBins - 1L))).as("bin"),
+        col("by_bin"), col("ct"), col("bt"))
       .select(col("bin"),
-        coalesce(col("bin_min"), lit(-1L)).as("bin_min_quality"),
-        coalesce(col("corpus_n"), lit(0L)).as("corpus_n"),
-        coalesce(col("batch_n"), lit(0L)).as("batch_n"))
-    val t2 = j.agg(sum(col("corpus_n")).as("ct"), sum(col("batch_n")).as("bt"))
-    j.crossJoin(broadcast(t2))
+        coalesce(occupied.getField("bin_min"), lit(-1L)).as("bin_min_quality"),
+        coalesce(occupied.getField("corpus_n"), lit(0L)).as("corpus_n"),
+        coalesce(occupied.getField("batch_n"), lit(0L)).as("batch_n"),
+        col("ct"), col("bt"))
       .select(col("bin"), col("bin_min_quality"), col("corpus_n"), col("batch_n"),
         expr("(corpus_n * 1000000) div greatest(1L, ct)").as("corpus_ppm"),
         expr("(batch_n * 1000000) div greatest(1L, bt)").as("batch_ppm"),

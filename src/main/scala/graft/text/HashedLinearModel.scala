@@ -118,13 +118,13 @@ object HashedLinearModel {
         (greatest(col("flag_repetitive"), col("flag_short_words"),
           col("flag_long_words"), col("flag_symbol_heavy")) === 0)
           .cast("long").as("gold_keep"))
-    binned.join(gold, Seq("doc_id"))
+    graft.Par.single(binned.join(gold, Seq("doc_id"))
       .groupBy(col("decile"))
       .agg(count(lit(1)).as("n_docs"),
         min(col("logit_milli")).as("lo_milli"),
         max(col("logit_milli")).as("hi_milli"),
         expr("(sum(keep) * 1000000) div count(1)").as("model_keep_ppm"),
-        expr("(sum(gold_keep) * 1000000) div count(1)").as("gold_keep_ppm"))
+        expr("(sum(gold_keep) * 1000000) div count(1)").as("gold_keep_ppm")))
       .orderBy("decile")
   }
 }

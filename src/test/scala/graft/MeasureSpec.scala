@@ -23,6 +23,11 @@ class MeasureSpec extends SparkSpec {
       assert(r.build + r.plan + r.exec <= r.wall, r)
       assert(r.buildJobs >= 0 && r.buildJobs <= s.jobs, r)
     }
+    // q02 broadcasts the date dimension: its stages are named by scope,
+    // not by the adaptive executor's call site
+    val labels = runs.head.sched.stages.map(Measure.stageLabel)
+    assert(labels.exists(_.endsWith("> BroadcastExchange")), labels)
+    assert(labels.forall(!_.contains("CompletableFuture")), labels)
     assert(Files.list(planDir).iterator.asScala.map(_.getFileName.toString).toSet ==
       queries.map(q => s"$q.txt").toSet)
     assert(Files.readString(planDir.resolve(s"${queries.head}.txt")).contains("Physical Plan"))

@@ -235,16 +235,20 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q157: the binning window runs over the distinct-value table, never the corpus") {
-    // every window is the cumulative over DISTINCT quality values
-    // (bounded by the score's value range); the unpersisted value-table
-    // subtree duplicates per consumer (the q128 note: edges feed the
-    // edge-array AND the output join), so accept 1..3 copies of the
-    // SAME bounded window — reject 0 (logic vanished) or >3 (a
-    // data-sized window slipped in)
+    // the only exchange is the quality aggregate's; the value table is
+    // then one partition (Par.single), so the binning windows, the
+    // per-bin aggregate and the final sort add no exchange, and the bin
+    // edges and totals travel in no broadcast. A window below the
+    // quality aggregate would run over the corpus.
     val p = plan("q157_quality_drift")
-    assert(countWindows(p) >= 1 && countWindows(p) <= 3,
-      s"q157 window count drifted (want 1..3, got ${countWindows(p)}):\n$p")
-    assert(!p.contains("SortMergeJoin"), s"q157 regained a shuffle join:\n$p")
+    val lines = p.split("\n").toSeq
+    assert(!p.contains("BroadcastExchange"), s"q157 regained a broadcast:\n$p")
+    assert("(?<!Broadcast)Exchange ".r.findAllIn(p).size == 1,
+      s"q157 plans more than the quality aggregate's exchange:\n$p")
+    val qualityAgg = lines.lastIndexWhere(_.contains("HashAggregate(keys=[quality"))
+    val windows = lines.indices.filter(i => lines(i).contains("Window ["))
+    assert(qualityAgg >= 0 && windows.nonEmpty && windows.forall(_ < qualityAgg),
+      s"q157 has a window below the quality aggregate:\n$p")
   }
 
   test("q159/q160: the epoch rank is two-level — no corpus-sized global window") {
